@@ -30,35 +30,6 @@ object Crawl {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    if (sys.env.get("GRAFT_TRACE").contains("1")) {
-      spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-        private val t0 = new java.util.concurrent.ConcurrentHashMap[Int, Long]()
-        private val run = new java.util.concurrent.atomic.AtomicLong()
-        private val cpu = new java.util.concurrent.atomic.AtomicLong()
-        private val gc = new java.util.concurrent.atomic.AtomicLong()
-        private val deser = new java.util.concurrent.atomic.AtomicLong()
-        private val shw = new java.util.concurrent.atomic.AtomicLong()
-        override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-          t0.put(j.jobId, System.nanoTime())
-        override def onJobEnd(j: org.apache.spark.scheduler.SparkListenerJobEnd): Unit = {
-          val dt = (System.nanoTime() - t0.getOrDefault(j.jobId, System.nanoTime())) / 1e9
-          if (dt > 0.2) System.err.println(f"[job] id=${j.jobId}%4d ${dt}%7.3fs")
-        }
-        override def onStageCompleted(s: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-          val m = s.stageInfo.taskMetrics
-          if (m != null) {
-            run.addAndGet(m.executorRunTime)
-            cpu.addAndGet(m.executorCpuTime / 1000000L)
-            gc.addAndGet(m.jvmGCTime)
-            deser.addAndGet(m.executorDeserializeTime)
-            shw.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-          }
-        }
-        override def onApplicationEnd(e: org.apache.spark.scheduler.SparkListenerApplicationEnd): Unit =
-          System.err.println(s"[exec] runMs=${run.get} cpuMs=${cpu.get} " +
-            s"gcMs=${gc.get} deserMs=${deser.get} shuffleWriteMB=${shw.get / 1048576}")
-      })
-    }
 
     val cfg = Synth.Config(nHosts = nHosts, urlsPerHostPerWave = perWave, nWaves = nWaves)
     val store = new SnapshotStore(storeDir)

@@ -5,7 +5,8 @@ import graft.model._
 import graft.ops.ImageKernels
 import graft.store.SnapshotStore
 import graft.synth.{Synth, SynthFunctions}
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.util.sketch.BloomFilter
 import java.io.{ByteArrayInputStream, ByteArrayOutputStream}
@@ -20,8 +21,8 @@ import java.io.{ByteArrayInputStream, ByteArrayOutputStream}
   *   → verification + robots gate applied to the DELTA (per-row rules)
   *   → merge-on-read plan view → per-host bounded top-k token ranking
   *   → fetch (mapPartitions resolver) → X4 content typing
-  *   → delta-only state commits (frontier/seen/bloom appends + bucket
-  *     replacement; host-cardinality rewrites for politeness/state)
+  *   → delta-only state commits (frontier/results/telemetry appends;
+  *     host-cardinality rewrites for politeness/state)
   *
   * Scale design (10^10-URL frontier):
   *  - The frontier is an append-only DELTA LOG partitioned by
@@ -30,10 +31,12 @@ import java.io.{ByteArrayInputStream, ByteArrayOutputStream}
   *    row of a URL is its max-seq version (merge-on-read), and the log
   *    is compacted to one row per URL every `compactEvery` waves, so
   *    read amplification is bounded and amortized.
-  *  - The URL-seen layer is (a) a bucket-keyed Bloom bank TABLE whose
-  *    membership checks and merges run bucket-co-partitioned in
-  *    executors (the driver never holds or broadcasts the bank) and
-  *    (b) a dedicated bucket-partitioned `seen` key table; the exact
+  *  - The URL-seen layer is (a) a bucket-keyed Bloom bank that lives
+  *    only in executor memory (carried wave to wave, rebuilt from the
+  *    frontier on a cold start; never stored), whose membership checks
+  *    and merges run bucket-co-partitioned in executors (the driver
+  *    never holds or broadcasts the bank), and (b) the seen KEYS, which
+  *    are the frontier log's immutable discovery rows; the exact
   *    confirm join scans only the wave's touched buckets (manifest
   *    file pruning) and joins only the Bloom-positive remainder —
   *    |dups + false positives|, not |batch|, and never a seen shuffle.
@@ -74,9 +77,10 @@ final class CrawlEngine(spark: SparkSession, cfg: Synth.Config, store: SnapshotS
     * separate table: the frontier log's immutable discovery rows ARE
     * the seen set (one row per admitted URL), and the exact-confirm
     * scan reads just their `norm_url` column (parquet column pruning)
-    * from the wave's touched buckets. */
+    * from the wave's touched buckets. The Bloom bank is not a table
+    * either: it lives only in executor memory. */
   val AllTables: Seq[String] = Seq("sources", "robots", "politeness",
-    "source_state", "frontier", "seen_bloom", "results", "telemetry",
+    "source_state", "frontier", "results", "telemetry",
     "telemetry_http", "wire_patterns", "content_patterns", "datasets",
     "dataset_sources")
 
@@ -93,7 +97,6 @@ final class CrawlEngine(spark: SparkSession, cfg: Synth.Config, store: SnapshotS
     // (sequential, their fixed per-job latency dominates startup)
     import org.apache.spark.sql.Encoders
     store.writeEmpty(Encoders.product[FrontierRow].schema, "frontier", wave = -1)
-    store.writeEmpty(Encoders.product[BloomRow].schema, "seen_bloom", wave = -1)
     store.writeEmpty(Encoders.product[FetchResult].schema, "results", wave = -1)
     store.writeEmpty(Encoders.product[TelemetryRow].schema, "telemetry", wave = -1)
     store.writeEmpty(Encoders.product[HttpTelemetryRow].schema, "telemetry_http", wave = -1)
@@ -174,19 +177,12 @@ final class CrawlEngine(spark: SparkSession, cfg: Synth.Config, store: SnapshotS
       .map(r => (r.getString(1), r.getString(2), r.getString(3)))
       .toSeq)
 
-  /** X5 Bloom bank held across waves as a cached Dataset (executor
-    * memory; the driver never holds a blob). `None` before the first
-    * wave of this engine instance — a resume in a fresh JVM rebuilds
-    * the bank lazily from the frontier's committed discovery rows. */
-  private var bloomBank: Option[Dataset[BloomRow]] = None
-
-  /** The resume path: every admitted URL has exactly one immutable
+  /** The cold-start bank: every admitted URL has exactly one immutable
     * discovery row in the frontier, so grouping those keys by bucket
     * reproduces the bank exactly (Bloom bit-arrays are insertion-order-
     * independent — byte-identical to the incrementally merged bank).
     * Lazy: no action here; the caller's cogroup evaluates it. */
   private def rebuildBankFromFrontier(): Dataset[BloomRow] = {
-    import spark.implicits._
     val cap = bloomCapacityPerBucket
     val fpp = SeenFpp
     store.read(spark, "frontier")
@@ -203,38 +199,32 @@ final class CrawlEngine(spark: SparkSession, cfg: Synth.Config, store: SnapshotS
       }
   }
 
-  /** Next wave's (tag, bucket) sets, carried out of this wave's fused
-    * state write by observation (tag 0 = due hosts, 1 = politeness-
-    * available hosts) — saves the wave-start pre-stage driver action. */
-  private var nextBucketTags: Option[Array[(Int, Int)]] = None
-
-  /** Politeness / source-state carried across waves as lazily
-    * localCheckpoint'd frames (the fused state write is the action that
-    * materializes them — no extra job): the next wave probes executor
-    * memory instead of re-reading the parquet snapshot this wave just
-    * wrote. The store copy remains the durable truth — written every
-    * wave exactly as before — and a resume in a fresh JVM starts from
-    * `store.read`, which holds the same rows by construction (the same
-    * pattern as the Bloom bank above). */
-  private var politenessCarry: Option[DataFrame] = None
-  private var stateCarry: Option[DataFrame] = None
-
-  private val trace = sys.env.get("GRAFT_TRACE").contains("1")
-  private def timed[T](label: String, wave: Int)(f: => T): T = {
-    if (!trace) f
-    else {
-      val t0 = System.nanoTime()
-      val r = f
-      System.err.println(f"[trace] wave=$wave $label%-24s ${(System.nanoTime() - t0) / 1e9}%8.3fs")
-      r
-    }
-  }
-
   // ---------------------------------------------------------------- waves
 
-  def runWave(wave: Int): WaveMetrics = {
-    val nb = cfg.nBuckets
-    val cfgB = spark.sparkContext.broadcast(cfg)
+  /** One wave as a composition of named stages. `carry` is what the
+    * previous wave left in executor memory ([[WaveCarry.cold]] for the
+    * first wave of a run); the returned carry feeds the next wave. */
+  def runWave(wave: Int, carry: WaveCarry): (WaveMetrics, WaveCarry) = {
+    val in = waveIn(wave, carry)
+    val (due, availHosts) = dueSources(in)
+    val (candidates, discObs) = discover(in, due)
+    val (checked, newLinks) = screen(in, candidates, carry.dueBuckets)
+    val (gatedDelta, discovered) = verify(in, newLinks)
+    val plannedWide = plan(in, discovered, availHosts, carry.availBuckets)
+    val fetched = fetch(in, plannedWide)
+    val (metrics, next) =
+      persistWave(in, carry, due, gatedDelta, discovered, plannedWide, fetched, discObs)
+    due.unpersist(); checked.unpersist(); availHosts.unpersist()
+    // checkpointed frames hold RDD blocks, not CacheManager entries —
+    // Dataset.unpersist() would be a no-op on them; free the blocks,
+    // including the previous carry's frames the next one replaced (safe
+    // only now: every consumer of them has run)
+    (Seq(gatedDelta, plannedWide, fetched._1) ++ carry.replacedBy(next))
+      .foreach(CrawlEngine.freeCheckpoint)
+    (metrics, next)
+  }
+
+  private def waveIn(wave: Int, carry: WaveCarry): WaveIn = {
     // wave-varying values enter the PLAN as a one-row parameter table,
     // never as literals: literals bake into whole-stage-codegen source,
     // so per-wave constants would force a Janino recompile of every
@@ -247,33 +237,35 @@ final class CrawlEngine(spark: SparkSession, cfg: Synth.Config, store: SnapshotS
     // warm-up world and the measured world (32 vs 64), so the warm-up
     // primed the wrong generated code and run 1's first wave re-paid
     // Janino for every bucket-keyed stage.
-    val params = broadcast(Seq((wave, 2L * wave, cfg.seed + wave, nb.toLong))
+    val params = broadcast(Seq((wave, 2L * wave, cfg.seed + wave, cfg.nBuckets.toLong))
       .toDF("cur_wave", "cur_seq", "mix_seed", "n_buckets"))
-    val politeness = politenessCarry
-      .map(_.as[PolitenessState])
-      .getOrElse(store.read(spark, "politeness").as[PolitenessState])
+    WaveIn(wave, spark.sparkContext.broadcast(cfg), params,
+      store.read(spark, "sources").as[Source], store.read(spark, "robots"),
+      carry.politeness.getOrElse(store.read(spark, "politeness").as[PolitenessState]),
+      carry.state.getOrElse(store.read(spark, "source_state").as[SourceState]),
+      carry.bank.getOrElse(rebuildBankFromFrontier()))
+  }
+
+  /** Stage 1 — due sources (F11 + F12 gates, join-based — no driver
+    * map) and the politeness-available hosts with their tokens. The A5
+    * method order is decided here from the per-source effectiveness
+    * telemetry carried in source_state. */
+  private def dueSources(in: WaveIn): (Dataset[DueSource], DataFrame) = {
+    val wave = in.wave
     // dataset scoping (J1 engine-side): a scoped run semi-joins the seed
     // registry against the N:M dataset_sources rows of the scope label
     // (broadcast — the scope table is dataset×source cardinality).
     // Only the DUE scan is scoped; state rewrites keep every source's
     // row (allSources), so out-of-scope state is preserved untouched.
-    val allSources = store.read(spark, "sources").as[Source]
     val sources = (Option(cfg.datasetScope) match {
-      case None => allSources.toDF()
+      case None => in.allSources.toDF()
       case Some(scope) =>
-        allSources.toDF().join(
+        in.allSources.toDF().join(
           broadcast(store.read(spark, "dataset_sources")
             .filter(col("dataset_id") === scope).select("source_id")),
           Seq("source_id"), "left_semi")
     }).as[Source]
-    val state = stateCarry
-      .map(_.as[SourceState])
-      .getOrElse(store.read(spark, "source_state").as[SourceState])
-    val robots = store.read(spark, "robots")
-
-    // ---- 1. due sources (F11 + F12 gates, join-based — no driver map);
-    // the A5 method order is decided here from the per-source
-    // effectiveness telemetry carried in source_state
+    val state = in.state
     val due = sources
       .joinWith(state, sources("source_id") === state("source_id"), "inner")
       .filter((t: (Source, SourceState)) =>
@@ -286,46 +278,26 @@ final class CrawlEngine(spark: SparkSession, cfg: Synth.Config, store: SnapshotS
           SourceRules.effectiveMethods(st),
           st.discovered_sections)
       }.cache()
-
-    // The wave needs two bucket sets: the due hosts' buckets (seen/
-    // bloom scan pruning) and the politeness-available hosts' buckets
-    // (plan backlog scan pruning). In steady state BOTH arrive for free
-    // on the PREVIOUS wave's fused state write (collect_set observations
-    // riding the politeness/source_state legs, evaluated by the same
-    // Scala kernels — `nextBucketTags` below), so no wave-start driver
-    // action runs at all. The pre-stage job remains only as the
-    // fallback for wave 0 / resume / scoped runs (a scoped due scan is
-    // a subset of the observed all-sources one; the tiny gate worlds
-    // don't need the saved job).
     val waveSec = cfg.waveSeconds
-    val availHosts = politeness
+    val availHosts = in.politeness
       .filter(st => Politeness.available(st, wave, waveSec))
       .map(st => (st.host, st.tokens_per_wave))
       .toDF("p_host", "tokens")
-      .cache() // scanned twice: bucket agg + ranking join
-    val bucketTags: Array[(Int, Int)] = nextBucketTags match {
-      case Some(tags) =>
-        nextBucketTags = None
-        tags
-      case None => timed("pre_stage", wave) {
-        due
-          .map(d => (0, gf.hostBucketJvm(d.host_norm, nb)))
-          .toDF("t", "b")
-          .unionByName(availHosts.select(lit(1).as("t"),
-            pmod(xxhash64(col("p_host")), lit(nb.toLong)).cast("int").as("b")))
-          .distinct().as[(Int, Int)].collect()
-      }
-    }
-    val touched: Seq[Int] =
-      bucketTags.collect { case (0, b) => b }.toSeq.sorted
+      .cache() // one reader (the ranking join); the job-budget test pins this job shape
+    (due, availHosts)
+  }
 
-    // ---- 2. discovery: per-source method cascade (S5/S6/S13 + U1 +
-    // A5) ---- methods run in the effectiveness-gated attempt order
-    // carried on DueSource; a healthy RSS yield ≥ max/2 short-circuits
-    // methods not yet attempted (source_processing.py:624-677); the
-    // supplemental section crawl runs for every source with discovered
-    // sections. The cascade itself is the SHARED SourceRules.cascade
-    // kernel (engine flatMap + dueFacts + oracle — one definition).
+  /** Stage 2 — discovery: per-source method cascade (S5/S6/S13 + U1 +
+    * A5) and the F-chain. Methods run in the effectiveness-gated attempt
+    * order carried on DueSource; a healthy RSS yield ≥ max/2 short-
+    * circuits methods not yet attempted (source_processing.py:624-677);
+    * the supplemental section crawl runs for every source with
+    * discovered sections. The cascade itself is the SHARED
+    * SourceRules.cascade kernel (engine flatMap + dueFacts + oracle — one
+    * definition). */
+  private def discover(in: WaveIn, due: Dataset[DueSource]): (Dataset[CandRow], Observation) = {
+    val wave = in.wave
+    val cfgB = in.cfgB
     // lineage strings (M5) are NOT built here: the expansion carries
     // (method_rank, attempt, slot, section) ints and the discovered_by
     // label is assembled by a codegen concat only for rows that survive
@@ -341,7 +313,7 @@ final class CrawlEngine(spark: SparkSession, cfg: Synth.Config, store: SnapshotS
 
     // F-chain with a single outcome tag; metrics ride the first action
     // via observe() — no separate counting job (A7)
-    val discObs = org.apache.spark.sql.Observation()
+    val discObs = Observation()
     val normalized = raw
       .withColumn("norm_url", gf.normalize_url(col("url")))
       .withColumn("host", gf.canonical_host(col("url")))
@@ -363,30 +335,33 @@ final class CrawlEngine(spark: SparkSession, cfg: Synth.Config, store: SnapshotS
       .filter(col("outcome") === "ok")
       .select(col("norm_url"), col("method_rank"), col("attempt"), col("url"),
         col("source_id"), col("host"), col("pub_day"), col("slot"), col("section"))
-      .crossJoin(params)
+      .crossJoin(in.params)
       .withColumn("host_bucket",
         pmod(xxhash64(col("host")), col("n_buckets")).cast("int"))
       .drop("cur_wave", "cur_seq", "mix_seed", "n_buckets")
       .as[CandRow]
+    (candidates, discObs)
+  }
 
-    // ---- 3. W2/U1 + J6/X5 in ONE bucket shuffle: norm_url → host →
-    // bucket is functional, so the batch dedup (keep the min
-    // (attempt, url) occurrence — this wave's A5 attempt order) can run
-    // inside the bucket cogroup that also evaluates the Bloom screen.
+  /** Stage 3 — W2/U1 + J6/X5 in ONE bucket shuffle: norm_url → host →
+    * bucket is functional, so the batch dedup (keep the min (attempt,
+    * url) occurrence — this wave's A5 attempt order) can run inside the
+    * bucket cogroup that also evaluates the Bloom screen; then the exact
+    * confirm of the Bloom positives. Returns the cached cogroup output
+    * (freed by the caller) and the new links. */
+  private def screen(in: WaveIn, candidates: Dataset[CandRow],
+                     touched: Seq[Int]): (Dataset[(CandRow, Boolean)], DataFrame) = {
     // The Bloom bank stays a bucket-keyed table evaluated executor-side;
     // the driver never holds it.
-    // X5 bank: held as a cached Dataset across waves (executor memory —
-    // the driver never sees a blob); the STORE persists it on the final
-    // wave only. A per-wave parquet write would buy nothing: the
-    // frontier's committed discovery rows are the authoritative seen
-    // keys, so crash recovery rebuilds the bank from them lazily (Bloom
-    // bit-arrays are insertion-order-independent, so a rebuilt bank is
-    // byte-identical to the incrementally merged one). Cuts one
-    // bucket-fanout file write + one store read per wave from the
-    // parallelism-resistant tail.
+    // X5 bank: held as a checkpointed Dataset across waves (executor
+    // memory — the driver never sees a blob); the store never persists
+    // it. A per-wave parquet write would buy nothing: the frontier's
+    // committed discovery rows are the authoritative seen keys, so a
+    // cold start rebuilds the bank from them lazily (Bloom bit-arrays
+    // are insertion-order-independent, so a rebuilt bank is byte-
+    // identical to the incrementally merged one).
     val touchedSet = touched.toSet
-    val bankAll = bloomBank.getOrElse(rebuildBankFromFrontier())
-    val blooms = { val ts = touchedSet; bankAll.filter(r => ts.contains(r.bucket)) }
+    val blooms = { val ts = touchedSet; in.bank.filter(r => ts.contains(r.bucket)) }
     // F7 invariant the bucket pruning DEPENDS on: every candidate's host
     // equals a due source's host, so its bucket is in `touched`. If a
     // scope rule ever admitted a cross-host link, an untouched bucket's
@@ -427,10 +402,14 @@ final class CrawlEngine(spark: SparkSession, cfg: Synth.Config, store: SnapshotS
     val seenScan = store.readBuckets(spark, "frontier", touched).select("norm_url")
     val hits = seenScan.join(maybeSeen.select("norm_url"), Seq("norm_url"), "left_semi")
     val confirmedNew = maybeSeen.join(hits, Seq("norm_url"), "left_anti")
-    val newLinks = definitelyNew.unionByName(confirmedNew)
+    (checked, definitelyNew.unionByName(confirmedNew))
+  }
 
-    // ---- 4. verification (F5/F6/F9) + robots gate — pure per-row rules
-    // applied to the DELTA only (old rows never re-verified).
+  /** Stage 4 — verification (F5/F6/F9) + robots gate: pure per-row
+    * rules applied to the DELTA only (old rows never re-verified).
+    * Returns the checkpointed gated delta and its frontier discovery
+    * rows. */
+  private def verify(in: WaveIn, newLinks: DataFrame): (DataFrame, DataFrame) = {
     // F9 wire patterns come from the wire_patterns TABLE (DB-driven rows
     // like the reference, url_verification.py:372-393): collapsed to a
     // one-row array and broadcast-crossed in — an any-match HOF, the
@@ -445,7 +424,7 @@ final class CrawlEngine(spark: SparkSession, cfg: Synth.Config, store: SnapshotS
     // non-terminal `verification_uncertain` (statuses at :542-559).
     // The fault is a pure hash of the URL; the opt-in is a broadcast
     // column off the seed registry.
-    val precheckFlag = broadcast(allSources.toDF()
+    val precheckFlag = broadcast(in.allSources.toDF()
       .select(col("source_id"), col("http_precheck")))
     val verified = newLinks
       .join(precheckFlag, Seq("source_id"), "left")
@@ -465,7 +444,7 @@ final class CrawlEngine(spark: SparkSession, cfg: Synth.Config, store: SnapshotS
     // robots: broadcast join + longest-match over the pre-sorted rule
     // array (RFC 9309; equal-length ties favor allow — sorted at build)
     val gatedDelta = verified
-      .join(broadcast(robots.select(col("host").as("r_host"), col("rules"))),
+      .join(broadcast(in.robots.select(col("host").as("r_host"), col("rules"))),
         col("host") === col("r_host"), "left")
       .withColumn("u_path", pathOf(col("norm_url")))
       .withColumn("allowed", coalesce(
@@ -494,7 +473,6 @@ final class CrawlEngine(spark: SparkSession, cfg: Synth.Config, store: SnapshotS
       // broadcast/dim hint (LogicalRDD has no static stats).
       .localCheckpoint(true)
 
-    val dedupObs = org.apache.spark.sql.Observation()
     // M5 lineage label, assembled post-dedup (same format as the oracle)
     val waveTag = concat(lit("/w"), col("cur_wave").cast("string"), lit("#"))
     val discoveredBy =
@@ -504,7 +482,7 @@ final class CrawlEngine(spark: SparkSession, cfg: Synth.Config, store: SnapshotS
           waveTag, col("slot").cast("string"), lit("]")))
         .otherwise(concat(lit("section_crawl["), col("host"), lit("/"),
           col("section"), waveTag, col("slot").cast("string"), lit("]")))
-    val discovered = gatedDelta.crossJoin(params).select(
+    val discovered = gatedDelta.crossJoin(in.params).select(
       col("url"), col("norm_url"), col("host"), col("host_bucket"),
       col("source_id"), col("status"),
       // O6: priority varies by discovering method (Synth.priorityOf)
@@ -514,50 +492,62 @@ final class CrawlEngine(spark: SparkSession, cfg: Synth.Config, store: SnapshotS
       col("pub_day").as("publish_day"), lit("").as("content_hash"),
       lit("").as("error_message"),
       col("cur_seq").as("seq"), lit(false).as("is_update"))
+    (gatedDelta, discovered)
+  }
 
-    // ---- 5. plan: fold the (small) update log over the immutable
-    // discovery rows, F10 TTL re-admission, politeness tokens, bounded
-    // top-k. The backlog side (discovery rows) is NEVER shuffled for
-    // the merge: a URL's discovery row is immutable, only its latest
-    // update (≤ planned rows per wave, reset by compaction) can
-    // supersede it, and that update set is merged on its own (tiny) and
-    // joined in — broadcast under AQE at working scales, plain join
-    // fallback beyond. not_article/wire/robots_blocked rows are never
-    // updated and never eligible, so they skip the plan path entirely.
-    // The scan is PRUNED to the buckets of politeness-available hosts
-    // (manifest file pruning, like the seen/bloom scans): only hosts
-    // with tokens this wave can be planned, so no other bucket's
-    // backlog is read, and nothing is cached — the only materialized
-    // plan product is the (≤ tokens·hosts)-row planned set below.
-    // (host, tokens) STAYS a DataFrame: the ranking join takes it under
-    // AQE (broadcast at working scales, shuffle join beyond — a
-    // 10^8-host politeness table must never materialize on the driver).
-    // Only the BUCKET set reaches the driver (collected in the fused
-    // pre-stage job above): distinct host_bucket ints, ≤ nBuckets
-    // values regardless of host count.
-    val availBuckets: Seq[Int] =
-      bucketTags.collect { case (1, b) => b }.toSeq.sorted
+  /** Stage 5 — plan: fold the (small) update log over the immutable
+    * discovery rows, F10 TTL re-admission, politeness tokens, bounded
+    * top-k. Returns the planned rows with ALL frontier columns (+ rank).
+    *
+    * The backlog side (discovery rows) is NEVER shuffled for the merge:
+    * a URL's discovery row is immutable, only its latest update
+    * (≤ planned rows per wave, reset by compaction) can supersede it,
+    * and that update set is merged on its own (tiny) and joined in —
+    * broadcast under AQE at working scales, plain join fallback beyond.
+    * not_article/wire/robots_blocked rows are never updated and never
+    * eligible, so they skip the plan path entirely. The scan is PRUNED
+    * to the buckets of politeness-available hosts (manifest file
+    * pruning, like the seen/bloom scans): only hosts with tokens this
+    * wave can be planned, so no other bucket's backlog is read, and
+    * nothing is cached — the only materialized plan product is the
+    * (≤ tokens·hosts)-row planned set. (host, tokens) STAYS a DataFrame:
+    * the ranking join takes it under AQE (broadcast at working scales,
+    * shuffle join beyond — a 10^8-host politeness table must never
+    * materialize on the driver). Only the BUCKET set reaches the driver
+    * (observed on the previous wave's state write, see [[WaveCarry]]):
+    * distinct host_bucket ints, ≤ nBuckets values regardless of host
+    * count. */
+  private def plan(in: WaveIn, discovered: DataFrame, availHosts: DataFrame,
+                   availBuckets: Seq[Int]): DataFrame = {
     val log = store.readBuckets(spark, "frontier", availBuckets)
     val dRows = log
       .filter(!col("is_update") && col("status").isin("article", "404"))
       .unionByName(discovered.filter(col("status") === "article"))
     val eligible = foldLog(dRows, log.filter(col("is_update")))
-      .crossJoin(params)
+      .crossJoin(in.params)
       .filter(col("status") === "article" ||
         (col("status") === "404" &&
           col("cur_wave") - col("processed_wave") >= lit(cfg.deadUrlTtlWaves)))
       .drop("cur_wave", "cur_seq")
-
     // planned rows keep ALL frontier columns (+ rank): the fetch maps a
     // narrow projection and the outcome updates join back against this
     // same small cached set — the backlog is scanned exactly once per
     // wave and never cached.
     // lazy localCheckpoint (lineage rationale as gatedDelta; lazy is
     // safe HERE because this plan carries no observation node — see
-    // dedupObs placement below): the frontier update leg re-reads
-    // plannedWide after the fetch — the checkpoint keeps the rank/merge
-    // subtree out of that plan's analysis
-    val plannedWide = rankPerHost(eligible, availHosts).localCheckpoint(false)
+    // dedupObs placement in frontierDeltaOf): the frontier update leg
+    // re-reads plannedWide after the fetch — the checkpoint keeps the
+    // rank/merge subtree out of that plan's analysis
+    rankPerHost(eligible, availHosts).localCheckpoint(false)
+  }
+
+  /** Stage 6 — fetch (X2 cascade executor; X4 content typing). Returns
+    * the checkpointed results, the observed frame the results write
+    * streams, and its observation. */
+  private def fetch(in: WaveIn, plannedWide: DataFrame)
+      : (Dataset[FetchResult], DataFrame, Observation) = {
+    val wave = in.wave
+    val cfgB = in.cfgB
     val planned = plannedWide
       .select(col("norm_url"), col("host"), col("host_bucket"),
         col("source_id"), col("rank"))
@@ -571,8 +561,6 @@ final class CrawlEngine(spark: SparkSession, cfg: Synth.Config, store: SnapshotS
       // sort) and bucket-co-located like every other fetch-side shape.
       .repartition(spark.sparkContext.defaultParallelism, col("host_bucket"))
       .as[Planned]
-
-    // ---- 6. fetch (X2 cascade executor; X4 content typing) ----
     // the X4 detector's pattern TABLE rides into the fetch closure as a
     // broadcast (content-tier classification over the fetched caption —
     // the type comes from the payload, not from any id)
@@ -581,15 +569,146 @@ final class CrawlEngine(spark: SparkSession, cfg: Synth.Config, store: SnapshotS
       CrawlEngine.resolve(cfgB.value, cpB.value, p.norm_url, p.host, p.host_bucket,
         p.source_id, wave, p.rank)
     }.localCheckpoint(false) // lineage leaf for the 4 post-fetch legs
-    val resultsObs = org.apache.spark.sql.Observation()
+    val resultsObs = Observation()
     val resultsToWrite = results.toDF().observe(resultsObs,
       count(lit(1)).as("planned"),
       count(when(col("http_status") === 200, 1)).as("fetched"))
+    (results, resultsToWrite, resultsObs)
+  }
 
-    // ---- 7. delta state rewrites + commit ----
-    // frontier update rows: planned rows folded with fetch outcomes
-    // (§1.4 transitions); everything else in the frontier is untouched
-    // and stays by manifest reference.
+  /** Stage 7 — delta state rewrites + commit: results, frontier, Bloom
+    * merge and the fused state write, then the wave commit and cadence
+    * compaction. Returns the wave's metrics and the next wave's carry. */
+  private def persistWave(in: WaveIn, carry: WaveCarry, due: Dataset[DueSource],
+                          gatedDelta: DataFrame, discovered: DataFrame, plannedWide: DataFrame,
+                          fetched: (Dataset[FetchResult], DataFrame, Observation),
+                          discObs: Observation): (WaveMetrics, WaveCarry) = {
+    val wave = in.wave
+    val nb = cfg.nBuckets
+    val (results, resultsToWrite, resultsObs) = fetched
+    val (frontierDelta, dedupObs) = frontierDeltaOf(discovered, plannedWide, results)
+    val politenessNext = nextPoliteness(in, results)
+    val (stateNextCk, perSource) = nextState(in, due, gatedDelta)
+    val stateObs = Observation()
+    val stateToWrite = stateNextCk.crossJoin(in.params).observe(stateObs,
+      count(when(array_contains(col("rss_failure_waves"), col("cur_wave")), 1))
+        .as("rss_failures"),
+      count(when(col("paused_auto"), 1)).as("paused_sources"),
+      collect_set(when(col("__due_b") >= 0, col("__due_b"))).as("due_buckets"))
+      .drop("cur_wave", "cur_seq", "mix_seed", "n_buckets", "__due_b")
+    val (telemetry, telemObs, httpTelemetry) = telemetryOf(in, perSource, results)
+
+    // the results write runs FIRST and alone: it materializes the whole
+    // discovery→plan→fetch chain (and its caches), so every observation
+    // completes in one action. The remaining writes only read caches and
+    // run as concurrent Spark jobs.
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.ExecutionContext.Implicits.global
+    import scala.concurrent.duration.Duration
+    // overlap: the source-state rewrite depends only on the gate chain
+    // (already checkpointed) and the due facts — NOT on the fetch — so
+    // its materialization can back-fill idle cores while the rank/fetch/
+    // results action runs, instead of serializing inside the fused state
+    // write (r6 event log: the two lazy state-leg materializations were
+    // ~0.5 + 0.4 s on the fused write's critical path). Concurrent
+    // materialization with the fused write's own scan is safe: local-
+    // checkpoint block writes are idempotent and RDDCheckpointData is
+    // synchronized; the worst case recomputes a host-cardinality leg.
+    val fStateWarm = Future(
+      stateNextCk.foreachPartition((_: Iterator[org.apache.spark.sql.Row]) => ()))
+    store.appendDelta(resultsToWrite, "results", wave, lineage = s"wave $wave delta")
+    // bucketed writes hash the bucket key into ~2×cores partitions, NOT
+    // one partition per bucket: physicalWrite's partitionBy still emits
+    // exactly one file per bucket (a bucket hashes to one task), so the
+    // per-bucket manifest and pruning are unchanged, while task-launch
+    // and scheduling overhead stay proportional to the CLUSTER, not the
+    // bucket count (at 10^4 buckets a per-bucket task would put ~10^4
+    // task launches per write on the driver's critical path).
+    val writeParts = math.min(nb, spark.sparkContext.defaultParallelism * 2)
+    val fFrontier = Future(store.appendDelta(
+      frontierDelta.repartition(writeParts, col("host_bucket")),
+      "frontier", wave, bucketCol = Some("host_bucket"),
+      lineage = s"wave $wave delta (discovered + outcomes)"))
+    // the bank is a derived structure that lives only in executor
+    // memory (a cold start rebuilds it from the frontier's committed
+    // discovery rows, byte-identically — see rebuildBankFromFrontier),
+    // so there is no merged bank to maintain after the FINAL wave: skip
+    // the merge cogroup entirely (~1.5 s inside the timed crawl in the
+    // r6 trace, for a bank nothing would read).
+    val finalWave = wave + 1 == cfg.nWaves
+    val fBloom =
+      if (finalWave) Future.successful(carry.bank)
+      else Future(Some(mergeBank(in.bank, discovered, carry.dueBuckets)))
+    // the four host-or-less-cardinality state tables commit in ONE
+    // fused Spark job (one tagged union, one parquet pass, per-table
+    // manifest registration) — per-wave driver cost is one job launch
+    // instead of four, the parallelism-resistant serial tail the
+    // north-rule scaling bar is sensitive to. All four legs read only
+    // this wave's caches (results/perSource/due) plus the tiny
+    // politeness/state snapshots.
+    import graft.store.SnapshotStore.FusedPart
+    // lazy localCheckpoint, same deal as stateNextCk: materialized by
+    // the fused write, reused as next wave's politeness (the carry)
+    val politenessNextCk = politenessNext.localCheckpoint(false)
+    // warm the politeness rewrite concurrently with the frontier/bloom
+    // futures (it needs the fetch results, so it can only start now);
+    // same idempotent-materialization rationale as fStateWarm above
+    val fPolWarm = Future(
+      politenessNextCk.foreachPartition((_: Iterator[org.apache.spark.sql.Row]) => ()))
+    val polObs = Observation()
+    val fStateTables = Future(store.writeFused(Seq(
+      FusedPart("politeness", politenessNextCk
+        .observe(polObs, collect_set(when(col("__avail_b") >= 0,
+          col("__avail_b"))).as("avail_buckets"))
+        .drop("__avail_b").coalesce(hostFiles),
+        append = false, lineage = s"wave $wave politeness"),
+      FusedPart("source_state", stateToWrite.coalesce(hostFiles),
+        append = false, lineage = s"wave $wave discovery state"),
+      FusedPart("telemetry", telemetry.coalesce(hostFiles),
+        append = true, lineage = s"wave $wave method telemetry"),
+      FusedPart("telemetry_http", httpTelemetry.coalesce(hostFiles),
+        append = true, lineage = s"wave $wave http outcomes")), wave))
+    Seq(fFrontier, fBloom, fStateTables, fStateWarm, fPolWarm)
+      .foreach(Await.result(_, Duration.Inf))
+
+    // the fused write materialized both checkpoints: they become next
+    // wave's state reads, and the next wave's bucket sets ride out of
+    // its observations (see WaveCarry)
+    def buckets(obs: Observation, key: String): Seq[Int] =
+      obs.get(key).asInstanceOf[scala.collection.Seq[Int]].toSeq.sorted
+    val next = WaveCarry(Await.result(fBloom, Duration.Inf),
+      Some(politenessNextCk.drop("__avail_b").as[PolitenessState]),
+      Some(stateNextCk.drop("__due_b").as[SourceState]),
+      dueBuckets = buckets(stateObs, "due_buckets"),
+      availBuckets = buckets(polObs, "avail_buckets"))
+    val metrics = commit(wave, discObs, dedupObs, resultsObs, stateObs, telemObs)
+
+    // amortized maintenance: compact the delta log back to one row per
+    // URL so merge-on-read input stays bounded (Iceberg-style MoR
+    // compaction). Runs after the commit (a crash before the next
+    // commit rolls it back harmlessly) on the cadence only — NOT after
+    // the final wave: an end-of-run rewrite would sit inside the
+    // crawl's timed critical path. A store opened for REPEATED reads
+    // compacts once via [[CrawlEngine.compactForRead]] instead, so the
+    // read side never pays a full-log scan per query.
+    if (cfg.compactEvery > 0 && (wave + 1) % cfg.compactEvery == 0 && !finalWave) {
+      // compacted rows become snapshot rows (is_update=false): the
+      // plan pre-filter then excludes terminal rows from the merge
+      store.writeBucketed(
+        CrawlEngine.frontierCurrent(spark, store)
+          .withColumn("is_update", lit(false))
+          .repartition(writeParts, col("host_bucket")),
+        "frontier", wave, "host_bucket", lineage = s"compaction after wave $wave")
+    }
+    perSource.unpersist()
+    (metrics, next)
+  }
+
+  /** This wave's frontier delta: its discovery rows plus the planned
+    * rows folded with their fetch outcomes (§1.4 transitions); everything
+    * else in the frontier is untouched and stays by manifest reference. */
+  private def frontierDeltaOf(discovered: DataFrame, plannedWide: DataFrame,
+                              results: Dataset[FetchResult]): (DataFrame, Observation) = {
     val out = results.toDF().select(col("norm_url").as("r_url"),
       col("status").as("r_status"), col("http_status").as("r_http"),
       col("wave").as("r_wave"))
@@ -611,31 +730,40 @@ final class CrawlEngine(spark: SparkSession, cfg: Synth.Config, store: SnapshotS
     // guaranteed to stream every discovered row): attaching it on
     // `discovered` itself would put the metrics node inside
     // plannedWide's lazy checkpoint plan, which posts an empty-metrics
-    // query-success event at definition time (see gatedDelta above)
+    // query-success event at definition time (see gatedDelta in verify)
+    val dedupObs = Observation()
     val frontierDelta = discovered
       .observe(dedupObs,
         count(lit(1)).as("n"),
         count(when(col("status") === "robots_blocked", 1)).as("robots_blocked"))
       .unionByName(updates.select(FrontierCols.map(col): _*))
+    (frontierDelta, dedupObs)
+  }
 
-    // Host/source-DIMENSION frames in the state legs broadcast while
-    // the dim is broadcast-sized (≤ ~1M hosts ≈ tens of MB): each such
-    // join collapses from an exchange+sort pair into a map-side hash
-    // probe, taking the fused state write from ~20 scheduled stages to
-    // a handful — at host cardinality the stages are all scheduling
-    // latency, the parallelism-resistant serial tail the north-rule
-    // scaling bar is sensitive to. Past that size the hint is skipped
-    // and Catalyst plans the same equi-joins as shuffles (the 100-TB
-    // path: ten-million-host dims shuffle; AQE picks strategies from
-    // runtime stats on real, skewed corpora).
-    def dim(df: DataFrame): DataFrame =
-      if (cfg.nHosts <= 1000000) broadcast(df) else df
+  // Host/source-DIMENSION frames in the state legs broadcast while
+  // the dim is broadcast-sized (≤ ~1M hosts ≈ tens of MB): each such
+  // join collapses from an exchange+sort pair into a map-side hash
+  // probe, taking the fused state write from ~20 scheduled stages to
+  // a handful — at host cardinality the stages are all scheduling
+  // latency, the parallelism-resistant serial tail the north-rule
+  // scaling bar is sensitive to. Past that size the hint is skipped
+  // and Catalyst plans the same equi-joins as shuffles (the 100-TB
+  // path: ten-million-host dims shuffle; AQE picks strategies from
+  // runtime stats on real, skewed corpora).
+  private def dim(df: DataFrame): DataFrame =
+    if (cfg.nHosts <= 1000000) broadcast(df) else df
 
-    // politeness: per-host outcome aggregation → pure kernel update,
-    // crawl delay joined from the robots table (no driver map). A
-    // relational groupBy, NOT a typed mapGroups: column pruning keeps
-    // the image payload bytes out of the exchange and the partial
-    // aggregation ships one row per (partition, host)
+  /** Politeness: per-host outcome aggregation → pure kernel update,
+    * crawl delay joined from the robots table (no driver map). A
+    * relational groupBy, NOT a typed mapGroups: column pruning keeps
+    * the image payload bytes out of the exchange and the partial
+    * aggregation ships one row per (partition, host). Each row carries
+    * the host's next-wave plan-scan bucket (`__avail_b`, -1 when not
+    * available). */
+  private def nextPoliteness(in: WaveIn, results: Dataset[FetchResult]): DataFrame = {
+    val wave = in.wave
+    val nb = cfg.nBuckets
+    val waveSec = cfg.waveSeconds
     val outcomes = results.toDF()
       .groupBy(col("host").as("o_host")).agg(
         count(when(col("status").isin(OkStatuses: _*), 1)).as("ok"),
@@ -644,9 +772,9 @@ final class CrawlEngine(spark: SparkSession, cfg: Synth.Config, store: SnapshotS
         count(when(col("status") === "429", 1)).as("rl"),
         count(when(col("status") === "timeout", 1)).as("to"),
         count(when(col("status") === "captcha", 1)).as("cp"))
-    val politenessNext = politeness.toDF()
+    in.politeness.toDF()
       .join(dim(outcomes), col("host") === col("o_host"), "left").drop("o_host")
-      .join(dim(robots.select(col("host").as("d_host"), col("crawl_delay_s"))),
+      .join(dim(in.robots.select(col("host").as("d_host"), col("crawl_delay_s"))),
         col("host") === col("d_host"), "left").drop("d_host")
       .as[PolJoin]
       .map { j =>
@@ -662,7 +790,7 @@ final class CrawlEngine(spark: SparkSession, cfg: Synth.Config, store: SnapshotS
               j.to.getOrElse(0L).toInt, j.cp.getOrElse(0L).toInt),
             wave, waveSec, j.crawl_delay_s.getOrElse(0.0))
         // next wave's plan-scan bucket, decided by the SAME kernel the
-        // wave-start fallback uses — rides out on an observation
+        // wave's availability filter uses — rides out on an observation
         val availB =
           if (Politeness.available(next, wave + 1, waveSec))
             gf.hostBucketJvm(next.host, nb)
@@ -670,13 +798,22 @@ final class CrawlEngine(spark: SparkSession, cfg: Synth.Config, store: SnapshotS
         (next, availB)
       }
       .select(col("_1.*"), col("_2").as("__avail_b"))
+  }
 
-    // source_state: set-based S11 rewrite — ledger (F13), pause counter
-    // (F12/C8), sections (M4), method telemetry; all per-source facts
-    // join-assembled, transition via the shared pure kernel
+  /** Source state: set-based S11 rewrite — ledger (F13), pause counter
+    * (F12/C8), sections (M4), method telemetry; all per-source facts
+    * join-assembled, transition via the shared pure kernel. Each row
+    * carries the source's next-wave seen-scan bucket (`__due_b`, -1
+    * when not due). Returns the lazily checkpointed rewrite and the
+    * cached per-source facts (freed by the caller). */
+  private def nextState(in: WaveIn, due: Dataset[DueSource],
+                        gatedDelta: DataFrame): (DataFrame, DataFrame) = {
+    val wave = in.wave
+    val nb = cfg.nBuckets
+    val cfgB = in.cfgB
     val dueFacts = due.map { d =>
       // facts-only evaluation: no second URL expansion (the links
-      // flatMap above is the only place cascade materializes URLs)
+      // flatMap in discover is the only place cascade materializes URLs)
       val f = SourceRules.cascadeFacts(cfgB.value)(d.host_idx, wave, d.methods,
         d.rss_skip, d.sections)
       DueFacts(d.source_id, f.ranRss, f.rssFailed, f.ranHomepage,
@@ -693,8 +830,8 @@ final class CrawlEngine(spark: SparkSession, cfg: Synth.Config, store: SnapshotS
     val perSource = dueFacts
       .join(dim(newByMethod), Seq("source_id"), "left")
       .cache()
-    val stateNext = state.toDF()
-      .join(dim(allSources.toDF().select(col("source_id"), col("frequency"),
+    val stateNext = in.state.toDF()
+      .join(dim(in.allSources.toDF().select(col("source_id"), col("frequency"),
         col("status"))), Seq("source_id"))
       .join(dim(perSource), Seq("source_id"), "left")
       .as[StateJoin]
@@ -719,7 +856,7 @@ final class CrawlEngine(spark: SparkSession, cfg: Synth.Config, store: SnapshotS
               wave)
         }
         // next wave's seen-scan bucket, decided by the SAME due kernel
-        // the wave-start fallback uses — rides out on the observation
+        // the wave's due scan uses — rides out on the observation
         val dueB =
           if (SourceRules.due(out, j.status, j.frequency, wave + 1))
             gf.hostBucketJvm(out.host, nb)
@@ -727,20 +864,19 @@ final class CrawlEngine(spark: SparkSession, cfg: Synth.Config, store: SnapshotS
         (out, dueB)
       }
       .select(col("_1.*"), col("_2").as("__due_b"))
-    // lazy localCheckpoint: the fused state write below is the action
-    // that materializes it, and the blocks double as next wave's
-    // source_state (stateCarry) — lineage truncated, no extra job
-    val stateNextCk = stateNext.localCheckpoint(false)
-    val stateObs = org.apache.spark.sql.Observation()
-    val stateToWrite = stateNextCk.crossJoin(params).observe(stateObs,
-      count(when(array_contains(col("rss_failure_waves"), col("cur_wave")), 1))
-        .as("rss_failures"),
-      count(when(col("paused_auto"), 1)).as("paused_sources"),
-      collect_set(when(col("__due_b") >= 0, col("__due_b"))).as("due_buckets"))
-      .drop("cur_wave", "cur_seq", "mix_seed", "n_buckets", "__due_b")
+    // lazy localCheckpoint: the fused state write is the action that
+    // materializes it, and the blocks double as next wave's
+    // source_state (the carry) — lineage truncated, no extra job
+    (stateNext.localCheckpoint(false), perSource)
+  }
 
-    // per-(source, method) telemetry (A5 surface, telemetry.py:1777-1910)
-    val telemObs = org.apache.spark.sql.Observation()
+  /** Per-(source, method) telemetry (A5 surface,
+    * telemetry.py:1777-1910) with its observation, and per-(host,
+    * http_status) outcome telemetry (telemetry_orm.py:33-277). */
+  private def telemetryOf(in: WaveIn, perSource: DataFrame, results: Dataset[FetchResult])
+      : (DataFrame, Observation, DataFrame) = {
+    val wave = in.wave
+    val telemObs = Observation()
     val telemetry = perSource.as[PerSource].flatMap { o =>
       Seq(
         TelemetryRow(wave, o.source_id, "rss", o.rss_attempted,
@@ -752,241 +888,97 @@ final class CrawlEngine(spark: SparkSession, cfg: Synth.Config, store: SnapshotS
     }.toDF().observe(telemObs,
       sum(when(col("method") === "section_crawl", col("links_yielded"))
         .otherwise(lit(0L))).as("section_links"))
-
-    // the results write runs FIRST and alone: it materializes the whole
-    // discovery→plan→fetch chain (and its caches), so every observation
-    // completes in one action. The remaining writes only read caches and
-    // run as concurrent Spark jobs.
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.ExecutionContext.Implicits.global
-    import scala.concurrent.duration.Duration
-    // overlap: the source-state rewrite depends only on the gate chain
-    // (already checkpointed) and the due facts — NOT on the fetch — so
-    // its materialization can back-fill idle cores while the rank/fetch/
-    // results action runs, instead of serializing inside the fused state
-    // write (r6 event log: the two lazy state-leg materializations were
-    // ~0.5 + 0.4 s on the fused write's critical path). Concurrent
-    // materialization with the fused write's own scan is safe: local-
-    // checkpoint block writes are idempotent and RDDCheckpointData is
-    // synchronized; the worst case recomputes a host-cardinality leg.
-    val fStateWarm = Future(
-      stateNextCk.foreachPartition((_: Iterator[org.apache.spark.sql.Row]) => ()))
-    timed("write_results", wave) {
-      store.appendDelta(resultsToWrite, "results", wave, lineage = s"wave $wave delta")
-    }
-    // bucketed writes hash the bucket key into ~2×cores partitions, NOT
-    // one partition per bucket: physicalWrite's partitionBy still emits
-    // exactly one file per bucket (a bucket hashes to one task), so the
-    // per-bucket manifest and pruning are unchanged, while task-launch
-    // and scheduling overhead stay proportional to the CLUSTER, not the
-    // bucket count (at 10^4 buckets a per-bucket task would put ~10^4
-    // task launches per write on the driver's critical path).
-    val writeParts = math.min(nb, spark.sparkContext.defaultParallelism * 2)
-    val fFrontier = Future(timed("write_frontier", wave) {
-      store.appendDelta(
-        frontierDelta.repartition(writeParts, col("host_bucket")),
-        "frontier", wave, bucketCol = Some("host_bucket"),
-        lineage = s"wave $wave delta (discovered + outcomes)")
-    })
-    // the bank is a derived structure: nothing ever READS the seen_bloom
-    // table (a resume rebuilds the bank from the frontier's committed
-    // discovery rows, byte-identically — see bankAll above), so there is
-    // no merged bank to maintain after the FINAL wave: skip the merge
-    // cogroup and the store persist entirely. The final-wave merge +
-    // replaceBuckets write was ~1.5 s inside the timed crawl for a table
-    // with zero consumers (r6 trace); the seen_bloom table stays
-    // registered (writeEmpty at init) so commit pins are unchanged.
-    val fBloom = if (wave + 1 == cfg.nWaves) Future.successful(())
-    else Future(timed("bloom_merge", wave) {
-      // bucket-co-partitioned merge in executors; touched buckets fold
-      // this wave's keys, untouched rows carry over from the cached bank
-      val cap = bloomCapacityPerBucket
-      val fpp = SeenFpp
-      val newKeys = discovered.select(col("host_bucket"), col("norm_url"))
-        .as[(Int, String)]
-      val mergedTouched = newKeys.groupByKey(_._1)
-        .cogroup(blooms.groupByKey(_.bucket)) { (b, ks, olds) =>
-          val oldRow = olds.nextOption()
-          val bf = oldRow match {
-            case Some(r) => BloomFilter.readFrom(new ByteArrayInputStream(r.bloom))
-            case None => BloomFilter.create(cap, fpp)
-          }
-          var n = 0
-          ks.foreach { k => bf.putString(k._2); n += 1 }
-          if (n == 0) oldRow.iterator // no new keys — bloom unchanged
-          else {
-            val bos = new ByteArrayOutputStream()
-            bf.writeTo(bos)
-            Iterator.single(BloomRow(b, bos.toByteArray))
-          }
-        }
-      val ts = touchedSet
-      // localCheckpoint (eager): materializes the bank in executor
-      // storage AND truncates lineage — the bank feeds itself every
-      // wave (cogroup + union), so an ordinary persist would double the
-      // logical plan per wave (analysis/explain blow up exponentially)
-      val nextBank = mergedTouched
-        .union(bankAll.filter(r => !ts.contains(r.bucket)))
-        .localCheckpoint(true)
-      bloomBank.foreach(CrawlEngine.freeCheckpoint) // eager ckpt above already copied the blocks
-      bloomBank = Some(nextBank)
-    })
-    // per-(host, http_status) outcome telemetry (telemetry_orm.py:33-277):
     // a second projection of the already-cached results — column
     // pruning keeps the payload bytes out of this exchange too
     val httpTelemetry = results.toDF().groupBy(col("host"), col("http_status"))
       .agg(count(lit(1)).as("n"))
-      .crossJoin(params) // wave as a parameter column, not a literal
+      .crossJoin(in.params) // wave as a parameter column, not a literal
       .select(col("cur_wave").as("wave"), col("host"), col("http_status"), col("n"))
-    // the four host-or-less-cardinality state tables commit in ONE
-    // fused Spark job (one tagged union, one parquet pass, per-table
-    // manifest registration) — per-wave driver cost is one job launch
-    // instead of four, the parallelism-resistant serial tail the
-    // north-rule scaling bar is sensitive to. All four legs read only
-    // this wave's caches (results/perSource/due) plus the tiny
-    // politeness/state snapshots.
-    import graft.store.SnapshotStore.FusedPart
-    // lazy localCheckpoint, same deal as stateNextCk: materialized by
-    // the fused write, reused as next wave's politeness (politenessCarry)
-    val politenessNextCk = politenessNext.localCheckpoint(false)
-    // warm the politeness rewrite concurrently with the frontier/bloom
-    // futures (it needs the fetch results, so it can only start now);
-    // same idempotent-materialization rationale as fStateWarm above
-    val fPolWarm = Future(
-      politenessNextCk.foreachPartition((_: Iterator[org.apache.spark.sql.Row]) => ()))
-    val polObs = org.apache.spark.sql.Observation()
-    val fStateTables = Future(timed("write_state_fused", wave) {
-      store.writeFused(Seq(
-        FusedPart("politeness", politenessNextCk
-          .observe(polObs, collect_set(when(col("__avail_b") >= 0,
-            col("__avail_b"))).as("avail_buckets"))
-          .drop("__avail_b").coalesce(hostFiles),
-          append = false, lineage = s"wave $wave politeness"),
-        FusedPart("source_state", stateToWrite.coalesce(hostFiles),
-          append = false, lineage = s"wave $wave discovery state"),
-        FusedPart("telemetry", telemetry.coalesce(hostFiles),
-          append = true, lineage = s"wave $wave method telemetry"),
-        FusedPart("telemetry_http", httpTelemetry.coalesce(hostFiles),
-          append = true, lineage = s"wave $wave http outcomes")), wave)
-    })
-    Seq(fFrontier, fBloom, fStateTables, fStateWarm, fPolWarm)
-      .foreach(Await.result(_, Duration.Inf))
+    (telemetry, telemObs, httpTelemetry)
+  }
 
-    // the fused write materialized both checkpoints; swap them in as
-    // next wave's state reads and free the previous wave's blocks
-    // (safe only now: every consumer of the old frames has run)
-    politenessCarry.foreach(CrawlEngine.freeCheckpoint)
-    stateCarry.foreach(CrawlEngine.freeCheckpoint)
-    politenessCarry = Some(politenessNextCk.drop("__avail_b"))
-    stateCarry = Some(stateNextCk.drop("__due_b"))
-
-    // carry the NEXT wave's bucket sets out of the fused write's
-    // observations (same kernels as the wave-start fallback). For a
-    // SCOPED run the state/politeness legs see every source, so the
-    // observed due-bucket set is a SUPERSET of the scope's true due
-    // buckets — and both consumers of the tags are pure scan PRUNERS
-    // (seen/bloom bucket pruning + the plan-backlog bucket pruning),
-    // for which a superset is correct (it only prunes less): the actual
-    // due scan stays scope-restricted via the seed-registry semi-join.
-    // Carrying for scoped runs too removes the per-wave pre_stage
-    // driver action (~0.4-0.5 s/wave in the r6 trace).
-    if (wave + 1 < cfg.nWaves) {
-      def ints(v: Any): Seq[Int] = v match {
-        case s: scala.collection.Seq[_] => s.map(x => x.asInstanceOf[Number].intValue).toSeq
-        case a: Array[_] => a.toSeq.map(x => x.asInstanceOf[Number].intValue)
-        case other => sys.error(s"unexpected observation value: $other")
+  /** The next bank: a bucket-co-partitioned merge in executors; touched
+    * buckets fold this wave's keys, untouched rows carry over from the
+    * current bank. */
+  private def mergeBank(bank: Dataset[BloomRow], discovered: DataFrame,
+                        touched: Seq[Int]): Dataset[BloomRow] = {
+    val cap = bloomCapacityPerBucket
+    val fpp = SeenFpp
+    val ts = touched.toSet
+    val blooms = bank.filter(r => ts.contains(r.bucket))
+    val newKeys = discovered.select(col("host_bucket"), col("norm_url"))
+      .as[(Int, String)]
+    val mergedTouched = newKeys.groupByKey(_._1)
+      .cogroup(blooms.groupByKey(_.bucket)) { (b, ks, olds) =>
+        val oldRow = olds.nextOption()
+        if (!ks.hasNext) oldRow.iterator // no new keys — bloom unchanged
+        else {
+          val bf = oldRow match {
+            case Some(r) => BloomFilter.readFrom(new ByteArrayInputStream(r.bloom))
+            case None => BloomFilter.create(cap, fpp)
+          }
+          ks.foreach(k => bf.putString(k._2))
+          val bos = new ByteArrayOutputStream()
+          bf.writeTo(bos)
+          Iterator.single(BloomRow(b, bos.toByteArray))
+        }
       }
-      nextBucketTags = Some(
-        (ints(stateObs.get("due_buckets")).map((0, _)) ++
-          ints(polObs.get("avail_buckets")).map((1, _))).distinct.toArray)
-    }
+    // localCheckpoint (eager): materializes the bank in executor
+    // storage AND truncates lineage — the bank feeds itself every
+    // wave (cogroup + union), so an ordinary persist would double the
+    // logical plan per wave (analysis/explain blow up exponentially)
+    mergedTouched
+      .union(bank.filter(r => !ts.contains(r.bucket)))
+      .localCheckpoint(true)
+  }
 
-    // all counters come from observations riding the write actions
-    val discMetrics = discObs.get
-    val nOk = discMetrics("ok").asInstanceOf[Long]
-    val nDiscovered = dedupObs.get("n").asInstanceOf[Long]
-    val nPlanned = resultsObs.get("planned").asInstanceOf[Long]
-    val nFetched = resultsObs.get("fetched").asInstanceOf[Long]
+  /** Assemble the wave's counters — all from observations riding the
+    * write actions — and commit the wave. */
+  private def commit(wave: Int, discObs: Observation, dedupObs: Observation,
+                     resultsObs: Observation, stateObs: Observation,
+                     telemObs: Observation): WaveMetrics = {
+    def n(obs: Observation, key: String): Long = obs.get(key).asInstanceOf[Long]
+    val nDiscovered = n(dedupObs, "n")
+    val nPlanned = n(resultsObs, "planned")
+    val nFetched = n(resultsObs, "fetched")
     val metrics = WaveMetrics(wave,
       discovered = nDiscovered,
-      duplicates = math.max(0, nOk - nDiscovered),
-      out_of_scope = discMetrics("out_of_scope").asInstanceOf[Long],
-      filtered = discMetrics("filtered").asInstanceOf[Long],
-      expired = discMetrics("expired").asInstanceOf[Long],
+      duplicates = math.max(0, n(discObs, "ok") - nDiscovered),
+      out_of_scope = n(discObs, "out_of_scope"),
+      filtered = n(discObs, "filtered"),
+      expired = n(discObs, "expired"),
       planned = nPlanned,
       fetched = nFetched,
       failed = nPlanned - nFetched,
-      robots_blocked = dedupObs.get("robots_blocked").asInstanceOf[Long],
-      rss_failures = stateObs.get("rss_failures").asInstanceOf[Long],
-      section_links = telemObs.get("section_links").asInstanceOf[Long],
-      paused_sources = stateObs.get("paused_sources").asInstanceOf[Long])
-    timed("commit", wave)(store.commitWave(wave,
+      robots_blocked = n(dedupObs, "robots_blocked"),
+      rss_failures = n(stateObs, "rss_failures"),
+      section_links = n(telemObs, "section_links"),
+      paused_sources = n(stateObs, "paused_sources"))
+    store.commitWave(wave,
       AllTables.map(t => t -> store.currentSnapshot(t).getOrElse(-1)).toMap,
-      Map(
-        "discovered" -> metrics.discovered, "duplicates" -> metrics.duplicates,
-        "out_of_scope" -> metrics.out_of_scope, "filtered" -> metrics.filtered,
-        "expired" -> metrics.expired, "planned" -> metrics.planned,
-        "fetched" -> metrics.fetched, "failed" -> metrics.failed,
-        "robots_blocked" -> metrics.robots_blocked,
-        "rss_failures" -> metrics.rss_failures,
-        "section_links" -> metrics.section_links,
-        "paused_sources" -> metrics.paused_sources)))
-
-    // amortized maintenance: compact the delta log back to one row per
-    // URL so merge-on-read input stays bounded (Iceberg-style MoR
-    // compaction). Runs after the commit (a crash before the next
-    // commit rolls it back harmlessly) on the cadence only — NOT after
-    // the final wave: an end-of-run rewrite would sit inside the
-    // crawl's timed critical path. A store opened for REPEATED reads
-    // compacts once via [[CrawlEngine.compactForRead]] instead, so the
-    // read side never pays a full-log scan per query.
-    if (cfg.compactEvery > 0 && (wave + 1) % cfg.compactEvery == 0 &&
-      wave + 1 < cfg.nWaves) {
-      timed("compact_frontier", wave) {
-        // compacted rows become snapshot rows (is_update=false): the
-        // plan pre-filter then excludes terminal rows from the merge
-        store.writeBucketed(
-          CrawlEngine.frontierCurrent(spark, store)
-            .withColumn("is_update", lit(false))
-            .repartition(writeParts, col("host_bucket")),
-          "frontier", wave, "host_bucket", lineage = s"compaction after wave $wave")
-      }
-    }
-
-    due.unpersist(); checked.unpersist(); perSource.unpersist()
-    availHosts.unpersist()
-    // checkpointed frames hold RDD blocks, not CacheManager entries —
-    // Dataset.unpersist() would be a no-op on them; free the blocks
-    CrawlEngine.freeCheckpoint(gatedDelta)
-    CrawlEngine.freeCheckpoint(plannedWide)
-    CrawlEngine.freeCheckpoint(results)
+      // every counter field by name (the wave number keys the record)
+      metrics.productElementNames.zip(metrics.productIterator)
+        .collect { case (k, v: Long) => k -> v }.toMap)
     metrics
   }
 
   /** Run (or resume) the crawl to `nWaves`. Crash recovery first rolls
     * every table back to the last committed wave's pins (a crash
-    * mid-wave leaves some tables ahead of the commit), then continues. */
+    * mid-wave leaves some tables ahead of the commit), then continues
+    * from [[WaveCarry.cold]], folding each wave's carry into the next;
+    * the last carry is freed, so a run leaves no blocks behind. */
   def run(): Seq[WaveMetrics] = {
-    // a re-run on the same instance after a rollback must not consume
-    // carries from the abandoned attempt — drop them; wave 1 of the new
-    // run falls back to store.read / the frontier rebuild
-    bloomBank = None; nextBucketTags = None
-    politenessCarry = None; stateCarry = None
-    timed("init", -1)(init())
-    timed("recover", -1)(store.recoverToLastCommit(AllTables))
+    init()
+    store.recoverToLastCommit(AllTables)
     val start = store.lastCommittedWave() + 1
-    // wave 0 on a fresh store needs no pre-stage driver collect: every
-    // active source is due (last_wave = -1) and every host politeness-
-    // available (initial state), so the all-buckets set is a known
-    // SUPERSET of both tag sets — and both consumers are scan pruners,
-    // for which a superset is correct (it only prunes less; the frontier
-    // is empty at wave 0 anyway). Saves a 0.5-1.6 s driver action per
-    // engine run (r6 event log: `collect at CrawlEngine.scala:311`).
-    // A crash-resume (start > 0) keeps the exact fallback collect.
-    if (start == 0)
-      nextBucketTags = Some(
-        (0 until cfg.nBuckets).flatMap(b => Seq((0, b), (1, b))).toArray)
-    (start until cfg.nWaves).map(runWave)
+    val (metrics, last) = (start until cfg.nWaves)
+      .foldLeft((Vector.empty[WaveMetrics], WaveCarry.cold(cfg.nBuckets))) {
+        case ((ms, carry), wave) =>
+          val (m, next) = runWave(wave, carry)
+          (ms :+ m, next)
+      }
+    last.frames.foreach(CrawlEngine.freeCheckpoint)
+    metrics
   }
 
   // ------------------------------------------------------------- helpers
@@ -996,6 +988,47 @@ final class CrawlEngine(spark: SparkSession, cfg: Synth.Config, store: SnapshotS
 }
 
 object CrawlEngine {
+
+  /** What one wave hands the next. The Bloom bank and the politeness /
+    * source-state rewrites stay in executor memory as checkpointed
+    * frames (the fused state write is the action that materializes the
+    * latter — no extra job), so the next wave probes executor memory
+    * instead of re-reading what this wave just wrote; the store copy
+    * remains the durable truth, written every wave, and `None` means
+    * "read the store". The two bucket sets prune the next wave's scans:
+    * `dueBuckets` (due hosts: seen/Bloom scans) and `availBuckets`
+    * (politeness-available hosts: plan backlog scan). Both ride out of
+    * the fused state write as collect_set observations, decided by the
+    * same Scala kernels as the due scan and the politeness gate, so no
+    * wave-start driver action runs. */
+  final case class WaveCarry(bank: Option[Dataset[BloomRow]],
+                             politeness: Option[Dataset[PolitenessState]],
+                             state: Option[Dataset[SourceState]],
+                             dueBuckets: Seq[Int], availBuckets: Seq[Int]) {
+    /** The checkpointed frames this carry pins in executor storage. */
+    def frames: Seq[Dataset[_]] = bank.toSeq ++ politeness ++ state
+
+    /** This carry's frames that `next` no longer holds. */
+    def replacedBy(next: WaveCarry): Seq[Dataset[_]] =
+      frames.filterNot(f => next.frames.exists(_ eq f))
+  }
+
+  object WaveCarry {
+    /** The first wave of every run, fresh or resumed: nothing in
+      * executor memory, and every bucket in both sets. Both bucket sets
+      * only PRUNE scans, so a superset is always correct — it prunes
+      * less and never changes a row. On a fresh store it is exact anyway
+      * (every active source is due at last_wave = -1, every host is
+      * available in its initial state, and the frontier is empty); on a
+      * resume the bank rebuild scans the whole frontier regardless. The
+      * observed sets of a SCOPED run are supersets in the same way: the
+      * state legs see every source, while the due scan itself stays
+      * scope-restricted by the registry semi-join. */
+    def cold(nBuckets: Int): WaveCarry = {
+      val all = 0 until nBuckets
+      WaveCarry(None, None, None, all, all)
+    }
+  }
 
   /** Free the storage blocks behind a localCheckpoint'd frame.
     * `Dataset.unpersist()` only clears CacheManager entries; a local
@@ -1008,6 +1041,15 @@ object CrawlEngine {
       case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd.unpersist(false)
       case _ => ()
     }
+
+  /** The read side of one wave, shared by its stages: the broadcast
+    * config, the one-row parameter table, and the input tables —
+    * politeness, source state and the Bloom bank come from the carry, or
+    * from the store on a cold start. */
+  private final case class WaveIn(wave: Int, cfgB: Broadcast[Synth.Config], params: DataFrame,
+                                  allSources: Dataset[Source], robots: DataFrame,
+                                  politeness: Dataset[PolitenessState],
+                                  state: Dataset[SourceState], bank: Dataset[BloomRow])
 
   /** Robots rule row: rules pre-sorted (longest prefix first, allow
     * winning equal-length ties) so longest-match = first array hit. */
@@ -1083,7 +1125,6 @@ object CrawlEngine {
     * stage's generated code is wave-invariant. PlanSpec asserts the
     * WindowGroupLimit shape. */
   def rankPerHost(eligible: DataFrame, availHosts: DataFrame): DataFrame = {
-    import org.apache.spark.sql.functions._
     eligible
       // no broadcast hint: AQE picks broadcast at working scales and a
       // shuffle join when the host table outgrows the driver (10^8
@@ -1104,7 +1145,6 @@ object CrawlEngine {
     * rows planned since the last compaction) — never to the full log,
     * whose bytes would all shuffle through the aggregation buffer. */
   def mergeLog(logDf: DataFrame): DataFrame = {
-    import org.apache.spark.sql.functions._
     logDf.groupBy("norm_url")
       .agg(max(struct((Seq("seq") ++ FrontierCols.filterNot(_ == "seq")).map(col): _*)).as("r"))
       .select(FrontierCols.map(c => col(s"r.$c")): _*)
@@ -1116,7 +1156,6 @@ object CrawlEngine {
     * fields. The big side is scanned, never shuffled; the update side
     * is broadcast under AQE at working scales. */
   def foldLog(dRows: DataFrame, updates: DataFrame): DataFrame = {
-    import org.apache.spark.sql.functions._
     val u = mergeLog(updates).select(
       col("norm_url").as("u_url"), col("status").as("u_status"),
       col("http_status").as("u_http"), col("processed_wave").as("u_processed"),
@@ -1138,7 +1177,6 @@ object CrawlEngine {
     * update fold, instead of re-merging the raw log per query. Runs
     * OUTSIDE the crawl's timed critical path by design. */
   def compactForRead(spark: SparkSession, store: SnapshotStore, nBuckets: Int): Unit = {
-    import org.apache.spark.sql.functions._
     val hasUpdates = store.read(spark, "frontier")
       .filter(col("is_update")).limit(1).count() > 0
     if (!hasUpdates) return // already one row per URL
@@ -1156,7 +1194,6 @@ object CrawlEngine {
     * view: is_update is a log-encoding artifact, normalized to false
     * (the same form compaction writes). */
   def frontierCurrent(spark: SparkSession, store: SnapshotStore): DataFrame = {
-    import org.apache.spark.sql.functions._
     val log = store.read(spark, "frontier")
     foldLog(log.filter(!col("is_update")), log.filter(col("is_update")))
       .withColumn("is_update", lit(false))
@@ -1170,25 +1207,17 @@ object CrawlEngine {
 
   /** Fetch-hot-path SHA-256 hex: one digest per executor thread (the
     * per-row `MessageDigest.getInstance` provider lookup allocates) and
-    * table-driven hex (a `"%02x".format` per byte allocates a
-    * java.util.Formatter each — 32 per row, GC-visible at 10^5 rows/s).
-    * Output is byte-identical to the oracle's independent `%02x` form. */
+    * the JDK's table-driven lowercase hex (a `"%02x".format` per byte
+    * allocates a java.util.Formatter each — 32 per row, GC-visible at
+    * 10^5 rows/s). Output is byte-identical to the oracle's independent
+    * `%02x` form. */
   private val sha256Local: ThreadLocal[java.security.MessageDigest] =
     ThreadLocal.withInitial(() => java.security.MessageDigest.getInstance("SHA-256"))
-  private val HexChars = "0123456789abcdef".toCharArray
+  private val Hex = java.util.HexFormat.of()
   private[graft] def sha256Hex(bytes: Array[Byte]): String = {
     val d = sha256Local.get()
     d.reset()
-    val h = d.digest(bytes)
-    val out = new Array[Char](h.length * 2)
-    var i = 0
-    while (i < h.length) {
-      val b = h(i) & 0xff
-      out(2 * i) = HexChars(b >>> 4)
-      out(2 * i + 1) = HexChars(b & 0xf)
-      i += 1
-    }
-    new String(out)
+    Hex.formatHex(d.digest(bytes))
   }
 
   /** Deterministic fetch resolver — the synthetic server. Computes the

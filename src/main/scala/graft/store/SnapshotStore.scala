@@ -20,11 +20,10 @@ import scala.util.Using
   *
   * Delta commits: [[appendDelta]] writes only the wave's new rows and
   * the new manifest references the previous snapshot's files for
-  * untouched buckets — per-wave I/O is O(delta), not O(table).
-  * [[replaceBuckets]] swaps only touched buckets (bloom bank, per-bucket
-  * compaction). Reads assemble the current file list and read with the
-  * pinned schema + `recursiveFileLookup` (partition-dir inference off),
-  * so [[readBuckets]] prunes to exactly the requested buckets' files —
+  * untouched buckets — per-wave I/O is O(delta), not O(table). Reads
+  * assemble the current file list and read with the pinned schema +
+  * `recursiveFileLookup` (partition-dir inference off), so
+  * [[readBuckets]] prunes to exactly the requested buckets' files —
   * the assertable analogue of Iceberg partition pruning. Atomic rename
   * after temp-write is the same commit protocol the reference uses for
   * artifacts (src/pipeline/io_utils.py:72-185); at cluster scale the
@@ -40,20 +39,6 @@ object SnapshotStore {
 
 final class SnapshotStore(val root: String) {
   import SnapshotStore.FusedPart
-
-  // same switch as CrawlEngine's phase tracer: sub-phase attribution of
-  // the fused state write (driver planning vs job execution)
-  private val trace = sys.env.get("GRAFT_TRACE").contains("1")
-  private def timed[T](label: String)(f: => T): T = {
-    if (!trace) f
-    else {
-      val t0 = System.nanoTime()
-      val r = f
-      System.err.println(
-        f"[trace] store $label%-24s ${(System.nanoTime() - t0) / 1e9}%8.3fs")
-      r
-    }
-  }
 
   /** bucket → data files (table-relative paths); -1 = unbucketed. */
   type FileMap = Map[Int, Seq[String]]
@@ -186,8 +171,7 @@ final class SnapshotStore(val root: String) {
 
   /** Full snapshot: the new manifest references only this write's files
     * (whole-table rewrite — host-cardinality state tables, compaction). */
-  def write(df: DataFrame, table: String, wave: Int, rows: Long = -1L,
-            lineage: String = ""): Int =
+  def write(df: DataFrame, table: String, wave: Int, lineage: String = ""): Int =
     appendSnap(table, wave, lineage, (_, _) => Map.empty, df, None)
 
   /** Register an EMPTY initial snapshot without launching a Spark job:
@@ -232,13 +216,13 @@ final class SnapshotStore(val root: String) {
     import org.apache.spark.sql.functions.{col, lit, struct}
     require(parts.nonEmpty, "writeFused needs at least one part")
     def shape(s: StructType) = s.fields.map(f => (f.name, f.dataType)).toSeq
-    timed("fused_analyze_legs")(parts.foreach { p =>
+    parts.foreach { p =>
       require(Files.exists(schemaPath(p.table)),
         s"fused write requires a pinned schema for '${p.table}' (init first)")
       require(shape(p.df.schema) == shape(tableSchema(p.table)),
         s"schema drift for table '${p.table}': writing ${p.df.schema.simpleString}, " +
           s"pinned ${tableSchema(p.table).simpleString}")
-    })
+    }
     val branches = parts.map { p =>
       val cols = parts.map { q =>
         if (q.table == p.table) struct(p.df.columns.map(col): _*).as(s"__c_${q.table}")
@@ -247,7 +231,6 @@ final class SnapshotStore(val root: String) {
       p.df.select(lit(p.table).as("__tbl") +: cols: _*)
     }
     val fused = branches.reduce(_ unionByName _)
-    timed("fused_plan")(fused.queryExecution.executedPlan)
     val fusedRoot = Paths.get(root, "_fused")
     Files.createDirectories(fusedRoot)
     val next = Using.resource(Files.list(fusedRoot)) { s =>
@@ -256,8 +239,7 @@ final class SnapshotStore(val root: String) {
         .foldLeft(-1)(math.max) + 1
     }
     val dir = fusedRoot.resolve(f"snap-$next%05d")
-    timed("fused_write_job")(
-      fused.write.mode(SaveMode.Overwrite).partitionBy("__tbl").parquet(dir.toString))
+    fused.write.mode(SaveMode.Overwrite).partitionBy("__tbl").parquet(dir.toString)
     parts.foreach { p =>
       val sub = dir.resolve(s"__tbl=${p.table}")
       val td = tableDir(p.table)
@@ -278,21 +260,6 @@ final class SnapshotStore(val root: String) {
       commitManifest(p.table,
         Manifest(nid, m.snaps :+ Snap(nid, wave, p.lineage, files)))
     }
-  }
-
-  /** Replace exactly the buckets present in `df`; all other buckets are
-    * carried by reference from the previous snapshot (bloom bank update,
-    * selective compaction). */
-  def replaceBuckets(df: DataFrame, table: String, wave: Int,
-                     bucketCol: String, lineage: String = ""): Int = {
-    val m = parseManifest(table).getOrElse(Manifest(-1, Seq.empty))
-    val next = m.snaps.map(_.id).foldLeft(-1)(math.max) + 1
-    val written = physicalWrite(df, table, next, Some(bucketCol))
-    val prior: FileMap =
-      if (m.current < 0) Map.empty else snapOf(table, m.current).files
-    val files = (prior -- written.keySet) ++ written
-    commitManifest(table, Manifest(next, m.snaps :+ Snap(next, wave, lineage, files)))
-    next
   }
 
   // -------------------------------------------------------------- reads

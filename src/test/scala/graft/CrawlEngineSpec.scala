@@ -48,6 +48,16 @@ class CrawlEngineSpec extends AnyFunSuite {
 
   def frontierNow(store: SnapshotStore) = CrawlEngine.frontierCurrent(spark, store)
 
+  /** Run waves 0 until `n` directly on `e` (world `c`), threading the
+    * carry from a cold start, then free the last carry. */
+  def runWaves(e: CrawlEngine, c: Synth.Config, n: Int): Unit =
+    (0 until n).foldLeft(CrawlEngine.WaveCarry.cold(c.nBuckets))((carry, w) =>
+      e.runWave(w, carry)._2).frames.foreach(CrawlEngine.freeCheckpoint)
+
+  def commitMetrics(store: SnapshotStore, w: Int): org.json4s.JValue =
+    org.json4s.jackson.JsonMethods.parse(Files.readString(
+      java.nio.file.Paths.get(store.root, "_commits", f"wave-$w%05d.json"))) \ "metrics"
+
   test("URL-seen set equals oracle (merged view AND discovery-row key layer)") {
     import org.apache.spark.sql.functions.col
     val fromLog = frontierNow(engineStore)
@@ -385,7 +395,7 @@ class CrawlEngineSpec extends AnyFunSuite {
     val store2 = freshStore()
     val e1 = new CrawlEngine(spark, cfg, store2)
     e1.init()
-    e1.runWave(0); e1.runWave(1)
+    runWaves(e1, cfg, 2)
     assert(store2.lastCommittedWave() == 1)
     new CrawlEngine(spark, cfg, store2).run() // resumes at wave 2
     val a = engineStore.readAll(spark, "results")
@@ -401,7 +411,7 @@ class CrawlEngineSpec extends AnyFunSuite {
     val store2 = freshStore()
     val e1 = new CrawlEngine(spark, cfg, store2)
     e1.init()
-    e1.runWave(0); e1.runWave(1)
+    runWaves(e1, cfg, 2)
     // simulate a crash between table writes and commitWave: orphan
     // deltas land in results + frontier, politeness advances, no commit
     val orphan = store2.readAll(spark, "results").limit(3)
@@ -468,7 +478,7 @@ class CrawlEngineSpec extends AnyFunSuite {
     // replaced)
     val store2 = freshStore()
     val e = new CrawlEngine(spark, cfg, store2)
-    e.init(); e.runWave(0); e.runWave(1) // compactEvery=3 → still raw log
+    e.init(); runWaves(e, cfg, 2) // compactEvery=3 → still raw log
     val log = store2.read(spark, "frontier")
     assert(log.filter(col("is_update")).count() > 0, "no update rows to fold")
     // state columns only: is_update is a log-encoding artifact (the fold
@@ -531,5 +541,97 @@ class CrawlEngineSpec extends AnyFunSuite {
     // log-rows per frontier URL must not grow with total waves run
     assert(rows7.toDouble / urls7 <= rows4.toDouble / urls4 + 0.05,
       s"log amplification grew: $rows4/$urls4 → $rows7/$urls7")
+  }
+
+  test("run() frees its last carry: no persistent RDD outlives the crawl") {
+    // the final wave's politeness/state checkpoints and the last merged
+    // Bloom bank are executor blocks; run() must release them on return
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    new CrawlEngine(spark, cfg, freshStore()).run()
+    assert(spark.sparkContext.getPersistentRDDs.keySet == before,
+      "persistent RDDs left behind by run()")
+  }
+
+  test("scoped resume from a cold carry reproduces the uninterrupted scoped run") {
+    // a resumed wave starts from WaveCarry.cold: all-bucket supersets on
+    // the scan-pruning side, while the scoped due scan stays restricted
+    val scoped = cfg.copy(datasetScope = "ds-regional", nWaves = 4)
+    val whole = freshStore()
+    new CrawlEngine(spark, scoped, whole).run()
+    val resumed = freshStore()
+    val e1 = new CrawlEngine(spark, scoped, resumed)
+    e1.init()
+    runWaves(e1, scoped, 2)
+    assert(resumed.lastCommittedWave() == 1)
+    new CrawlEngine(spark, scoped, resumed).run() // resumes at wave 2
+    def results(st: SnapshotStore) = st.readAll(spark, "results")
+      .select("wave", "host", "rank", "norm_url", "status")
+      .collect().map(_.toString).sorted.toSeq
+    def frontier(st: SnapshotStore) = CrawlEngine.frontierCurrent(spark, st)
+      .select("norm_url", "status").collect().map(_.toString).sorted.toSeq
+    assert(results(whole).nonEmpty)
+    assert(results(resumed) == results(whole))
+    assert(frontier(resumed) == frontier(whole))
+    (0 until scoped.nWaves).foreach { w =>
+      assert(commitMetrics(resumed, w) == commitMetrics(whole, w), s"wave $w commit metrics")
+    }
+  }
+
+  /** Start times (epoch ms) of the Spark jobs `body` runs. The listener
+    * bus is asynchronous but ordered: once a marker job submitted after
+    * `body` is seen, every earlier job has been seen too. */
+  private def jobStartsOf(body: => Unit): Seq[Long] = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import scala.jdk.CollectionConverters._
+    val marker = "job-budget-marker"
+    val starts = new java.util.concurrent.ConcurrentLinkedQueue[(Long, String)]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        starts.add((e.time, Option(e.properties)
+          .map(_.getProperty("spark.job.description", "")).getOrElse("")))
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      body
+      sc.setJobDescription(marker)
+      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
+      while (!starts.asScala.exists(_._2 == marker)) Thread.sleep(20)
+    } finally sc.removeSparkListener(listener)
+    starts.asScala.toSeq.collect { case (t, d) if d != marker => t }
+  }
+
+  private def commitMs(st: SnapshotStore, w: Int): Long = Files.getLastModifiedTime(
+    java.nio.file.Paths.get(st.root, "_commits", f"wave-$w%05d.json")).toMillis
+
+  test("per-wave job budget: warm and resumed waves run no more Spark jobs than before") {
+    // A wave's window runs from the previous wave's commit record to its
+    // own, so wave 3 also holds the compaction that follows wave 2's
+    // commit (compactEvery = 3) and wave 4 is the final wave (no Bloom
+    // merge). Budget: the counts of commit a6784a9 (the last one-method
+    // runWave, before its split into stages), measured on this world and
+    // config (local[4], 7 shuffle partitions, AQE on), identical in two
+    // runs.
+    val budget = Seq(47, 47, 52, 43)
+    val st = freshStore()
+    val starts = jobStartsOf(new CrawlEngine(spark, cfg, st).run())
+    val perWave = (1 until cfg.nWaves).map { w =>
+      starts.count(t => t >= commitMs(st, w - 1) && t < commitMs(st, w))
+    }
+    info(s"jobs per warm wave: $perWave (budget $budget)")
+    assert(perWave.zip(budget).forall { case (n, b) => n <= b },
+      s"jobs per warm wave $perWave exceed the budget $budget")
+    // a resumed wave starts from WaveCarry.cold instead of collecting its
+    // bucket sets first: at a6784a9 resumed wave 2 ran 52 jobs here, two
+    // of them that wave-start `collect`
+    val st2 = freshStore()
+    val e1 = new CrawlEngine(spark, cfg, st2)
+    e1.init()
+    runWaves(e1, cfg, 2)
+    val t0 = System.currentTimeMillis()
+    val resumed = jobStartsOf(new CrawlEngine(spark, cfg, st2).run())
+      .count(t => t >= t0 && t < commitMs(st2, 2))
+    info(s"jobs in resumed wave 2: $resumed")
+    assert(resumed <= 50, s"resumed wave ran $resumed jobs (> 50)")
   }
 }
