@@ -153,13 +153,13 @@ object ScalingChild {
   def main(args: Array[String]): Unit = {
     val Array(cpus, nHosts, perWave, nWaves) = args.map(_.toInt)
     // bucket count derived from world size (never the fixed spec-world
-    // 32): the dedup/Bloom cogroup must not be parallelism-capped, and
-    // per-bucket Bloom blobs stay ≤ ~1e6 keys
+    // 32): the bucket-keyed batch dedup must not be parallelism-capped,
+    // and each bucket's dedup map and seen scan stay ≤ ~1e6 keys
     val cfg = Synth.Config(nHosts = nHosts, urlsPerHostPerWave = perWave,
       nWaves = nWaves,
       nBuckets = Synth.bucketsFor(nHosts.toLong * perWave * nWaves))
     require(cfg.nBuckets >= 256 && cfg.nBuckets >= cpus,
-      s"scaling world bucket count ${cfg.nBuckets} would cap cogroup parallelism")
+      s"scaling world bucket count ${cfg.nBuckets} would cap batch-dedup parallelism")
     // warm-up proportional to the real world so the JIT reaches steady
     // state before measurement — a token warm-up biases whichever
     // parallelism level happens to run second

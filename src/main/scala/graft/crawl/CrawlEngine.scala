@@ -8,16 +8,14 @@ import graft.synth.{Synth, SynthFunctions}
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Observation, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.util.sketch.BloomFilter
-import java.io.{ByteArrayInputStream, ByteArrayOutputStream}
 
 /** The Spark-native URL-frontier + fetch scheduler (BASELINE.json
   * north rule). One wave =
   *
   *   sources⋈state(due) → per-source method cascade (RSS → homepage →
   *     section crawl, ≥max/2 short-circuit) → normalize → scope/skip/
-  *     recency → order-preserving batch dedup (W2/U1) → bucket-
-  *     co-partitioned Bloom screen → bucket-pruned exact seen confirm
+  *     recency → order-preserving batch dedup (W2/U1, one bucket
+  *     shuffle) → exact seen screen against the touched buckets
   *   → verification + robots gate applied to the DELTA (per-row rules)
   *   → merge-on-read plan view → per-host bounded top-k token ranking
   *   → fetch (mapPartitions resolver) → X4 content typing
@@ -31,15 +29,20 @@ import java.io.{ByteArrayInputStream, ByteArrayOutputStream}
   *    row of a URL is its max-seq version (merge-on-read), and the log
   *    is compacted to one row per URL every `compactEvery` waves, so
   *    read amplification is bounded and amortized.
-  *  - The URL-seen layer is (a) a bucket-keyed Bloom bank that lives
-  *    only in executor memory (carried wave to wave, rebuilt from the
-  *    frontier on a cold start; never stored), whose membership checks
-  *    and merges run bucket-co-partitioned in executors (the driver
-  *    never holds or broadcasts the bank), and (b) the seen KEYS, which
-  *    are the frontier log's immutable discovery rows; the exact
-  *    confirm join scans only the wave's touched buckets (manifest
-  *    file pruning) and joins only the Bloom-positive remainder —
-  *    |dups + false positives|, not |batch|, and never a seen shuffle.
+  *  - The URL-seen set is the frontier log's immutable discovery rows
+  *    (one per admitted URL), screened exactly: the deduped batch is
+  *    semi-joined against the `norm_url` column of the wave's touched
+  *    buckets only (manifest file pruning + column pruning), then
+  *    anti-joined out — the seen side is scanned, never shuffled, and
+  *    nothing is carried across waves. At 10^10 URLs in 10^4 buckets a
+  *    bucket holds ~10^6 keys of ~50 B, so a touched bucket's scan reads
+  *    ~50 MB raw (less after parquet encoding) and a wave that touches
+  *    every bucket reads ≤ ~500 GB across 10^4 tasks. The deleted Bloom
+  *    bank (1% fpp, 2× capacity: ~9.6 bits × 2×10^10 keys) held ~24 GB
+  *    in executor memory and shuffled each touched bucket's ~2.4 MB
+  *    filter through two cogroups per wave, yet pruned none of those
+  *    scan bytes: the screen read the same touched buckets whatever the
+  *    filter said.
   *  - Robots rules and politeness tokens are host-cardinality tables
   *    joined in by broadcast; longest-match is a pre-sorted-array HOF
   *    expression, not a driver map.
@@ -59,26 +62,12 @@ final class CrawlEngine(spark: SparkSession, cfg: Synth.Config, store: SnapshotS
   import spark.implicits._
   import CrawlEngine._
 
-  private val SeenFpp = 0.01
-  private val bloomCapacityPerBucket =
-    math.max(1000L, cfg.nHosts.toLong * cfg.urlsPerHostPerWave * cfg.nWaves / cfg.nBuckets * 2)
-  // fail fast if the world outgrew its bucket count: a Bloom filter row
-  // is a single serialized blob, and an oversized one means nBuckets was
-  // not derived from the expected URL volume (Synth.bucketsFor) — at
-  // 10^10 URLs with a fixed small bucket count these blobs would reach
-  // GBs each and the dedup cogroup would be parallelism-capped
-  require(bloomCapacityPerBucket <= 8L * 1000 * 1000,
-    s"bloom capacity/bucket $bloomCapacityPerBucket exceeds 8e6 keys — " +
-      s"derive nBuckets from world size via Synth.bucketsFor " +
-      s"(got nBuckets=${cfg.nBuckets})")
-
   /** Every state table a wave commit pins (crash recovery rolls each
     * back to the last commit's pin). The URL-seen KEY layer is not a
     * separate table: the frontier log's immutable discovery rows ARE
-    * the seen set (one row per admitted URL), and the exact-confirm
-    * scan reads just their `norm_url` column (parquet column pruning)
-    * from the wave's touched buckets. The Bloom bank is not a table
-    * either: it lives only in executor memory. */
+    * the seen set (one row per admitted URL), and the seen screen
+    * reads just their `norm_url` column (parquet column pruning) from
+    * the wave's touched buckets. */
   val AllTables: Seq[String] = Seq("sources", "robots", "politeness",
     "source_state", "frontier", "results", "telemetry",
     "telemetry_http", "wire_patterns", "content_patterns", "datasets",
@@ -177,28 +166,6 @@ final class CrawlEngine(spark: SparkSession, cfg: Synth.Config, store: SnapshotS
       .map(r => (r.getString(1), r.getString(2), r.getString(3)))
       .toSeq)
 
-  /** The cold-start bank: every admitted URL has exactly one immutable
-    * discovery row in the frontier, so grouping those keys by bucket
-    * reproduces the bank exactly (Bloom bit-arrays are insertion-order-
-    * independent — byte-identical to the incrementally merged bank).
-    * Lazy: no action here; the caller's cogroup evaluates it. */
-  private def rebuildBankFromFrontier(): Dataset[BloomRow] = {
-    val cap = bloomCapacityPerBucket
-    val fpp = SeenFpp
-    store.read(spark, "frontier")
-      .filter(!col("is_update"))
-      .select(col("host_bucket"), col("norm_url"))
-      .as[(Int, String)]
-      .groupByKey(_._1)
-      .mapGroups { (b, ks) =>
-        val bf = BloomFilter.create(cap, fpp)
-        ks.foreach(k => bf.putString(k._2))
-        val bos = new ByteArrayOutputStream()
-        bf.writeTo(bos)
-        BloomRow(b, bos.toByteArray)
-      }
-  }
-
   // ---------------------------------------------------------------- waves
 
   /** One wave as a composition of named stages. `carry` is what the
@@ -208,18 +175,18 @@ final class CrawlEngine(spark: SparkSession, cfg: Synth.Config, store: SnapshotS
     val in = waveIn(wave, carry)
     val (due, availHosts) = dueSources(in)
     val (candidates, discObs) = discover(in, due)
-    val (checked, newLinks) = screen(in, candidates, carry.dueBuckets)
+    val (batch, newLinks) = screen(candidates, carry.dueBuckets)
     val (gatedDelta, discovered) = verify(in, newLinks)
     val plannedWide = plan(in, discovered, availHosts, carry.availBuckets)
     val fetched = fetch(in, plannedWide)
     val (metrics, next) =
-      persistWave(in, carry, due, gatedDelta, discovered, plannedWide, fetched, discObs)
-    due.unpersist(); checked.unpersist(); availHosts.unpersist()
+      persistWave(in, due, gatedDelta, discovered, plannedWide, fetched, discObs)
+    due.unpersist(); batch.unpersist(); availHosts.unpersist()
     // checkpointed frames hold RDD blocks, not CacheManager entries —
     // Dataset.unpersist() would be a no-op on them; free the blocks,
-    // including the previous carry's frames the next one replaced (safe
-    // only now: every consumer of them has run)
-    (Seq(gatedDelta, plannedWide, fetched._1) ++ carry.replacedBy(next))
+    // including the previous carry's frames, which `next` replaced
+    // (safe only now: every consumer of them has run)
+    (Seq(gatedDelta, plannedWide, fetched._1) ++ carry.frames)
       .foreach(CrawlEngine.freeCheckpoint)
     (metrics, next)
   }
@@ -242,8 +209,7 @@ final class CrawlEngine(spark: SparkSession, cfg: Synth.Config, store: SnapshotS
     WaveIn(wave, spark.sparkContext.broadcast(cfg), params,
       store.read(spark, "sources").as[Source], store.read(spark, "robots"),
       carry.politeness.getOrElse(store.read(spark, "politeness").as[PolitenessState]),
-      carry.state.getOrElse(store.read(spark, "source_state").as[SourceState]),
-      carry.bank.getOrElse(rebuildBankFromFrontier()))
+      carry.state.getOrElse(store.read(spark, "source_state").as[SourceState]))
   }
 
   /** Stage 1 — due sources (F11 + F12 gates, join-based — no driver
@@ -343,33 +309,24 @@ final class CrawlEngine(spark: SparkSession, cfg: Synth.Config, store: SnapshotS
     (candidates, discObs)
   }
 
-  /** Stage 3 — W2/U1 + J6/X5 in ONE bucket shuffle: norm_url → host →
-    * bucket is functional, so the batch dedup (keep the min (attempt,
-    * url) occurrence — this wave's A5 attempt order) can run inside the
-    * bucket cogroup that also evaluates the Bloom screen; then the exact
-    * confirm of the Bloom positives. Returns the cached cogroup output
-    * (freed by the caller) and the new links. */
-  private def screen(in: WaveIn, candidates: Dataset[CandRow],
-                     touched: Seq[Int]): (Dataset[(CandRow, Boolean)], DataFrame) = {
-    // The Bloom bank stays a bucket-keyed table evaluated executor-side;
-    // the driver never holds it.
-    // X5 bank: held as a checkpointed Dataset across waves (executor
-    // memory — the driver never sees a blob); the store never persists
-    // it. A per-wave parquet write would buy nothing: the frontier's
-    // committed discovery rows are the authoritative seen keys, so a
-    // cold start rebuilds the bank from them lazily (Bloom bit-arrays
-    // are insertion-order-independent, so a rebuilt bank is byte-
-    // identical to the incrementally merged one).
+  /** Stage 3 — W2/U1 + J6/X5: the batch dedup (keep the min (attempt,
+    * url) occurrence per norm_url — this wave's A5 attempt order) in ONE
+    * bucket shuffle (norm_url → host → bucket is functional), then the
+    * exact seen screen of the deduped batch against the touched
+    * buckets. Returns the cached deduped batch (freed by the caller) and
+    * the new links. */
+  private def screen(candidates: Dataset[CandRow],
+                     touched: Seq[Int]): (Dataset[CandRow], DataFrame) = {
     val touchedSet = touched.toSet
-    val blooms = { val ts = touchedSet; in.bank.filter(r => ts.contains(r.bucket)) }
     // F7 invariant the bucket pruning DEPENDS on: every candidate's host
     // equals a due source's host, so its bucket is in `touched`. If a
-    // scope rule ever admitted a cross-host link, an untouched bucket's
-    // Bloom filter would silently be replaced by a fresh empty one —
-    // fail fast instead of corrupting the seen layer.
-    val checked: Dataset[(CandRow, Boolean)] = candidates
+    // scope rule ever admitted a cross-host link, the seen scan (touched
+    // buckets only) would miss its bucket and silently re-admit an
+    // already-seen URL as new — fail fast instead of corrupting the
+    // seen layer.
+    val batch = candidates
       .groupByKey(_.host_bucket)
-      .cogroup(blooms.groupByKey(_.bucket)) { (b, cs, bs) =>
+      .flatMapGroups { (b, cs) =>
         require(touchedSet.contains(b),
           s"candidate bucket $b outside the wave's touched set $touchedSet")
         val best = new java.util.HashMap[String, CandRow]()
@@ -379,30 +336,21 @@ final class CrawlEngine(spark: SparkSession, cfg: Synth.Config, store: SnapshotS
             (c.attempt == prev.attempt && c.url < prev.url))
             best.put(c.norm_url, c)
         }
-        val bf = bs.nextOption()
-          .map(r => BloomFilter.readFrom(new ByteArrayInputStream(r.bloom)))
         import scala.jdk.CollectionConverters._
-        bf match {
-          case None => best.values().iterator().asScala.map(c => (c, false))
-          case Some(f) => best.values().iterator().asScala
-            .map(c => (c, f.mightContainString(c.norm_url)))
-        }
-      }.cache()
-    val maybeSeen = checked.filter(_._2).map(_._1).toDF()
-    val definitelyNew = checked.filter(!_._2).map(_._1).toDF()
-    // exact confirm: semi-join the (pruned) seen scan against the small
-    // Bloom-positive set, then anti-join — both sides of both joins
-    // broadcast the small set; the seen layer is scanned (one column,
-    // touched buckets only), never shuffled. The seen KEYS are the
-    // frontier log's rows themselves (every admitted URL has exactly
-    // one immutable discovery row; update rows only repeat a subset of
+        best.values().iterator().asScala
+      }.cache() // two readers: the semi-join probe and the anti-join
+    // exact screen: semi-join the (pruned) seen scan against the deduped
+    // batch, then anti-join the hits out — hits ⊆ batch, so both joins
+    // build on a batch-sized side; the seen layer is scanned (one
+    // column, touched buckets only), never shuffled. The seen KEYS are the frontier
+    // log's rows themselves (every admitted URL has exactly one
+    // immutable discovery row; update rows only repeat a subset of
     // those keys, harmless under a semi-join) — parquet column pruning
     // makes this scan cost what a dedicated key table would, without a
     // second table write per wave.
     val seenScan = store.readBuckets(spark, "frontier", touched).select("norm_url")
-    val hits = seenScan.join(maybeSeen.select("norm_url"), Seq("norm_url"), "left_semi")
-    val confirmedNew = maybeSeen.join(hits, Seq("norm_url"), "left_anti")
-    (checked, definitelyNew.unionByName(confirmedNew))
+    val hits = seenScan.join(batch.select("norm_url"), Seq("norm_url"), "left_semi")
+    (batch, batch.toDF().join(hits, Seq("norm_url"), "left_anti"))
   }
 
   /** Stage 4 — verification (F5/F6/F9) + robots gate: pure per-row
@@ -507,7 +455,7 @@ final class CrawlEngine(spark: SparkSession, cfg: Synth.Config, store: SnapshotS
     * not_article/wire/robots_blocked rows are never updated and never
     * eligible, so they skip the plan path entirely. The scan is PRUNED
     * to the buckets of politeness-available hosts (manifest file
-    * pruning, like the seen/bloom scans): only hosts with tokens this
+    * pruning, like the seen scan): only hosts with tokens this
     * wave can be planned, so no other bucket's backlog is read, and
     * nothing is cached — the only materialized plan product is the
     * (≤ tokens·hosts)-row planned set. (host, tokens) STAYS a DataFrame:
@@ -576,10 +524,10 @@ final class CrawlEngine(spark: SparkSession, cfg: Synth.Config, store: SnapshotS
     (results, resultsToWrite, resultsObs)
   }
 
-  /** Stage 7 — delta state rewrites + commit: results, frontier, Bloom
-    * merge and the fused state write, then the wave commit and cadence
-    * compaction. Returns the wave's metrics and the next wave's carry. */
-  private def persistWave(in: WaveIn, carry: WaveCarry, due: Dataset[DueSource],
+  /** Stage 7 — delta state rewrites + commit: results, frontier and the
+    * fused state write, then the wave commit and cadence compaction.
+    * Returns the wave's metrics and the next wave's carry. */
+  private def persistWave(in: WaveIn, due: Dataset[DueSource],
                           gatedDelta: DataFrame, discovered: DataFrame, plannedWide: DataFrame,
                           fetched: (Dataset[FetchResult], DataFrame, Observation),
                           discObs: Observation): (WaveMetrics, WaveCarry) = {
@@ -629,16 +577,6 @@ final class CrawlEngine(spark: SparkSession, cfg: Synth.Config, store: SnapshotS
       frontierDelta.repartition(writeParts, col("host_bucket")),
       "frontier", wave, bucketCol = Some("host_bucket"),
       lineage = s"wave $wave delta (discovered + outcomes)"))
-    // the bank is a derived structure that lives only in executor
-    // memory (a cold start rebuilds it from the frontier's committed
-    // discovery rows, byte-identically — see rebuildBankFromFrontier),
-    // so there is no merged bank to maintain after the FINAL wave: skip
-    // the merge cogroup entirely (~1.5 s inside the timed crawl in the
-    // r6 trace, for a bank nothing would read).
-    val finalWave = wave + 1 == cfg.nWaves
-    val fBloom =
-      if (finalWave) Future.successful(carry.bank)
-      else Future(Some(mergeBank(in.bank, discovered, carry.dueBuckets)))
     // the four host-or-less-cardinality state tables commit in ONE
     // fused Spark job (one tagged union, one parquet pass, per-table
     // manifest registration) — per-wave driver cost is one job launch
@@ -650,8 +588,8 @@ final class CrawlEngine(spark: SparkSession, cfg: Synth.Config, store: SnapshotS
     // lazy localCheckpoint, same deal as stateNextCk: materialized by
     // the fused write, reused as next wave's politeness (the carry)
     val politenessNextCk = politenessNext.localCheckpoint(false)
-    // warm the politeness rewrite concurrently with the frontier/bloom
-    // futures (it needs the fetch results, so it can only start now);
+    // warm the politeness rewrite concurrently with the frontier
+    // future (it needs the fetch results, so it can only start now);
     // same idempotent-materialization rationale as fStateWarm above
     val fPolWarm = Future(
       politenessNextCk.foreachPartition((_: Iterator[org.apache.spark.sql.Row]) => ()))
@@ -668,7 +606,7 @@ final class CrawlEngine(spark: SparkSession, cfg: Synth.Config, store: SnapshotS
         append = true, lineage = s"wave $wave method telemetry"),
       FusedPart("telemetry_http", httpTelemetry.coalesce(hostFiles),
         append = true, lineage = s"wave $wave http outcomes")), wave))
-    Seq(fFrontier, fBloom, fStateTables, fStateWarm, fPolWarm)
+    Seq(fFrontier, fStateTables, fStateWarm, fPolWarm)
       .foreach(Await.result(_, Duration.Inf))
 
     // the fused write materialized both checkpoints: they become next
@@ -676,8 +614,7 @@ final class CrawlEngine(spark: SparkSession, cfg: Synth.Config, store: SnapshotS
     // its observations (see WaveCarry)
     def buckets(obs: Observation, key: String): Seq[Int] =
       obs.get(key).asInstanceOf[scala.collection.Seq[Int]].toSeq.sorted
-    val next = WaveCarry(Await.result(fBloom, Duration.Inf),
-      Some(politenessNextCk.drop("__avail_b").as[PolitenessState]),
+    val next = WaveCarry(Some(politenessNextCk.drop("__avail_b").as[PolitenessState]),
       Some(stateNextCk.drop("__due_b").as[SourceState]),
       dueBuckets = buckets(stateObs, "due_buckets"),
       availBuckets = buckets(polObs, "avail_buckets"))
@@ -691,6 +628,7 @@ final class CrawlEngine(spark: SparkSession, cfg: Synth.Config, store: SnapshotS
     // crawl's timed critical path. A store opened for REPEATED reads
     // compacts once via [[CrawlEngine.compactForRead]] instead, so the
     // read side never pays a full-log scan per query.
+    val finalWave = wave + 1 == cfg.nWaves
     if (cfg.compactEvery > 0 && (wave + 1) % cfg.compactEvery == 0 && !finalWave) {
       // compacted rows become snapshot rows (is_update=false): the
       // plan pre-filter then excludes terminal rows from the merge
@@ -897,41 +835,6 @@ final class CrawlEngine(spark: SparkSession, cfg: Synth.Config, store: SnapshotS
     (telemetry, telemObs, httpTelemetry)
   }
 
-  /** The next bank: a bucket-co-partitioned merge in executors; touched
-    * buckets fold this wave's keys, untouched rows carry over from the
-    * current bank. */
-  private def mergeBank(bank: Dataset[BloomRow], discovered: DataFrame,
-                        touched: Seq[Int]): Dataset[BloomRow] = {
-    val cap = bloomCapacityPerBucket
-    val fpp = SeenFpp
-    val ts = touched.toSet
-    val blooms = bank.filter(r => ts.contains(r.bucket))
-    val newKeys = discovered.select(col("host_bucket"), col("norm_url"))
-      .as[(Int, String)]
-    val mergedTouched = newKeys.groupByKey(_._1)
-      .cogroup(blooms.groupByKey(_.bucket)) { (b, ks, olds) =>
-        val oldRow = olds.nextOption()
-        if (!ks.hasNext) oldRow.iterator // no new keys — bloom unchanged
-        else {
-          val bf = oldRow match {
-            case Some(r) => BloomFilter.readFrom(new ByteArrayInputStream(r.bloom))
-            case None => BloomFilter.create(cap, fpp)
-          }
-          ks.foreach(k => bf.putString(k._2))
-          val bos = new ByteArrayOutputStream()
-          bf.writeTo(bos)
-          Iterator.single(BloomRow(b, bos.toByteArray))
-        }
-      }
-    // localCheckpoint (eager): materializes the bank in executor
-    // storage AND truncates lineage — the bank feeds itself every
-    // wave (cogroup + union), so an ordinary persist would double the
-    // logical plan per wave (analysis/explain blow up exponentially)
-    mergedTouched
-      .union(bank.filter(r => !ts.contains(r.bucket)))
-      .localCheckpoint(true)
-  }
-
   /** Assemble the wave's counters — all from observations riding the
     * write actions — and commit the wave. */
   private def commit(wave: Int, discObs: Observation, dedupObs: Observation,
@@ -989,28 +892,23 @@ final class CrawlEngine(spark: SparkSession, cfg: Synth.Config, store: SnapshotS
 
 object CrawlEngine {
 
-  /** What one wave hands the next. The Bloom bank and the politeness /
-    * source-state rewrites stay in executor memory as checkpointed
-    * frames (the fused state write is the action that materializes the
-    * latter — no extra job), so the next wave probes executor memory
-    * instead of re-reading what this wave just wrote; the store copy
-    * remains the durable truth, written every wave, and `None` means
-    * "read the store". The two bucket sets prune the next wave's scans:
-    * `dueBuckets` (due hosts: seen/Bloom scans) and `availBuckets`
-    * (politeness-available hosts: plan backlog scan). Both ride out of
-    * the fused state write as collect_set observations, decided by the
-    * same Scala kernels as the due scan and the politeness gate, so no
-    * wave-start driver action runs. */
-  final case class WaveCarry(bank: Option[Dataset[BloomRow]],
-                             politeness: Option[Dataset[PolitenessState]],
+  /** What one wave hands the next. The politeness / source-state
+    * rewrites stay in executor memory as checkpointed frames (the fused
+    * state write is the action that materializes them — no extra job),
+    * so the next wave reads executor memory instead of re-reading what
+    * this wave just wrote; the store copy remains the durable truth,
+    * written every wave, and `None` means "read the store". The two
+    * bucket sets prune the next wave's scans: `dueBuckets` (due hosts:
+    * the seen scan) and `availBuckets` (politeness-available hosts: the
+    * plan backlog scan). Both ride out of the fused state write as
+    * collect_set observations, decided by the same Scala kernels as the
+    * due scan and the politeness gate, so no wave-start driver action
+    * runs. */
+  final case class WaveCarry(politeness: Option[Dataset[PolitenessState]],
                              state: Option[Dataset[SourceState]],
                              dueBuckets: Seq[Int], availBuckets: Seq[Int]) {
     /** The checkpointed frames this carry pins in executor storage. */
-    def frames: Seq[Dataset[_]] = bank.toSeq ++ politeness ++ state
-
-    /** This carry's frames that `next` no longer holds. */
-    def replacedBy(next: WaveCarry): Seq[Dataset[_]] =
-      frames.filterNot(f => next.frames.exists(_ eq f))
+    def frames: Seq[Dataset[_]] = politeness.toSeq ++ state
   }
 
   object WaveCarry {
@@ -1019,14 +917,15 @@ object CrawlEngine {
       * only PRUNE scans, so a superset is always correct — it prunes
       * less and never changes a row. On a fresh store it is exact anyway
       * (every active source is due at last_wave = -1, every host is
-      * available in its initial state, and the frontier is empty); on a
-      * resume the bank rebuild scans the whole frontier regardless. The
-      * observed sets of a SCOPED run are supersets in the same way: the
-      * state legs see every source, while the due scan itself stays
+      * available in its initial state, and the frontier is empty). On a
+      * resume the all-bucket seen scan reads the `norm_url` column of
+      * the whole frontier once, and shuffles none of it. The observed
+      * sets of a SCOPED run are supersets in the same way: the state
+      * legs see every source, while the due scan itself stays
       * scope-restricted by the registry semi-join. */
     def cold(nBuckets: Int): WaveCarry = {
       val all = 0 until nBuckets
-      WaveCarry(None, None, None, all, all)
+      WaveCarry(None, None, all, all)
     }
   }
 
@@ -1044,12 +943,12 @@ object CrawlEngine {
 
   /** The read side of one wave, shared by its stages: the broadcast
     * config, the one-row parameter table, and the input tables —
-    * politeness, source state and the Bloom bank come from the carry, or
-    * from the store on a cold start. */
+    * politeness and source state come from the carry, or from the store
+    * on a cold start. */
   private final case class WaveIn(wave: Int, cfgB: Broadcast[Synth.Config], params: DataFrame,
                                   allSources: Dataset[Source], robots: DataFrame,
                                   politeness: Dataset[PolitenessState],
-                                  state: Dataset[SourceState], bank: Dataset[BloomRow])
+                                  state: Dataset[SourceState])
 
   /** Robots rule row: rules pre-sorted (longest prefix first, allow
     * winning equal-length ties) so longest-match = first array hit. */
@@ -1063,7 +962,7 @@ object CrawlEngine {
   final case class RawLink(source_id: String, src_host: String, url: String,
                            method_rank: Int, attempt: Int, slot: Int, section: String)
   // src_host deliberately absent: it dies at the scope check and would
-  // otherwise ride the hottest shuffle (the bucket cogroup) for nothing
+  // otherwise ride the hottest shuffle (the bucket dedup) for nothing
   final case class CandRow(norm_url: String, method_rank: Int, attempt: Int,
                            url: String, source_id: String, host: String,
                            pub_day: Int, slot: Int, section: String, host_bucket: Int)

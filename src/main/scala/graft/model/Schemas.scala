@@ -94,11 +94,6 @@ case class HttpTelemetryRow(
     http_status: Int,
     n: Long)
 
-/** One host-hash bucket of the URL-seen Bloom bank (X5). Lives as a
-  * bucket-keyed TABLE; membership checks and merges run bucket-
-  * co-partitioned in executors — the driver never holds the bank. */
-case class BloomRow(bucket: Int, bloom: Array[Byte])
-
 /** Fetched payload row — the graft's image+caption analogue of
   * `articles` (BASELINE.json input_hint). */
 case class ImageRow(

@@ -54,10 +54,10 @@ object Synth {
   val RssConsecThreshold = 3
 
   /** Scale-derived frontier bucket count: one bucket per ≤1e6 expected
-    * URLs — ≤ ~1.2 MB serialized Bloom filter at 1% fpp and a bounded
-    * seen-key scan per bucket — floored at `minParallel` (pass ~2× the
-    * total core count) so the executor-side dedup/Bloom cogroup is
-    * never parallelism-capped by the bucket count. The floor is
+    * URLs — a bounded per-task batch-dedup map and a bounded seen-key
+    * scan per bucket — floored at `minParallel` (pass ~2× the total
+    * core count) so the bucket-keyed batch dedup is never
+    * parallelism-capped by the bucket count. The floor is
     * cluster-relative, not a constant: buckets cost files-per-wave, so
     * a 32-core box wants ~64, a 1000-executor cluster wants thousands,
     * and beyond that volume takes over (10^10 URLs → 10,000 buckets of

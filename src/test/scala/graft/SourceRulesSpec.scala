@@ -142,7 +142,8 @@ class SourceRulesSpec extends AnyFunSuite {
     assert(Synth.bucketsFor(6440000L) == 256) // 6.44M scaling world
     assert(Synth.bucketsFor(1000000000L) == 1000) // 1e9 → volume wins
     assert(Synth.bucketsFor(10000000000L) == 10000) // the 1e10 design point
-    // per-bucket bloom capacity (2× keys/bucket) stays ≤ ~2e6 at any scale
+    // keys per bucket (2× headroom) bound the per-task dedup map and each
+    // bucket's seen scan at any scale
     Seq(6440000L, 1000000000L, 10000000000L).foreach { urls =>
       val perBucket = urls / Synth.bucketsFor(urls) * 2
       assert(perBucket <= 8L * 1000 * 1000, s"$urls urls → $perBucket keys/bucket")
