@@ -1,6 +1,6 @@
 package graft.crawl
 
-import graft.core.{functions => gf}
+import graft.core.{Checkpoint, functions => gf}
 import graft.model._
 import graft.ops.ImageKernels
 import graft.store.SnapshotStore
@@ -187,7 +187,7 @@ final class CrawlEngine(spark: SparkSession, cfg: Synth.Config, store: SnapshotS
     // including the previous carry's frames, which `next` replaced
     // (safe only now: every consumer of them has run)
     (Seq(gatedDelta, plannedWide, fetched._1) ++ carry.frames)
-      .foreach(CrawlEngine.freeCheckpoint)
+      .foreach(Checkpoint.free)
     (metrics, next)
   }
 
@@ -880,7 +880,7 @@ final class CrawlEngine(spark: SparkSession, cfg: Synth.Config, store: SnapshotS
           val (m, next) = runWave(wave, carry)
           (ms :+ m, next)
       }
-    last.frames.foreach(CrawlEngine.freeCheckpoint)
+    last.frames.foreach(Checkpoint.free)
     metrics
   }
 
@@ -928,18 +928,6 @@ object CrawlEngine {
       WaveCarry(None, None, all, all)
     }
   }
-
-  /** Free the storage blocks behind a localCheckpoint'd frame.
-    * `Dataset.unpersist()` only clears CacheManager entries; a local
-    * checkpoint lives as RDD blocks under a `LogicalRDD` leaf, so the
-    * blocks must be unpersisted on the RDD itself. Safe only once no
-    * consumer of the frame will run again (recompute is impossible —
-    * the lineage was truncated). */
-  def freeCheckpoint(ds: org.apache.spark.sql.Dataset[_]): Unit =
-    ds.queryExecution.analyzed.collectLeaves().foreach {
-      case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd.unpersist(false)
-      case _ => ()
-    }
 
   /** The read side of one wave, shared by its stages: the broadcast
     * config, the one-row parameter table, and the input tables —

@@ -1,7 +1,13 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import graft.core.Checkpoint
+import org.apache.spark.sql.{DataFrame, Encoders, Observation, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
+import org.apache.spark.storage.StorageLevel
+import org.apache.spark.unsafe.types.UTF8String
+import scala.annotation.tailrec
+import scala.collection.mutable
 
 /** Corpus-scale deduplication operators for training-data pipelines.
   *
@@ -118,64 +124,134 @@ object Dedup {
   /** Duplicate-GROUP resolution: connected components over a candidate-
     * pair graph → (doc, component_id = min doc id reachable), the step
     * that turns pair lists (LSH/Jaccard output) into keep/drop sets.
-    * Iterative min-label propagation: each round joins every node's
-    * label across its edges and keeps the minimum; rounds are plain
-    * shuffle-on-key joins/aggregations (no driver state beyond the
-    * converged? counter), and convergence takes ≤ graph-diameter
-    * rounds — near-dup clusters are shallow (dup clusters of size
-    * 2-10), so 2-3 rounds in practice. At 10^10-doc scale the same
-    * dataflow upgrades to alternating large-star/small-star (O(log n)
-    * rounds, identical per-round shape); `maxIter` bounds the loop
-    * either way. */
+    * Contract, then propagate:
+    *  1. one count sizes the graph at ~500k edges per partition, capped
+    *     at `defaultParallelism` — a near-dup graph of thousands of edges
+    *     is ONE partition;
+    *  2. one `mapPartitions` contracts each partition's edges with
+    *     [[unionFind]] into (node, root = least node of its local
+    *     component);
+    *  3. one aggregation keeps each node's least root, and an Observation
+    *     on the same job counts the nodes given more than one root. When
+    *     none is, the roots are final: local components that share a
+    *     node share its one root, so by induction every local component
+    *     of a component carries the component's minimum. One partition
+    *     always ends here, after a count and one job, at any diameter;
+    *  4. otherwise min-label propagation ([[ccRound]]) runs over the
+    *     residual star edges (node, root), node ≠ root, one job per round.
+    *     It needs up to the residual graph's diameter in rounds, and past
+    *     `maxIter` it refuses to answer rather than return wrong labels —
+    *     the one size limit left, reachable only above one partition.
+    *     Alternating large-star/small-star (Kiveris et al., SoCC 2014:
+    *     O(log n) rounds, same per-round shape) is its upgrade.
+    * Ids are bigint, int or (binary-collated) string columns. A pair
+    * input the caller cached keeps its cache; an uncached one is cached
+    * for the call, which reads it twice. */
   def connectedComponents(pairs: DataFrame, idA: String = "id_a",
                           idB: String = "id_b", maxIter: Int = 20): DataFrame = {
-    val spark = pairs.sparkSession
-    // one action materializes the (possibly expensive) upstream pair
-    // chain AND sizes the iteration: every later round runs over the
-    // checkpointed label set at a partition count matched to the graph
-    // (~500k edges/partition), not the session shuffle default — for
-    // near-dup graphs (thousands of edges) that is ONE partition, so a
-    // propagation round is a single local task instead of 32 scheduled
-    // shuffles
-    // the pair set feeds BOTH union legs below; persist + eager fill so
-    // the (possibly expensive) upstream candidate chain runs once, not
-    // once per leg (the legs are stages of one job and would otherwise
-    // race on a cold cache — see ngramJaccardPairs)
-    val pairsC = pairs.persist()
-    pairsC.count()
-    val edges = pairsC.select(col(idA).as("a"), col(idB).as("b"))
-      .unionByName(pairsC.select(col(idB).as("a"), col(idA).as("b")))
-      .distinct().localCheckpoint()
-    val nEdges = edges.count()
-    pairsC.unpersist() // edges is materialized; the pair cache is done
-    val parts = math.max(1, math.min(spark.sparkContext.defaultParallelism,
-      (nEdges / 500000L).toInt))
-    val edgesP = (if (parts == 1) edges.coalesce(1)
-                  else edges.repartition(parts, col("b"))).cache()
-    // seed with min(self, direct neighbors) — one aggregation instead
-    // of a distinct, and it fully converges pair/clique components (the
-    // common near-dup cluster shape), so those graphs finish after one
-    // convergence check instead of a propagation round + check
-    var labels = edgesP.groupBy(col("a").as("node"))
-      .agg(least(col("a"), min(col("b"))).as("label"))
-      .repartition(parts, col("node")).localCheckpoint()
-    var changed = 1L
-    var it = 0
-    while (changed > 0 && it < maxIter) {
-      // each round is ONE job: the eager localCheckpoint materializes
-      // the round (cutting the recompute lineage) and fills the
-      // Observation the convergence test reads — no separate
-      // driver-blocking count() per round
-      val (round, obs) = ccRound(edgesP, labels, parts)
-      labels = round.localCheckpoint()
-      changed = obs.get("changed").asInstanceOf[Long]
-      it += 1
+    val own = pairs.storageLevel == StorageLevel.NONE
+    if (own) pairs.persist()
+    try {
+      // one job: Dataset.count() under AQE runs the cache fill, a map
+      // stage and the final sum as three
+      val nEdges = pairs.select(col(idA)).queryExecution.toRdd.count()
+      val parts = math.max(1, math.min(pairs.sparkSession.sparkContext.defaultParallelism,
+        (nEdges / 500000L).toInt))
+      componentsIn(pairs, parts, idA, idB, maxIter)._1
+    } finally if (own) pairs.unpersist()
+  }
+
+  /** [[connectedComponents]] over `parts` partitions, returning the
+    * labels and the number of propagation rounds run (0 when the
+    * contraction alone was final). Exposed for tests, which force
+    * `parts` to reach the propagation path on small graphs. */
+  private[graft] def componentsIn(pairs: DataFrame, parts: Int, idA: String = "id_a",
+                                  idB: String = "id_b", maxIter: Int = 20): (DataFrame, Int) = {
+    val idType = pairs.schema(idA).dataType
+    val ord = idOrdering(idType)
+    val edges = pairs.select(col(idA).as("a"), col(idB).cast(idType).as("b"))
+    // one partition keeps the planner's SinglePartition through the
+    // mapPartitions, so the aggregation below needs no exchange
+    val placed = if (parts == 1) edges.coalesce(1) else edges.repartition(parts, col("a"))
+    val rootSchema = StructType(Seq(
+      StructField("node", idType, nullable = false), StructField("root", idType, nullable = false)))
+    val roots = placed.mapPartitions(rows =>
+      unionFind(rows.map(r => (r.get(0), r.get(1))))(ord).map { case (n, r) => Row(n, r) }
+    )(Encoders.row(rootSchema))
+    val obs = Observation()
+    val contracted = roots.groupBy("node")
+      .agg(min("root").as("label"), max("root").as("hi"))
+      .observe(obs, count(when(col("label") =!= col("hi"), 1)).as("split"))
+      .select("node", "label")
+      .localCheckpoint()
+    if (obs.get("split") == 0L) (asComponents(contracted), 0)
+    else {
+      val star = roots.filter(col("node") =!= col("root"))
+      val edgesP = star.select(col("node").as("a"), col("root").as("b"))
+        .unionByName(star.select(col("root").as("a"), col("node").as("b")))
+        .repartition(parts, col("b")).cache()
+      var labels = contracted
+      var changed = 1L
+      var it = 0
+      while (changed > 0 && it < maxIter) {
+        // each round is ONE job: the eager localCheckpoint materializes
+        // the round (cutting the recompute lineage) and fills the
+        // Observation the convergence test reads — no separate
+        // driver-blocking count() per round
+        val (round, roundObs) = ccRound(edgesP, labels, parts)
+        val next = round.localCheckpoint()
+        Checkpoint.free(labels) // replaced; `next` no longer reads it
+        labels = next
+        changed = roundObs.get("changed").asInstanceOf[Long]
+        it += 1
+      }
+      edgesP.unpersist()
+      if (changed > 0) Checkpoint.free(labels)
+      require(changed == 0,
+        s"connectedComponents did not converge in $maxIter rounds " +
+          s"(graph diameter exceeds the bound) — labels would be wrong")
+      (asComponents(labels), it)
     }
-    require(changed == 0,
-      s"connectedComponents did not converge in $maxIter rounds " +
-        s"(graph diameter exceeds the bound) — labels would be wrong")
-    edgesP.unpersist()
+  }
+
+  private def asComponents(labels: DataFrame): DataFrame =
     labels.select(col("node").as("doc"), col("label").as("component_id"))
+
+  /** Spark's `min` order on the external values of an id column:
+    * numeric for integral ids, and for strings the binary order of
+    * `UTF8String` (code-point order) — `String.compareTo` compares
+    * UTF-16 units and puts non-BMP characters before U+E000-U+FFFF. */
+  private[graft] def idOrdering(idType: DataType): Ordering[Any] = idType match {
+    case LongType => Ordering.by[Any, Long](_.asInstanceOf[Long])
+    case IntegerType => Ordering.by[Any, Int](_.asInstanceOf[Int])
+    case StringType =>
+      Ordering.by[Any, UTF8String](s => UTF8String.fromString(s.asInstanceOf[String]))
+    case other => throw new IllegalArgumentException(
+      s"connectedComponents: id type $other is not bigint, int or string")
+  }
+
+  /** Union-find over one partition's edges → (node, root) for every
+    * node seen, root = the least node of its component under `ord`.
+    * A union links the greater root under the lesser, so a root is
+    * always its component's minimum; path halving keeps finds short.
+    * Pure: no Spark state, shared by the operator and its tests. */
+  def unionFind[T](edges: Iterator[(T, T)])(implicit ord: Ordering[T]): Iterator[(T, T)] = {
+    val parent = mutable.HashMap.empty[T, T]
+    @tailrec def find(n: T): T = {
+      val p = parent.getOrElseUpdate(n, n)
+      if (p == n) n
+      else {
+        val g = parent(p)
+        parent(n) = g
+        find(g)
+      }
+    }
+    edges.foreach { case (a, b) =>
+      val (ra, rb) = (find(a), find(b))
+      if (ord.lt(ra, rb)) parent(rb) = ra
+      else if (ord.lt(rb, ra)) parent(ra) = rb
+    }
+    parent.keys.toVector.iterator.map(n => (n, find(n)))
   }
 
   /** One min-label propagation round: neighbors' labels equi-joined in,
@@ -185,13 +261,13 @@ object Dedup {
     * #nodes whose label fell), so a round costs exactly one job and no
     * extra driver action. Exposed for PlanSpec's shape assertions. */
   private[graft] def ccRound(edgesP: DataFrame, labels: DataFrame, parts: Int)
-  : (DataFrame, org.apache.spark.sql.Observation) = {
+  : (DataFrame, Observation) = {
     val prop = edgesP.join(labels, edgesP("b") === labels("node"))
       .select(edgesP("a").as("node"), col("label"),
         lit(null).cast("long").as("prev_tag"))
     val merged = labels.select(col("node"), col("label"), lit(1L).as("prev_tag"))
       .unionByName(prop)
-    val obs = org.apache.spark.sql.Observation()
+    val obs = Observation()
     val next = merged.groupBy("node")
       .agg(min("label").as("label"),
         min(when(col("prev_tag").isNotNull, col("label"))).as("prev"))

@@ -52,7 +52,7 @@ class CrawlEngineSpec extends AnyFunSuite {
     * carry from a cold start, then free the last carry. */
   def runWaves(e: CrawlEngine, c: Synth.Config, n: Int): Unit =
     (0 until n).foldLeft(CrawlEngine.WaveCarry.cold(c.nBuckets))((carry, w) =>
-      e.runWave(w, carry)._2).frames.foreach(CrawlEngine.freeCheckpoint)
+      e.runWave(w, carry)._2).frames.foreach(graft.core.Checkpoint.free)
 
   def commitMetrics(store: SnapshotStore, w: Int): org.json4s.JValue =
     org.json4s.jackson.JsonMethods.parse(Files.readString(
