@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Round-6 optimization measurement harness (guide §1). NOT part of the
   * frozen driver contract (Bench.scala is the artifact of record — this
   * main never replaces it): it exists to (a) dump `.explain("formatted")`
@@ -21,15 +19,7 @@ object BenchExtra {
     val mode = args.headOption.getOrElse("time")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-bench-extra")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = LocalSession(cpus, "graft-bench-extra", "ERROR")
 
     val all = SparkEntry.queries
     def selected(rest: Seq[String]): Seq[String] =

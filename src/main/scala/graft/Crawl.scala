@@ -3,7 +3,6 @@ package graft
 import graft.crawl.CrawlEngine
 import graft.store.SnapshotStore
 import graft.synth.Synth
-import org.apache.spark.sql.SparkSession
 
 /** spark-submit entry point for the crawl itself:
   *
@@ -20,16 +19,7 @@ object Crawl {
     val perWave = args.lift(2).map(_.toInt).getOrElse(50)
     val nWaves = args.lift(3).map(_.toInt).getOrElse(3)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-crawl")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled",
-        sys.env.getOrElse("GRAFT_AQE", "true"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession(cpus, "graft-crawl", "WARN")
 
     val cfg = Synth.Config(nHosts = nHosts, urlsPerHostPerWave = perWave, nWaves = nWaves)
     val store = new SnapshotStore(storeDir)

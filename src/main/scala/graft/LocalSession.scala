@@ -1,0 +1,25 @@
+package graft
+
+import org.apache.spark.sql.SparkSession
+
+/** The one local session builder of the repo's own mains (`Crawl`,
+  * `BenchExtra`, `ScalingChild`): `local[cpus]` with as many shuffle
+  * partitions, AQE on, UTC, no UI. `conf` pairs override or extend
+  * these defaults. `Bench` and `Verify` keep their own (frozen)
+  * builders of the same shape. */
+object LocalSession {
+  def apply(cpus: String, appName: String, logLevel: String,
+            conf: (String, String)*): SparkSession = {
+    val b = SparkSession.builder()
+      .master(s"local[$cpus]")
+      .appName(appName)
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.adaptive.enabled", "true")
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+    conf.foreach { case (k, v) => b.config(k, v) }
+    val spark = b.getOrCreate()
+    spark.sparkContext.setLogLevel(logLevel)
+    spark
+  }
+}

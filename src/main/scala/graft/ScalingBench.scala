@@ -103,31 +103,15 @@ object ScalingChild {
   private def session(cpus: Int): SparkSession = {
     val localDir = java.nio.file.Files
       .createTempDirectory(java.nio.file.Paths.get("/dev/shm"), "spark-local")
-    val b = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName(s"graft-scaling-$cpus")
-      .config("spark.local.dir", localDir.toString) // tmpfs shuffle
-      .config("spark.sql.shuffle.partitions", cpus.toString)
+    LocalSession(cpus.toString, s"graft-scaling-$cpus", "ERROR",
+      "spark.local.dir" -> localDir.toString, // tmpfs shuffle
       // AQE off IN THE SCALING HARNESS ONLY (window-8 probe: −15%
       // task-CPU, −50% task-GC, 69 fewer stages at 8c): the synthetic
       // scaling world is uniform by construction, so AQE's per-stage
       // re-planning is pure driver-serial cost here. The ENGINE default
       // (Bench, Verify, every query gate) keeps AQE on — real corpora
       // are skewed and AQE's skew-join/coalesce earn their planning.
-      .config("spark.sql.adaptive.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-    // probe hook: GRAFT_SPARK_EXTRA="k=v;k2=v2" injects session confs
-    // (A/B attribution of driver-side planning costs; production
-    // defaults above stay authoritative)
-    sys.env.get("GRAFT_SPARK_EXTRA").foreach(_.split(';').filter(_.nonEmpty)
-      .foreach { kv =>
-        val Array(k, v) = kv.split("=", 2)
-        b.config(k, v)
-      })
-    val s = b.getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
+      "spark.sql.adaptive.enabled" -> "false")
   }
 
   /** Run one full crawl; returns (seconds, urlsDiscovered, fetched). */

@@ -20,7 +20,6 @@ object UrlCodegen {
   def isValidUrl(u: UTF8String): Boolean = UrlKernels.isValidUrl(u.toString)
   def checkIsArticle(u: UTF8String): Boolean =
     UrlKernels.checkIsArticle(u.toString)
-  def urlHash64(u: UTF8String): Long = UrlKernels.urlHash64(u.toString)
 }
 
 /** `normalize_url(url)` — the frontier dedup key (url_utils.py:9-56).
@@ -88,10 +87,6 @@ object functions {
   def check_is_article(c: Column): Column =
     ExpressionUtils.column(CheckIsArticle(ExpressionUtils.expression(c)))
 
-  /** Frontier bucket id: pmod(xxhash64(canonical_host), nBuckets). */
-  def host_bucket(url: Column, nBuckets: Int): Column =
-    pmod(xxhash64(canonical_host(url)), lit(nBuckets.toLong)).cast("int")
-
   /** JVM-side mirror of `pmod(xxhash64(host), nBuckets)` — bit-identical
     * to the Catalyst expression; used to pre-compute the wave's touched
     * buckets from the (host-cardinality) due set for scan pruning. */
@@ -131,19 +126,15 @@ object functions {
   /** Deterministic cross-host mixing key replacing ORDER BY RANDOM()
     * (extraction.py:888): seeded hash order, reproducible across engines
     * and partitionings. md5-hex form — kept for the SQL-expressible
-    * oracle queries (DuckDB has md5); the engine hot path uses
-    * [[mix_key64]]. */
+    * oracle queries (DuckDB has md5); the engine's ranking uses the
+    * 64-bit `mix` column of `CrawlEngine.rankPerHost`. */
   def mix_key(seed: Long, c: Column): Column =
     md5(concat_ws("|", lit(seed.toString), c.cast("string")))
 
-  /** 64-bit seeded mixing key for the engine's ranking shuffle — an
-    * 8-byte long instead of a 32-char md5 hex string on the hottest
-    * sort path (≈4× narrower shuffle rows). Spark's xxhash64 chains
-    * children from seed 42: hash(str, hash(seedLong, 42)). */
-  def mix_key64(seed: Long, c: Column): Column = xxhash64(lit(seed), c)
-
-  /** JVM-side mirror of [[mix_key64]] for the single-threaded oracle —
-    * bit-identical to the Catalyst expression. */
+  /** JVM-side mirror of `CrawlEngine.rankPerHost`'s `mix` column,
+    * `xxhash64(seed, s)`, for the single-threaded oracle — bit-identical
+    * to the Catalyst expression. Spark's xxhash64 chains children from
+    * seed 42: hash(str, hash(seedLong, 42)). */
   def mixKey64(seed: Long, s: String): Long = {
     import org.apache.spark.sql.catalyst.expressions.XxHash64Function
     import org.apache.spark.sql.types.LongType

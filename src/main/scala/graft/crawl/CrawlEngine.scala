@@ -150,8 +150,8 @@ final class CrawlEngine(spark: SparkSession, cfg: Synth.Config, store: SnapshotS
         append = false, lineage = "seeded N:M scope table"))
     // ONE Spark job seeds all eight snapshots (tagged union, one parquet
     // pass): per-job launch latency is the driver-serial part of init,
-    // so 8 concurrent jobs → 1 job attacks the north-rule serial term
-    parts.foreach(p => store.writeEmpty(p.df.schema, p.table, wave = -1))
+    // so 8 concurrent jobs → 1 job attacks the north-rule serial term.
+    // This first write pins each table's schema.
     store.writeFused(parts, wave = -1)
   }
 
@@ -181,7 +181,7 @@ final class CrawlEngine(spark: SparkSession, cfg: Synth.Config, store: SnapshotS
     val fetched = fetch(in, plannedWide)
     val (metrics, next) =
       persistWave(in, due, gatedDelta, discovered, plannedWide, fetched, discObs)
-    due.unpersist(); batch.unpersist(); availHosts.unpersist()
+    due.unpersist(); batch.unpersist()
     // checkpointed frames hold RDD blocks, not CacheManager entries —
     // Dataset.unpersist() would be a no-op on them; free the blocks,
     // including the previous carry's frames, which `next` replaced
@@ -249,7 +249,6 @@ final class CrawlEngine(spark: SparkSession, cfg: Synth.Config, store: SnapshotS
       .filter(st => Politeness.available(st, wave, waveSec))
       .map(st => (st.host, st.tokens_per_wave))
       .toDF("p_host", "tokens")
-      .cache() // one reader (the ranking join); the job-budget test pins this job shape
     (due, availHosts)
   }
 
@@ -553,28 +552,9 @@ final class CrawlEngine(spark: SparkSession, cfg: Synth.Config, store: SnapshotS
     import scala.concurrent.{Await, Future}
     import scala.concurrent.ExecutionContext.Implicits.global
     import scala.concurrent.duration.Duration
-    // overlap: the source-state rewrite depends only on the gate chain
-    // (already checkpointed) and the due facts — NOT on the fetch — so
-    // its materialization can back-fill idle cores while the rank/fetch/
-    // results action runs, instead of serializing inside the fused state
-    // write (r6 event log: the two lazy state-leg materializations were
-    // ~0.5 + 0.4 s on the fused write's critical path). Concurrent
-    // materialization with the fused write's own scan is safe: local-
-    // checkpoint block writes are idempotent and RDDCheckpointData is
-    // synchronized; the worst case recomputes a host-cardinality leg.
-    val fStateWarm = Future(
-      stateNextCk.foreachPartition((_: Iterator[org.apache.spark.sql.Row]) => ()))
     store.appendDelta(resultsToWrite, "results", wave, lineage = s"wave $wave delta")
-    // bucketed writes hash the bucket key into ~2×cores partitions, NOT
-    // one partition per bucket: physicalWrite's partitionBy still emits
-    // exactly one file per bucket (a bucket hashes to one task), so the
-    // per-bucket manifest and pruning are unchanged, while task-launch
-    // and scheduling overhead stay proportional to the CLUSTER, not the
-    // bucket count (at 10^4 buckets a per-bucket task would put ~10^4
-    // task launches per write on the driver's critical path).
-    val writeParts = math.min(nb, spark.sparkContext.defaultParallelism * 2)
     val fFrontier = Future(store.appendDelta(
-      frontierDelta.repartition(writeParts, col("host_bucket")),
+      frontierDelta.repartition(writeParts(spark, nb), col("host_bucket")),
       "frontier", wave, bucketCol = Some("host_bucket"),
       lineage = s"wave $wave delta (discovered + outcomes)"))
     // the four host-or-less-cardinality state tables commit in ONE
@@ -588,11 +568,6 @@ final class CrawlEngine(spark: SparkSession, cfg: Synth.Config, store: SnapshotS
     // lazy localCheckpoint, same deal as stateNextCk: materialized by
     // the fused write, reused as next wave's politeness (the carry)
     val politenessNextCk = politenessNext.localCheckpoint(false)
-    // warm the politeness rewrite concurrently with the frontier
-    // future (it needs the fetch results, so it can only start now);
-    // same idempotent-materialization rationale as fStateWarm above
-    val fPolWarm = Future(
-      politenessNextCk.foreachPartition((_: Iterator[org.apache.spark.sql.Row]) => ()))
     val polObs = Observation()
     val fStateTables = Future(store.writeFused(Seq(
       FusedPart("politeness", politenessNextCk
@@ -606,8 +581,7 @@ final class CrawlEngine(spark: SparkSession, cfg: Synth.Config, store: SnapshotS
         append = true, lineage = s"wave $wave method telemetry"),
       FusedPart("telemetry_http", httpTelemetry.coalesce(hostFiles),
         append = true, lineage = s"wave $wave http outcomes")), wave))
-    Seq(fFrontier, fStateTables, fStateWarm, fPolWarm)
-      .foreach(Await.result(_, Duration.Inf))
+    Seq(fFrontier, fStateTables).foreach(Await.result(_, Duration.Inf))
 
     // the fused write materialized both checkpoints: they become next
     // wave's state reads, and the next wave's bucket sets ride out of
@@ -629,15 +603,8 @@ final class CrawlEngine(spark: SparkSession, cfg: Synth.Config, store: SnapshotS
     // compacts once via [[CrawlEngine.compactForRead]] instead, so the
     // read side never pays a full-log scan per query.
     val finalWave = wave + 1 == cfg.nWaves
-    if (cfg.compactEvery > 0 && (wave + 1) % cfg.compactEvery == 0 && !finalWave) {
-      // compacted rows become snapshot rows (is_update=false): the
-      // plan pre-filter then excludes terminal rows from the merge
-      store.writeBucketed(
-        CrawlEngine.frontierCurrent(spark, store)
-          .withColumn("is_update", lit(false))
-          .repartition(writeParts, col("host_bucket")),
-        "frontier", wave, "host_bucket", lineage = s"compaction after wave $wave")
-    }
+    if (cfg.compactEvery > 0 && (wave + 1) % cfg.compactEvery == 0 && !finalWave)
+      compactFrontier(spark, store, nb, wave, s"compaction after wave $wave")
     perSource.unpersist()
     (metrics, next)
   }
@@ -1067,13 +1034,28 @@ object CrawlEngine {
     val hasUpdates = store.read(spark, "frontier")
       .filter(col("is_update")).limit(1).count() > 0
     if (!hasUpdates) return // already one row per URL
-    val writeParts = math.min(nBuckets, spark.sparkContext.defaultParallelism * 2)
-    store.writeBucketed(
-      frontierCurrent(spark, store)
-        .repartition(writeParts, col("host_bucket")),
-      "frontier", store.lastCommittedWave(), "host_bucket",
-      lineage = "open-for-read compaction")
+    compactFrontier(spark, store, nBuckets, store.lastCommittedWave(), "open-for-read compaction")
   }
+
+  /** Bucketed frontier writes hash the bucket key into ~2×cores
+    * partitions, NOT one partition per bucket: the store's partitionBy
+    * still emits exactly one file per bucket (a bucket hashes to one
+    * task), so the per-bucket manifest and pruning are unchanged, while
+    * task-launch and scheduling overhead stay proportional to the
+    * CLUSTER, not the bucket count (at 10^4 buckets a per-bucket task
+    * would put ~10^4 task launches per write on the driver's critical
+    * path). */
+  private def writeParts(spark: SparkSession, nBuckets: Int): Int =
+    math.min(nBuckets, spark.sparkContext.defaultParallelism * 2)
+
+  /** Rewrite the frontier log as one row per URL, a full bucketed
+    * snapshot. Compacted rows are snapshot rows (is_update = false, set
+    * by [[frontierCurrent]]): the plan pre-filter then excludes terminal
+    * rows from the merge. */
+  private def compactFrontier(spark: SparkSession, store: SnapshotStore, nBuckets: Int,
+                              wave: Int, lineage: String): Unit =
+    store.write(frontierCurrent(spark, store).repartition(writeParts(spark, nBuckets),
+      col("host_bucket")), "frontier", wave, Some("host_bucket"), lineage)
 
   /** The frontier's current state (one row per URL) — queries/tests.
     * The update-log fold, NOT a full-log mergeLog: merge-on-read cost

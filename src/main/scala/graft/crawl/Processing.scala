@@ -22,8 +22,6 @@ import org.apache.spark.sql.functions._
   * FIFO the way any sharded queue does. */
 object Processing {
 
-  val Stages: Seq[String] = Seq("extracted", "cleaned", "labeled")
-
   /** Run `cycles` processing cycles over the fetched results; returns
     * (norm_url, ord, article_status). `ord` is the processing order
     * (crawl order: wave, host, rank — the reference drains oldest

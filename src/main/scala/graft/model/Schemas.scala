@@ -137,14 +137,6 @@ case class PolitenessState(
     bot_encounters: Int,
     forbidden_count: Int) // 403 tracker (auto-pause at 2, extraction.py:1419-1450)
 
-/** RFC 9309-style robots rule (graft-added; absent in reference). */
-case class RobotsRule(
-    host: String,
-    rule_order: Int,
-    allow: Boolean,
-    path_prefix: String,
-    crawl_delay_s: Double)
-
 /** Per-wave metrics row (reference telemetry analogue). */
 case class WaveMetrics(
     wave: Int,

@@ -40,8 +40,8 @@ object ImageOps {
 
   /** One row with BOTH feature sets — the decode-once form: features
     * (dims, luma, phash) and the thumbnail derive from a single ImageIO
-    * decode, where running [[decodeFeatures]] and [[thumbnails]]
-    * separately would decode every image twice. */
+    * decode, where running the per-image [[decodeOne]] and
+    * [[thumbOne]] kernels separately would decode every image twice. */
   final case class FullDecoded(image_id: String, w: Int, h: Int, fmt: String,
                                mean_luma: Double, phash: Long,
                                thumb_w: Int, thumb_h: Int,
@@ -80,21 +80,5 @@ object ImageOps {
       i += 1
     }
     math.floor(luma / (img.getWidth * img.getHeight) * 1e4) / 1e4
-  }
-
-  /** Decode + feature-extract over a (image_id, bytes, fmt) projection. */
-  def decodeFeatures(images: DataFrame): Dataset[Decoded] = {
-    val spark = images.sparkSession
-    import spark.implicits._
-    images.select("image_id", "bytes", "fmt").as[ImgIn]
-      .mapPartitions(_.flatMap(r => decodeOne(r.image_id, r.bytes, r.fmt)))
-  }
-
-  /** Deterministic block-mean resize → re-encoded PNG thumbnail. */
-  def thumbnails(images: DataFrame, tw: Int = 8, th: Int = 8): Dataset[Thumb] = {
-    val spark = images.sparkSession
-    import spark.implicits._
-    images.select("image_id", "bytes").as[(String, Array[Byte])]
-      .mapPartitions(_.flatMap { case (id, bytes) => thumbOne(id, bytes, tw, th) })
   }
 }

@@ -18,6 +18,12 @@ import scala.util.Using
   *   root/<table>/_schema.json    (DDL for empty/explicit-file reads)
   *   root/_commits/wave-%05d.json (cross-table wave manifest)
   *
+  * Every write form ([[write]], [[appendDelta]], [[writeEmpty]] and each
+  * part of [[writeFused]]) follows one schema rule (the first write pins
+  * the table's schema, later writes must match it) and ends in one
+  * snapshot commit (next id, prior files when appending, manifest
+  * rename) — the store's only write boundaries.
+  *
   * Delta commits: [[appendDelta]] writes only the wave's new rows and
   * the new manifest references the previous snapshot's files for
   * untouched buckets — per-wave I/O is O(delta), not O(table). Reads
@@ -99,46 +105,89 @@ final class SnapshotStore(val root: String) {
     Some(Manifest(cur, snaps))
   }
 
+  private def manifest(table: String): Manifest =
+    parseManifest(table).getOrElse(Manifest(-1, Seq.empty))
+
   private def commitManifest(table: String, m: Manifest): Unit =
     atomicWrite(manifestPath(table), renderManifest(m))
 
   private def snapOf(table: String, id: Int): Snap =
-    parseManifest(table).flatMap(_.snaps.find(_.id == id))
+    manifest(table).snaps.find(_.id == id)
       .getOrElse(sys.error(s"no snapshot $id for table $table"))
+
+  /** The current snapshot, from one manifest parse. */
+  private def current(table: String): Snap = {
+    val m = manifest(table)
+    m.snaps.find(_.id == m.current).getOrElse(sys.error(s"no snapshot for table $table"))
+  }
+
+  /** Highest index `i` among `dir`'s entries named `<prefix><i><suffix>`, or -1. */
+  private def lastIndex(dir: Path, prefix: String, suffix: String = ""): Int =
+    if (!Files.exists(dir)) -1
+    else Using.resource(Files.list(dir)) { stream =>
+      stream.iterator().asScala.map(_.getFileName.toString)
+        .collect { case n if n.startsWith(prefix) && n.endsWith(suffix) =>
+          n.stripPrefix(prefix).stripSuffix(suffix).toInt }
+        .foldLeft(-1)(math.max)
+    }
 
   // ------------------------------------------------------------- writes
 
-  /** List the parquet files a physical write produced, grouped by
-    * `__pb=<bucket>` subdir (or -1 when unbucketed), as table-relative
-    * paths. */
-  private def listWritten(table: String, snapDir: Path): FileMap = {
-    if (!Files.exists(snapDir)) return Map.empty
+  /** The one schema rule of every write form: the first write of a table
+    * pins its schema, and every later write must match it (name + type,
+    * nullability-insensitive). Reads apply the pinned schema, so silent
+    * drift would silently drop or null columns. */
+  private def pinSchema(table: String, schema: StructType): Unit =
+    if (!Files.exists(schemaPath(table))) atomicWrite(schemaPath(table), schema.json)
+    else {
+      def shape(s: StructType) = s.fields.map(f => (f.name, f.dataType)).toSeq
+      val pinned = tableSchema(table)
+      require(shape(schema) == shape(pinned),
+        s"schema drift for table '$table': writing ${schema.simpleString}, " +
+          s"pinned ${pinned.simpleString}")
+    }
+
+  /** One past the highest snapshot id in `m`: the ids (and data dirs) of
+    * rolled-back snapshots are reused. */
+  private def nextId(m: Manifest): Int = m.snaps.map(_.id).foldLeft(-1)(math.max) + 1
+
+  /** The one snapshot commit: take the next id, carry the current
+    * snapshot's files when `append` (untouched buckets by reference),
+    * add `written` per bucket, and rename the manifest into place. */
+  private def commitSnap(table: String, wave: Int, lineage: String,
+                         written: FileMap, append: Boolean): Int = {
+    val m = manifest(table)
+    val id = nextId(m)
+    val prior: FileMap =
+      if (append) m.snaps.find(_.id == m.current).fold(Map.empty: FileMap)(_.files)
+      else Map.empty
+    val files = prior ++ written.map { case (b, fs) => b -> (prior.getOrElse(b, Seq.empty) ++ fs) }
+    commitManifest(table, Manifest(id, m.snaps :+ Snap(id, wave, lineage, files)))
+    id
+  }
+
+  /** The parquet files under `dir`, grouped by `__pb=<bucket>` subdir (or
+    * -1 when unbucketed), as paths relative to `table`'s dir. */
+  private def parquetUnder(dir: Path, table: String): FileMap = {
+    if (!Files.exists(dir)) return Map.empty
     val td = tableDir(table)
-    Using.resource(Files.walk(snapDir)) { stream =>
+    Using.resource(Files.walk(dir)) { stream =>
       stream.iterator().asScala
         .filter(p => p.getFileName.toString.endsWith(".parquet"))
         .toSeq
         .groupBy { p =>
-          val rel = snapDir.relativize(p).toString
+          val rel = dir.relativize(p).toString
           if (rel.startsWith("__pb=")) rel.substring(5, rel.indexOf('/')).toInt else -1
         }
         .map { case (b, ps) => b -> ps.map(p => td.relativize(p).toString).sorted }
     }
   }
 
-  private def physicalWrite(df: DataFrame, table: String, next: Int,
-                            bucketCol: Option[String]): FileMap = {
-    // the first write pins the table schema; every later write must
-    // match it (name + type, nullability-insensitive) — reads apply the
-    // pinned schema, so silent drift would silently drop/null columns
-    if (Files.exists(schemaPath(table))) {
-      def shape(s: StructType) = s.fields.map(f => (f.name, f.dataType)).toSeq
-      val pinned = tableSchema(table)
-      require(shape(df.schema) == shape(pinned),
-        s"schema drift for table '$table': writing ${df.schema.simpleString}, " +
-          s"pinned ${pinned.simpleString}")
-    }
-    val dir = tableDir(table).resolve(f"snap-$next%05d")
+  /** Write `df` into the data dir of `table`'s next snapshot (a table has
+    * one writer at a time, so [[commitSnap]] then takes that same id). */
+  private def physicalWrite(df: DataFrame, table: String, bucketCol: Option[String]): FileMap = {
+    pinSchema(table, df.schema)
+    val dir = tableDir(table).resolve(f"snap-${nextId(manifest(table))}%05d")
     bucketCol match {
       case Some(c) =>
         // duplicate the bucket column into the partition dir so the data
@@ -149,80 +198,51 @@ final class SnapshotStore(val root: String) {
       case None =>
         df.write.mode(SaveMode.Overwrite).parquet(dir.toString)
     }
-    if (!Files.exists(schemaPath(table)))
-      atomicWrite(schemaPath(table), df.schema.json)
-    listWritten(table, dir)
-  }
-
-  private def appendSnap(table: String, wave: Int, lineage: String,
-                         mkFiles: (Int, FileMap) => FileMap,
-                         df: DataFrame, bucketCol: Option[String]): Int = {
-    val m = parseManifest(table).getOrElse(Manifest(-1, Seq.empty))
-    val next = m.snaps.map(_.id).foldLeft(-1)(math.max) + 1
-    val written = physicalWrite(df, table, next, bucketCol)
-    val prior: FileMap =
-      if (m.current < 0) Map.empty else snapOf(table, m.current).files
-    val files = mkFiles(next, prior) match {
-      case f => f ++ written.map { case (b, fs) => b -> (f.getOrElse(b, Seq.empty) ++ fs) }
-    }
-    commitManifest(table, Manifest(next, m.snaps :+ Snap(next, wave, lineage, files)))
-    next
+    parquetUnder(dir, table)
   }
 
   /** Full snapshot: the new manifest references only this write's files
-    * (whole-table rewrite — host-cardinality state tables, compaction). */
-  def write(df: DataFrame, table: String, wave: Int, lineage: String = ""): Int =
-    appendSnap(table, wave, lineage, (_, _) => Map.empty, df, None)
+    * (whole-table rewrite — host-cardinality state tables, compaction),
+    * grouped per bucket when `bucketCol` is set. */
+  def write(df: DataFrame, table: String, wave: Int,
+            bucketCol: Option[String] = None, lineage: String = ""): Int =
+    commitSnap(table, wave, lineage, physicalWrite(df, table, bucketCol), append = false)
 
-  /** Register an EMPTY initial snapshot without launching a Spark job:
-    * pins the schema and commits a file-less manifest. Initializing the
+  /** Register an EMPTY snapshot without launching a Spark job: a schema
+    * check (or pin) plus a file-less manifest. Initializing the
     * append-only tables is pure driver-side metadata — an empty
     * DataFrame write would still pay a full job launch + commit
     * protocol per table. */
   def writeEmpty(schema: StructType, table: String, wave: Int,
                  lineage: String = ""): Int = {
-    if (!Files.exists(schemaPath(table)))
-      atomicWrite(schemaPath(table), schema.json)
-    val m = parseManifest(table).getOrElse(Manifest(-1, Seq.empty))
-    val next = m.snaps.map(_.id).foldLeft(-1)(math.max) + 1
-    commitManifest(table, Manifest(next, m.snaps :+ Snap(next, wave, lineage, Map.empty)))
-    next
+    pinSchema(table, schema)
+    commitSnap(table, wave, lineage, Map.empty, append = false)
   }
-
-  /** Full bucketed snapshot (initial load / log compaction). */
-  def writeBucketed(df: DataFrame, table: String, wave: Int,
-                    bucketCol: String, lineage: String = ""): Int =
-    appendSnap(table, wave, lineage, (_, _) => Map.empty, df, Some(bucketCol))
 
   /** Delta commit: append this write's files to the previous snapshot's
     * per-bucket lists; untouched buckets are carried by reference. */
   def appendDelta(df: DataFrame, table: String, wave: Int,
                   bucketCol: Option[String] = None, lineage: String = ""): Int =
-    appendSnap(table, wave, lineage, (_, prior) => prior, df, bucketCol)
+    commitSnap(table, wave, lineage, physicalWrite(df, table, bucketCol), append = true)
 
   /** Write several SMALL (host-or-less cardinality) tables' wave output
     * in ONE Spark job: each part's rows are wrapped in a per-table
     * struct column, tagged, unioned, and written once partitioned by
-    * the table tag — then each table's manifest registers just its own
-    * partition's files (as `../_fused/...` relative paths). Per-wave
-    * driver cost collapses from one job launch per state table to one
-    * total; reads stay per-table and column-pruned (a fused file's
-    * other-table struct columns are all-null and never deserialized,
-    * and the `__tbl` partition split means each listed file holds only
-    * its own table's rows). On crash rollback the orphaned fused files
-    * are simply no longer referenced by any manifest (data files are
-    * immutable; the manifest is the source of truth, as in Iceberg). */
+    * the table tag — then each table commits just its own partition's
+    * files (as `../_fused/...` relative paths). Per-wave driver cost
+    * collapses from one job launch per state table to one total; reads
+    * stay per-table and column-pruned (a fused file's other-table
+    * struct columns are all-null and never deserialized, and the
+    * `__tbl` partition split means each listed file holds only its own
+    * table's rows). Each part follows the same schema rule and snapshot
+    * commit as every other write. On crash rollback the orphaned fused
+    * files are simply no longer referenced by any manifest (data files
+    * are immutable; the manifest is the source of truth, as in
+    * Iceberg). */
   def writeFused(parts: Seq[FusedPart], wave: Int): Unit = {
-    import org.apache.spark.sql.functions.{col, lit, struct}
+    import org.apache.spark.sql.functions.{lit, struct}
     require(parts.nonEmpty, "writeFused needs at least one part")
-    def shape(s: StructType) = s.fields.map(f => (f.name, f.dataType)).toSeq
-    parts.foreach { p =>
-      require(Files.exists(schemaPath(p.table)),
-        s"fused write requires a pinned schema for '${p.table}' (init first)")
-      require(shape(p.df.schema) == shape(tableSchema(p.table)),
-        s"schema drift for table '${p.table}': writing ${p.df.schema.simpleString}, " +
-          s"pinned ${tableSchema(p.table).simpleString}")
-    }
+    parts.foreach(p => pinSchema(p.table, p.df.schema))
     val branches = parts.map { p =>
       val cols = parts.map { q =>
         if (q.table == p.table) struct(p.df.columns.map(col): _*).as(s"__c_${q.table}")
@@ -230,35 +250,13 @@ final class SnapshotStore(val root: String) {
       }
       p.df.select(lit(p.table).as("__tbl") +: cols: _*)
     }
-    val fused = branches.reduce(_ unionByName _)
     val fusedRoot = Paths.get(root, "_fused")
-    Files.createDirectories(fusedRoot)
-    val next = Using.resource(Files.list(fusedRoot)) { s =>
-      s.iterator().asScala.map(_.getFileName.toString)
-        .collect { case n if n.startsWith("snap-") => n.stripPrefix("snap-").toInt }
-        .foldLeft(-1)(math.max) + 1
-    }
-    val dir = fusedRoot.resolve(f"snap-$next%05d")
-    fused.write.mode(SaveMode.Overwrite).partitionBy("__tbl").parquet(dir.toString)
+    val dir = fusedRoot.resolve(f"snap-${lastIndex(fusedRoot, "snap-") + 1}%05d")
+    branches.reduce(_ unionByName _)
+      .write.mode(SaveMode.Overwrite).partitionBy("__tbl").parquet(dir.toString)
     parts.foreach { p =>
-      val sub = dir.resolve(s"__tbl=${p.table}")
-      val td = tableDir(p.table)
-      val written: Seq[String] =
-        if (!Files.exists(sub)) Seq.empty
-        else Using.resource(Files.walk(sub)) { st =>
-          st.iterator().asScala
-            .filter(_.getFileName.toString.endsWith(".parquet"))
-            .map(f => td.relativize(f).toString).toSeq.sorted
-        }
-      val m = parseManifest(p.table).getOrElse(Manifest(-1, Seq.empty))
-      val nid = m.snaps.map(_.id).foldLeft(-1)(math.max) + 1
-      val prior: FileMap =
-        if (!p.append || m.current < 0) Map.empty else snapOf(p.table, m.current).files
-      val files =
-        if (written.isEmpty) prior
-        else prior + (-1 -> (prior.getOrElse(-1, Seq.empty) ++ written))
-      commitManifest(p.table,
-        Manifest(nid, m.snaps :+ Snap(nid, wave, p.lineage, files)))
+      commitSnap(p.table, wave, p.lineage,
+        parquetUnder(dir.resolve(s"__tbl=${p.table}"), p.table), p.append)
     }
   }
 
@@ -291,22 +289,21 @@ final class SnapshotStore(val root: String) {
     reads.reduce(_ unionByName _)
   }
 
+  /** A snapshot's files grouped by bucket, as absolute paths. */
+  private def absolute(table: String, s: Snap): Map[Int, Seq[String]] = {
+    val td = tableDir(table)
+    s.files.map { case (b, fs) => b -> fs.map(f => td.resolve(f).toString) }
+  }
+
   def currentSnapshot(table: String): Option[Int] =
     parseManifest(table).map(_.current).filter(_ >= 0)
 
   /** All data files of the current snapshot, grouped by bucket
     * (absolute paths — PlanSpec pruning assertions read this). */
-  def currentFiles(table: String): Map[Int, Seq[String]] = {
-    val cur = currentSnapshot(table).getOrElse(sys.error(s"no snapshot for $table"))
-    val td = tableDir(table)
-    snapOf(table, cur).files.map { case (b, fs) =>
-      b -> fs.map(f => td.resolve(f).toString)
-    }
-  }
+  def currentFiles(table: String): Map[Int, Seq[String]] = absolute(table, current(table))
 
   def read(spark: SparkSession, table: String): DataFrame =
-    readSnapshot(spark, table,
-      currentSnapshot(table).getOrElse(sys.error(s"no snapshot for table $table")))
+    readFiles(spark, table, current(table).files.values.flatten.toSeq)
 
   /** Time-travel read of a pinned snapshot id (its full file manifest). */
   def readSnapshot(spark: SparkSession, table: String, id: Int): DataFrame =
@@ -314,17 +311,12 @@ final class SnapshotStore(val root: String) {
 
   /** Data files of a pinned snapshot, grouped by bucket (absolute
     * paths) — delta-size assertions diff consecutive pins. */
-  def snapshotFiles(table: String, id: Int): Map[Int, Seq[String]] = {
-    val td = tableDir(table)
-    snapOf(table, id).files.map { case (b, fs) =>
-      b -> fs.map(f => td.resolve(f).toString)
-    }
-  }
+  def snapshotFiles(table: String, id: Int): Map[Int, Seq[String]] =
+    absolute(table, snapOf(table, id))
 
   /** Bucket-pruned read: only the files of the requested buckets. */
   def readBuckets(spark: SparkSession, table: String, buckets: Seq[Int]): DataFrame = {
-    val cur = currentSnapshot(table).getOrElse(sys.error(s"no snapshot for $table"))
-    val files = snapOf(table, cur).files
+    val files = current(table).files
     readFiles(spark, table, buckets.distinct.flatMap(b => files.getOrElse(b, Seq.empty)))
   }
 
@@ -350,16 +342,7 @@ final class SnapshotStore(val root: String) {
   }
 
   /** Highest wave with a complete commit manifest, or -1. */
-  def lastCommittedWave(): Int = {
-    if (!Files.exists(commitsDir)) return -1
-    Using.resource(Files.list(commitsDir)) { stream =>
-      stream.iterator().asScala
-        .map(_.getFileName.toString)
-        .collect { case s if s.startsWith("wave-") && s.endsWith(".json") =>
-          s.stripPrefix("wave-").stripSuffix(".json").toInt }
-        .foldLeft(-1)(math.max)
-    }
-  }
+  def lastCommittedWave(): Int = lastIndex(commitsDir, "wave-", ".json")
 
   /** Snapshot pins recorded at a wave commit. */
   def wavePins(wave: Int): Map[String, Int] = {

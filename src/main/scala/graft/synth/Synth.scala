@@ -363,24 +363,6 @@ object Synth {
     else nowDay - (java.lang.Long.remainderUnsigned(m >>> 8, recencyDays.toLong)).toInt
   }
 
-  /** Robots rules (graft-added per north rule; RFC 9309 longest-match,
-    * equal-length ties favor allow). Every 13th host disallows /stories/
-    * entirely; all hosts disallow /private/; crawl_delay scales with
-    * hostIdx. */
-  def robots(spark: SparkSession, cfg: Config): Dataset[RobotsRule] = {
-    import spark.implicits._
-    spark.range(cfg.nHosts).flatMap { i =>
-      val idx = i.toInt
-      val h = hostName(idx)
-      val base = Seq(
-        RobotsRule(h, 0, allow = false, "/private/", (idx % 4) * 2.0),
-        RobotsRule(h, 1, allow = true, "/", (idx % 4) * 2.0))
-      if (idx % 13 == 12)
-        RobotsRule(h, 0, allow = false, "/stories/", (idx % 4) * 2.0) +: base
-      else base
-    }
-  }
-
   def crawlDelayOf(hostIdx: Int): Double = (hostIdx % 4) * 2.0
 
   /** Pure robots rule list for one host, sorted for longest-match with

@@ -77,7 +77,50 @@ class SnapshotStoreSpec extends AnyFunSuite {
       bucketCol = Some("host_bucket"))
     st.appendDelta(Seq((0, "b")).toDF("host_bucket", "v"), "t", 1,
       bucketCol = Some("host_bucket"))
-    st.writeBucketed(Seq((0, "merged")).toDF("host_bucket", "v"), "t", 1, "host_bucket")
+    st.write(Seq((0, "merged")).toDF("host_bucket", "v"), "t", 1, Some("host_bucket"))
     assert(st.read(spark, "t").collect().map(_.getString(1)).toSeq == Seq("merged"))
+  }
+
+  test("writeFused: replace and append parts, a first write pins, every form refuses drift") {
+    import SnapshotStore.FusedPart
+    import org.apache.spark.sql.types.{IntegerType, LongType, StringType, StructField, StructType}
+    val st = fresh()
+    def rows(t: String) = st.read(spark, t).collect().map(r => (r.getInt(0), r.getString(1))).toSet
+    // a fused FIRST write pins both tables' schemas (no pre-pin needed)
+    st.writeFused(Seq(
+      FusedPart("a", Seq((1, "x")).toDF("k", "v"), append = false),
+      FusedPart("b", Seq((2, "y")).toDF("k", "v"), append = true)), wave = 0)
+    assert(st.tableSchema("a").fieldNames.toSeq == Seq("k", "v"))
+    assert(st.tableSchema("b").fieldNames.toSeq == Seq("k", "v"))
+    assert(st.currentSnapshot("a").contains(0) && st.currentSnapshot("b").contains(0))
+    st.writeFused(Seq(
+      FusedPart("a", Seq((3, "z")).toDF("k", "v"), append = false),
+      FusedPart("b", Seq((4, "w")).toDF("k", "v"), append = true)), wave = 1)
+    // replace part: the prior files are dropped; append part: carried
+    assert(rows("a") == Set((3, "z")))
+    assert(rows("b") == Set((2, "y"), (4, "w")))
+    val b0 = st.snapshotFiles("b", 0).values.flatten.toSet
+    val b1 = st.snapshotFiles("b", 1).values.flatten.toSet
+    assert(b0.subsetOf(b1) && b1.size == b0.size + 1)
+    assert(st.snapshotFiles("a", 0).values.flatten.toSet
+      .intersect(st.snapshotFiles("a", 1).values.flatten.toSet).isEmpty)
+    // a drifted schema (v: string → long) is refused by every write form,
+    // and a refused write commits no snapshot
+    val drift = Seq((5, 6L)).toDF("k", "v")
+    val driftSchema = StructType(Seq(StructField("k", IntegerType), StructField("v", LongType)))
+    def refused(write: => Any): Unit = {
+      val e = intercept[IllegalArgumentException](write)
+      assert(e.getMessage.contains("schema drift"), e.getMessage)
+    }
+    refused(st.write(drift, "a", 2))
+    refused(st.appendDelta(drift, "a", 2))
+    refused(st.writeEmpty(driftSchema, "a", 2))
+    refused(st.writeFused(Seq(FusedPart("b", drift, append = true)), wave = 2))
+    assert(st.currentSnapshot("a").contains(1) && st.currentSnapshot("b").contains(1))
+    assert(rows("a") == Set((3, "z")))
+    // the same shape (nullability aside) still passes every form
+    st.writeEmpty(StructType(Seq(StructField("k", IntegerType, nullable = false),
+      StructField("v", StringType))), "a", 2)
+    assert(st.read(spark, "a").count() == 0)
   }
 }
