@@ -6,7 +6,7 @@ import graft.ops.ImageKernels
 import graft.store.SnapshotStore
 import graft.synth.{Synth, SynthFunctions}
 import org.apache.spark.broadcast.Broadcast
-import org.apache.spark.sql.{Column, DataFrame, Dataset, Observation, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** The Spark-native URL-frontier + fetch scheduler (BASELINE.json
@@ -84,7 +84,6 @@ final class CrawlEngine(spark: SparkSession, cfg: Synth.Config, store: SnapshotS
     // Spark job: schema pin + empty manifest); the remaining snapshots
     // are tiny host-cardinality writes run as concurrent Spark jobs
     // (sequential, their fixed per-job latency dominates startup)
-    import org.apache.spark.sql.Encoders
     store.writeEmpty(Encoders.product[FrontierRow].schema, "frontier", wave = -1)
     store.writeEmpty(Encoders.product[FetchResult].schema, "results", wave = -1)
     store.writeEmpty(Encoders.product[TelemetryRow].schema, "telemetry", wave = -1)
@@ -258,8 +257,8 @@ final class CrawlEngine(spark: SparkSession, cfg: Synth.Config, store: SnapshotS
     * circuits methods not yet attempted (source_processing.py:624-677);
     * the supplemental section crawl runs for every source with
     * discovered sections. The cascade itself is the SHARED
-    * SourceRules.cascade kernel (engine flatMap + dueFacts + oracle — one
-    * definition). */
+    * SourceRules.cascade kernel (engine flatMap + oracle — one
+    * definition; the state leg reads its facts via cascadeFacts). */
   private def discover(in: WaveIn, due: Dataset[DueSource]): (Dataset[CandRow], Observation) = {
     val wave = in.wave
     val cfgB = in.cfgB
@@ -274,7 +273,7 @@ final class CrawlEngine(spark: SparkSession, cfg: Synth.Config, store: SnapshotS
         RawLink(d.source_id, d.host_norm, l.url, l.methodRank, l.attempt,
           l.slot, l.section)
       }
-    }.toDF("source_id", "src_host", "url", "method_rank", "attempt", "slot", "section")
+    }.toDF()
 
     // F-chain with a single outcome tag; metrics ride the first action
     // via observe() — no separate counting job (A7)
@@ -655,8 +654,8 @@ final class CrawlEngine(spark: SparkSession, cfg: Synth.Config, store: SnapshotS
   // and Catalyst plans the same equi-joins as shuffles (the 100-TB
   // path: ten-million-host dims shuffle; AQE picks strategies from
   // runtime stats on real, skewed corpora).
-  private def dim(df: DataFrame): DataFrame =
-    if (cfg.nHosts <= 1000000) broadcast(df) else df
+  private def dim[T](ds: Dataset[T]): Dataset[T] =
+    if (cfg.nHosts <= 1000000) broadcast(ds) else ds
 
   /** Politeness: per-host outcome aggregation → pure kernel update,
     * crawl delay joined from the robots table (no driver map). A
@@ -669,31 +668,26 @@ final class CrawlEngine(spark: SparkSession, cfg: Synth.Config, store: SnapshotS
     val wave = in.wave
     val nb = cfg.nBuckets
     val waveSec = cfg.waveSeconds
+    def n(c: Column): Column = count(when(c, 1)).cast("int")
     val outcomes = results.toDF()
-      .groupBy(col("host").as("o_host")).agg(
-        count(when(col("status").isin(OkStatuses: _*), 1)).as("ok"),
-        count(when(col("status") === "404", 1)).as("nf"),
-        count(when(col("status") === "403", 1)).as("fb"),
-        count(when(col("status") === "429", 1)).as("rl"),
-        count(when(col("status") === "timeout", 1)).as("to"),
-        count(when(col("status") === "captcha", 1)).as("cp"))
-    in.politeness.toDF()
-      .join(dim(outcomes), col("host") === col("o_host"), "left").drop("o_host")
-      .join(dim(in.robots.select(col("host").as("d_host"), col("crawl_delay_s"))),
-        col("host") === col("d_host"), "left").drop("d_host")
-      .as[PolJoin]
-      .map { j =>
-        val st = PolitenessState(j.host, j.bot_sensitivity, j.tokens_per_wave,
-          j.cooldown_until_s, j.consecutive_failures, j.paused_until_s,
-          j.bot_encounters, j.forbidden_count)
-        val next =
-          if (j.ok.isEmpty && j.nf.isEmpty && j.fb.isEmpty && j.rl.isEmpty &&
-            j.to.isEmpty && j.cp.isEmpty) st
-          else Politeness.update(st,
-            Politeness.HostOutcome(j.ok.getOrElse(0L).toInt, j.nf.getOrElse(0L).toInt,
-              j.fb.getOrElse(0L).toInt, j.rl.getOrElse(0L).toInt,
-              j.to.getOrElse(0L).toInt, j.cp.getOrElse(0L).toInt),
-            wave, waveSec, j.crawl_delay_s.getOrElse(0.0))
+      .groupBy(col("host").as("o_host")).agg(struct(
+        n(col("status").isin(OkStatuses: _*)).as("ok"),
+        n(col("status") === "404").as("notFound"),
+        n(col("status") === "403").as("forbidden"),
+        n(col("status") === "429").as("rateLimited"),
+        n(col("status") === "timeout").as("timeout"),
+        n(col("status") === "captcha").as("captcha")))
+      .as[(String, Politeness.HostOutcome)]
+    val delays = in.robots.select(col("host").as("d_host"), col("crawl_delay_s"))
+      .as[(String, Double)]
+    val pol = in.politeness
+    val withOutcome = pol.joinWith(dim(outcomes), pol("host") === outcomes("o_host"), "left")
+    withOutcome
+      .joinWith(dim(delays), withOutcome("_1.host") === delays("d_host"), "left")
+      .map { case ((st, o), d) =>
+        // a host without a fetch this wave keeps its state
+        val next = Option(o).fold(st)(o =>
+          Politeness.update(st, o._2, wave, waveSec, Option(d).fold(0.0)(_._2)))
         // next wave's plan-scan bucket, decided by the SAME kernel the
         // wave's availability filter uses — rides out on an observation
         val availB =
@@ -706,64 +700,51 @@ final class CrawlEngine(spark: SparkSession, cfg: Synth.Config, store: SnapshotS
   }
 
   /** Source state: set-based S11 rewrite — ledger (F13), pause counter
-    * (F12/C8), sections (M4), method telemetry; all per-source facts
-    * join-assembled, transition via the shared pure kernel. Each row
-    * carries the source's next-wave seen-scan bucket (`__due_b`, -1
-    * when not due). Returns the lazily checkpointed rewrite and the
-    * cached per-source facts (freed by the caller). */
+    * (F12/C8), sections (M4), method telemetry; each source's state row
+    * meets its registry row and (when due) its [[SourceFacts]], and
+    * the shared pure kernel makes the transition. Each row carries the
+    * source's next-wave seen-scan bucket (`__due_b`, -1 when not due).
+    * Returns the lazily checkpointed rewrite and the cached per-source
+    * facts (freed by the caller). */
   private def nextState(in: WaveIn, due: Dataset[DueSource],
-                        gatedDelta: DataFrame): (DataFrame, DataFrame) = {
+                        gatedDelta: DataFrame): (DataFrame, Dataset[SourceFacts]) = {
     val wave = in.wave
     val nb = cfg.nBuckets
     val cfgB = in.cfgB
-    val dueFacts = due.map { d =>
-      // facts-only evaluation: no second URL expansion (the links
-      // flatMap in discover is the only place cascade materializes URLs)
-      val f = SourceRules.cascadeFacts(cfgB.value)(d.host_idx, wave, d.methods,
-        d.rss_skip, d.sections)
-      DueFacts(d.source_id, f.ranRss, f.rssFailed, f.ranHomepage,
-        f.rawRss, f.rawHomepage, f.rawSection, f.navSections)
-    }.toDF()
-    // one agg for per-method new counts AND M4 section inference
-    val newByMethod = gatedDelta.groupBy("source_id").agg(
-      count(when(col("method_rank") === 0, 1)).as("new_rss"),
-      count(when(col("method_rank") === 1, 1)).as("new_homepage"),
-      count(when(col("method_rank") === 2, 1)).as("new_section"),
+    // facts-only evaluation: no second URL expansion (the links
+    // flatMap in discover is the only place cascade materializes URLs)
+    val facts = due.map(d => (d.source_id, SourceRules.cascadeFacts(cfgB.value)(
+      d.host_idx, wave, d.methods, d.rss_skip, d.sections)))
+    // one agg for the per-method new counts (as the outcome's
+    // newByMethod map) AND M4 section inference
+    def newOf(m: Int): Column = count(when(col("method_rank") === m, 1))
+    val newLinks = gatedDelta.groupBy("source_id").agg(
+      map(lit(0), newOf(0), lit(1), newOf(1), lit(2), newOf(2)),
       collect_set(nullif(
-        regexp_extract(col("norm_url"), "/sections/([a-z]+)$", 1), lit("")))
-        .as("sections_found"))
-    val perSource = dueFacts
-      .join(dim(newByMethod), Seq("source_id"), "left")
+        regexp_extract(col("norm_url"), "/sections/([a-z]+)$", 1), lit(""))))
+      .as[NewLinks]
+    val perSource = facts
+      .joinWith(dim(newLinks), facts("_1") === newLinks("source_id"), "left")
       .cache()
-    val stateNext = in.state.toDF()
-      .join(dim(in.allSources.toDF().select(col("source_id"), col("frequency"),
-        col("status"))), Seq("source_id"))
-      .join(dim(perSource), Seq("source_id"), "left")
-      .as[StateJoin]
-      .map { j =>
-        val prev = SourceState(j.source_id, j.host, j.last_wave,
-          j.rss_consecutive_failures, j.rss_failure_waves, j.rss_missing_wave,
-          j.no_effective_consecutive, j.paused_auto, j.last_successful_method,
-          j.discovered_sections,
-          j.rss_attempts, j.rss_successes, j.homepage_attempts, j.homepage_successes)
-        val out = j.rss_attempted match {
-          case None => prev // not due this wave
-          case Some(ranRss) =>
-            SourceRules.update(prev, j.frequency,
-              SourceRules.DiscoveryOutcome(ranRss, j.rss_failed.getOrElse(false),
-                j.homepage_ran.getOrElse(false),
-                Map(0 -> j.new_rss.getOrElse(0L),
-                  1 -> j.new_homepage.getOrElse(0L),
-                  2 -> j.new_section.getOrElse(0L)),
-                // M4: URL-inferred (Strategy 2) ∪ nav-parsed (Strategy 1)
-                j.sections_found.getOrElse(Seq.empty) ++
-                  j.nav_sections.getOrElse(Seq.empty)),
-              wave)
+    val registry = in.allSources.select(col("source_id"), col("frequency"), col("status"))
+      .as[(String, String, String)]
+    val st = in.state
+    val withRegistry = st.joinWith(dim(registry), st("source_id") === registry("source_id"))
+    val stateNext = withRegistry
+      .joinWith(dim(perSource), withRegistry("_1.source_id") === perSource("_1._1"), "left")
+      .map { case ((prev, (_, frequency, status)), ps) =>
+        val out = Option(ps).fold(prev) { case ((_, f), nl) => // no facts: not due
+          val (newByMethod, sectionsFound) = Option(nl).fold(NoNewLinks)(l => (l._2, l._3))
+          SourceRules.update(prev, frequency,
+            SourceRules.DiscoveryOutcome(f.ranRss, f.rssFailed, f.ranHomepage, newByMethod,
+              // M4: URL-inferred (Strategy 2) ∪ nav-parsed (Strategy 1)
+              sectionsFound ++ f.navSections),
+            wave)
         }
         // next wave's seen-scan bucket, decided by the SAME due kernel
         // the wave's due scan uses — rides out on the observation
         val dueB =
-          if (SourceRules.due(out, j.status, j.frequency, wave + 1))
+          if (SourceRules.due(out, status, frequency, wave + 1))
             gf.hostBucketJvm(out.host, nb)
           else -1
         (out, dueB)
@@ -778,18 +759,16 @@ final class CrawlEngine(spark: SparkSession, cfg: Synth.Config, store: SnapshotS
   /** Per-(source, method) telemetry (A5 surface,
     * telemetry.py:1777-1910) with its observation, and per-(host,
     * http_status) outcome telemetry (telemetry_orm.py:33-277). */
-  private def telemetryOf(in: WaveIn, perSource: DataFrame, results: Dataset[FetchResult])
-      : (DataFrame, Observation, DataFrame) = {
+  private def telemetryOf(in: WaveIn, perSource: Dataset[SourceFacts],
+                          results: Dataset[FetchResult]): (DataFrame, Observation, DataFrame) = {
     val wave = in.wave
     val telemObs = Observation()
-    val telemetry = perSource.as[PerSource].flatMap { o =>
+    val telemetry = perSource.flatMap { case ((sid, f), nl) =>
+      val newOf = Option(nl).fold(NoNewLinks._1)(_._2)
       Seq(
-        TelemetryRow(wave, o.source_id, "rss", o.rss_attempted,
-          o.raw_rss, o.new_rss.getOrElse(0L)),
-        TelemetryRow(wave, o.source_id, "homepage", o.homepage_ran,
-          o.raw_homepage, o.new_homepage.getOrElse(0L)),
-        TelemetryRow(wave, o.source_id, "section_crawl", o.raw_section > 0,
-          o.raw_section, o.new_section.getOrElse(0L)))
+        TelemetryRow(wave, sid, "rss", f.ranRss, f.rawRss, newOf(0)),
+        TelemetryRow(wave, sid, "homepage", f.ranHomepage, f.rawHomepage, newOf(1)),
+        TelemetryRow(wave, sid, "section_crawl", f.rawSection > 0, f.rawSection, newOf(2)))
     }.toDF().observe(telemObs,
       sum(when(col("method") === "section_crawl", col("links_yielded"))
         .otherwise(lit(0L))).as("section_links"))
@@ -923,49 +902,22 @@ object CrawlEngine {
                            pub_day: Int, slot: Int, section: String, host_bucket: Int)
   final case class Planned(norm_url: String, host: String, host_bucket: Int,
                            source_id: String, rank: Int)
-  final case class DueFacts(source_id: String, rss_attempted: Boolean,
-                            rss_failed: Boolean, homepage_ran: Boolean,
-                            raw_rss: Long, raw_homepage: Long, raw_section: Long,
-                            nav_sections: Seq[String]) // M4 Strategy 1
-  final case class PerSource(source_id: String, rss_attempted: Boolean,
-                             rss_failed: Boolean, homepage_ran: Boolean,
-                             raw_rss: Long, raw_homepage: Long, raw_section: Long,
-                             new_rss: Option[Long], new_homepage: Option[Long],
-                             new_section: Option[Long],
-                             sections_found: Option[Seq[String]])
-  final case class StateJoin(source_id: String, host: String, last_wave: Int,
-                             rss_consecutive_failures: Int, rss_failure_waves: Seq[Int],
-                             rss_missing_wave: Int, no_effective_consecutive: Int,
-                             paused_auto: Boolean, last_successful_method: String,
-                             discovered_sections: Seq[String],
-                             rss_attempts: Int, rss_successes: Int,
-                             homepage_attempts: Int, homepage_successes: Int,
-                             frequency: String, status: String,
-                             rss_attempted: Option[Boolean], rss_failed: Option[Boolean],
-                             homepage_ran: Option[Boolean],
-                             raw_rss: Option[Long], raw_homepage: Option[Long],
-                             raw_section: Option[Long],
-                             nav_sections: Option[Seq[String]],
-                             new_rss: Option[Long], new_homepage: Option[Long],
-                             new_section: Option[Long],
-                             sections_found: Option[Seq[String]])
-  final case class PolJoin(host: String, bot_sensitivity: Int, tokens_per_wave: Int,
-                           cooldown_until_s: Double, consecutive_failures: Int,
-                           paused_until_s: Double, bot_encounters: Int,
-                           forbidden_count: Int,
-                           ok: Option[Long], nf: Option[Long], fb: Option[Long],
-                           rl: Option[Long], to: Option[Long], cp: Option[Long],
-                           crawl_delay_s: Option[Double])
+  /** One due source's new links this wave: per-method counts keyed by
+    * method rank (the [[SourceRules.DiscoveryOutcome]] `newByMethod`
+    * shape) and the section names its URLs revealed (M4 Strategy 2). */
+  type NewLinks = (String, Map[Int, Long], Seq[String])
+  /** What a source without a new link counts. */
+  val NoNewLinks: (Map[Int, Long], Seq[String]) = (Map(0 -> 0L, 1 -> 0L, 2 -> 0L), Seq.empty)
+  /** A due source's cascade facts and, when it found any, its new links
+    * (null otherwise — the outer-join miss). */
+  type SourceFacts = ((String, SourceRules.CascadeFacts), NewLinks)
 
   /** HTTP-200 post-fetch content types (X4) + hard failures — statuses
     * that end a URL's frontier lifecycle (404 until the TTL elapses). */
   val OkStatuses: Seq[String] = Seq("extracted", "obituary", "opinion", "wire")
   val TerminalStatuses: Seq[String] = OkStatuses ++ Seq("404", "403")
 
-  val FrontierCols: Seq[String] = Seq("url", "norm_url", "host", "host_bucket",
-    "source_id", "status", "priority", "crawl_depth", "discovered_by",
-    "discovered_wave", "processed_wave", "http_status", "publish_day",
-    "content_hash", "error_message", "seq", "is_update")
+  val FrontierCols: Seq[String] = Encoders.product[FrontierRow].schema.fieldNames.toSeq
 
   /** Per-host token ranking (W1/W4/O1/O3/O6) with a CONSTANT rank bound
     * (= the global ≤3/host cap) so Catalyst plans a WindowGroupLimit:

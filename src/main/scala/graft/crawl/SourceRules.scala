@@ -110,8 +110,8 @@ object SourceRules {
     * short-circuits every method not yet attempted
     * (source_processing.py:624-677); the supplemental section crawl
     * always runs for already-discovered sections (discovery.py:647-997).
-    * Shared verbatim by the Spark engine (discovery flatMap + dueFacts)
-    * and the oracle — a single definition of what one source does. */
+    * Shared verbatim by the Spark engine (discovery flatMap) and the
+    * oracle — a single definition of what one source does. */
   def cascade(cfg: Synth.Config)(hostIdx: Int, wave: Int, order: Seq[Int],
               rssSkip: Boolean, sections: Seq[String]): CascadeRun = {
     val out = IndexedSeq.newBuilder[CascadeLink]

@@ -56,9 +56,9 @@ object Dedup {
     // EAGER fill: the first action launches several broadcast-side
     // builds concurrently, and each thread that finds the cache cold
     // recomputes the full subtree (measured: lazy persist alone did not
-    // move q_dedup_ngram_jaccard). One cheap count materializes the
+    // move q_dedup_ngram_jaccard). One cheap fill materializes the
     // cache once, before any consumer races.
-    sh.count()
+    Checkpoint.fill(sh)
     // stop-shingle prune as hash-agg + semi-join (map-side combinable)
     // instead of a per-shingle window, which would add a full sort
     val rare = sh.groupBy("sh").agg(count(lit(1)).as("n_docs"))
@@ -106,7 +106,7 @@ object Dedup {
     // per query (r6 before-plan: 32 parquet scans of `documents` in
     // q_dedup_lsh_pairs, zero reuse). Guide §5.
     val sig = signatures.persist()
-    sig.count() // eager fill — see ngramJaccardPairs
+    Checkpoint.fill(sig) // eager fill — see ngramJaccardPairs
     val perBand = (0 until nBands).map { b =>
       sig.select(col("doc"), col(s"band$b").as("key"), lit(b).as("band"))
     }.reduce(_ unionByName _)
@@ -152,9 +152,7 @@ object Dedup {
     val own = pairs.storageLevel == StorageLevel.NONE
     if (own) pairs.persist()
     try {
-      // one job: Dataset.count() under AQE runs the cache fill, a map
-      // stage and the final sum as three
-      val nEdges = pairs.select(col(idA)).queryExecution.toRdd.count()
+      val nEdges = Checkpoint.fill(pairs.select(col(idA)))
       val parts = math.max(1, math.min(pairs.sparkSession.sparkContext.defaultParallelism,
         (nEdges / 500000L).toInt))
       componentsIn(pairs, parts, idA, idB, maxIter)._1
@@ -319,7 +317,7 @@ object Dedup {
     // otherwise be evaluated twice per row (guide §5)
     val withB = vectors.select(col(idCol), col(vecCol),
       Similarity.srpBucketSeeded(col(vecCol), planes).as("bucket")).persist()
-    withB.count() // eager fill — see ngramJaccardPairs
+    Checkpoint.fill(withB) // eager fill — see ngramJaccardPairs
     val a = withB.select(col(idCol).as("id_a"), col(vecCol).as("va"), col("bucket"))
     val b = withB.select(col(idCol).as("id_b"), col(vecCol).as("vb"), col("bucket"))
     a.join(b, Seq("bucket"))

@@ -175,7 +175,7 @@ object Similarity {
     val assigned = base.crossJoin(broadcast(cents))
       .withColumn("cluster", argmaxCentroid(col("v"), col("cents")))
       .persist()
-    assigned.count() // eager fill — see Dedup.ngramJaccardPairs
+    graft.core.Checkpoint.fill(assigned) // eager fill — see Dedup.ngramJaccardPairs
     val q = assigned.filter(col(idCol) === queryId)
       .select(col("v").as("qv"), col("cents"))
     // the query's nProbe nearest centroids (centroid-cardinality work)

@@ -27,44 +27,35 @@ object CrawlQueries {
     else Synth.Config(nHosts = 20, urlsPerHostPerWave = 20, nWaves = 2)
   }
 
-  // one crawl per (sfDir) per session — all q_crawl_* read its tables.
-  // Opening for reads compacts the frontier log ONCE (outside the crawl
-  // headline), so per-query merge-on-read cost is an empty update fold,
-  // not a full raw-log merge.
-  private val stores = TrieMap.empty[String, SnapshotStore]
-  private def storeFor(spark: SparkSession, dir: String): SnapshotStore =
-    stores.getOrElseUpdate(dir, {
-      val store = new SnapshotStore(
-        java.nio.file.Files.createTempDirectory("graft-crawl").toString)
-      val cfg = cfgFor(dir)
-      new CrawlEngine(spark, cfg, store).run()
-      CrawlEngine.compactForRead(spark, store, cfg.nBuckets)
-      store
-    })
-
-  /** Adopt an already-run store for `dir` (Bench reuses its timed crawl
-    * instead of running a third). Compacts for reading like storeFor. */
-  def register(spark: SparkSession, dir: String, store: SnapshotStore): Unit =
-    stores.getOrElseUpdate(dir, {
-      CrawlEngine.compactForRead(spark, store, cfgFor(dir).nBuckets)
-      store
-    })
-
   /** Dataset label the scoped-run gate crawls under (J1 N:M scoping —
     * reference src/models/__init__.py:492-630: a run restricted to one
     * dataset's seed list; state rewrites still carry EVERY source). */
   val ScopedDataset = "ds-regional"
 
-  // the scoped run is its own (smaller) crawl: same world, due scan
-  // semi-joined to the scope's sources
-  private val scopedStores = TrieMap.empty[String, SnapshotStore]
-  private def scopedStoreFor(spark: SparkSession, dir: String): SnapshotStore =
-    scopedStores.getOrElseUpdate(dir, {
+  // one crawl per (sfDir, scope) per session — all q_crawl_* read its
+  // tables; the scoped run is its own (smaller) crawl: same world, due
+  // scan semi-joined to the scope's sources. Opening for reads compacts
+  // the frontier log ONCE (outside the crawl headline), so per-query
+  // merge-on-read cost is an empty update fold, not a full raw-log merge.
+  private val stores = TrieMap.empty[(String, Option[String]), SnapshotStore]
+  private def storeFor(spark: SparkSession, dir: String,
+                       scope: Option[String] = None): SnapshotStore =
+    stores.getOrElseUpdate((dir, scope), {
       val store = new SnapshotStore(
-        java.nio.file.Files.createTempDirectory("graft-crawl-scoped").toString)
-      val cfg = cfgFor(dir).copy(datasetScope = ScopedDataset)
+        java.nio.file.Files.createTempDirectory("graft-crawl").toString)
+      val cfg = cfgFor(dir).copy(datasetScope = scope.orNull)
       new CrawlEngine(spark, cfg, store).run()
       CrawlEngine.compactForRead(spark, store, cfg.nBuckets)
+      store
+    })
+  private def scopedStoreFor(spark: SparkSession, dir: String): SnapshotStore =
+    storeFor(spark, dir, Some(ScopedDataset))
+
+  /** Adopt an already-run store for `dir` (Bench reuses its timed crawl
+    * instead of running a third). Compacts for reading like storeFor. */
+  def register(spark: SparkSession, dir: String, store: SnapshotStore): Unit =
+    stores.getOrElseUpdate((dir, None), {
+      CrawlEngine.compactForRead(spark, store, cfgFor(dir).nBuckets)
       store
     })
 
@@ -73,7 +64,7 @@ object CrawlQueries {
     * instead of silently billing it to whichever q_crawl_scoped_* row
     * happens to run first. 0.0 when the store already exists. */
   def ensureScopedStore(spark: SparkSession, dir: String): Double =
-    if (scopedStores.contains(dir)) 0.0
+    if (stores.contains((dir, Some(ScopedDataset)))) 0.0
     else {
       val t0 = System.nanoTime()
       scopedStoreFor(spark, dir)

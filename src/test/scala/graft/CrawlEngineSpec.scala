@@ -187,6 +187,16 @@ class CrawlEngineSpec extends AnyFunSuite {
     assert(localArticles > 0, "nav-discovered section yielded no section-crawl articles")
   }
 
+  test("per-host politeness equals oracle (unscoped run)") {
+    import spark.implicits._
+    val got = engineStore.read(spark, "politeness").as[graft.model.PolitenessState]
+      .collect().map(p => p.host -> p).toMap
+    assert(got == oracle.politeness, "politeness diverges from oracle")
+    // the world exercised the update kernel, not just the initial rows
+    assert(got.values.exists(_.consecutive_failures > 0), "no host ever failed a fetch")
+    assert(got.values.exists(_.cooldown_until_s > 0.0), "no host ever cooled down")
+  }
+
   test("A5: effectiveness gating turns a dead feed's RSS off after 2 attempts") {
     import spark.implicits._
     // host 10 (isDeadFeedHost): rss fails w0+w1 (2 attempts, 0 success),

@@ -1,0 +1,101 @@
+package graft
+
+import graft.core.Checkpoint
+import graft.ops.{Dedup, Similarity}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.col
+import org.scalatest.funsuite.AnyFunSuite
+import scala.jdk.CollectionConverters._
+
+/** The eager fills of freshly persisted intermediates: how many Spark
+  * jobs one fill runs, on its own and at the four ops that fill a
+  * persist before their consumers race for it. */
+class EagerFillSpec extends AnyFunSuite {
+
+  lazy val spark: SparkSession = SparkSession.builder()
+    .master("local[4]")
+    .appName("eager-fill-spec")
+    .config("spark.sql.shuffle.partitions", "4")
+    .config("spark.sql.session.timeZone", "UTC")
+    .config("spark.ui.enabled", "false")
+    .getOrCreate()
+
+  /** Spark jobs started while `f` runs (a marker job fences the
+    * asynchronous listener bus). */
+  private def jobsOf(f: => Unit): Int = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val marker = "eager-fill-marker"
+    val descs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        descs.add(Option(e.properties).map(_.getProperty("spark.job.description", ""))
+          .getOrElse(""))
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      f
+      sc.setJobDescription(marker)
+      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
+      while (!descs.asScala.exists(_ == marker)) Thread.sleep(20)
+    } finally sc.removeSparkListener(listener)
+    descs.asScala.count(_ != marker)
+  }
+
+  private def docs: DataFrame = {
+    val s = spark
+    import s.implicits._
+    (0 until 40).map(i => (i.toLong, s"story $i about the ${i % 5} county board vote"))
+      .toDF("doc", "text")
+  }
+
+  private def vectors: DataFrame = {
+    val s = spark
+    import s.implicits._
+    (0 until 64).map(i => (i.toLong, Array.tabulate(8)(j => ((i * 7 + j * 3) % 11 - 5).toFloat)))
+      .toDF("vec_id", "embedding")
+  }
+
+  test("Checkpoint.fill fills a fresh persist in one job; Dataset.count() takes more") {
+    // a fresh persist without a shuffle inside: one job fills it. A
+    // like plan filled by Dataset.count() runs the cache fill, the
+    // count's map stage and its final sum (local[4], 4 shuffle
+    // partitions, AQE on: 3 jobs measured)
+    def fresh(k: Int): DataFrame = vectors.select((col("vec_id") * k).as("x")).persist()
+    val (viaFill, viaCount) = (fresh(2), fresh(3))
+    def cachedPartitions: Int = spark.sparkContext.getRDDStorageInfo.map(_.numCachedPartitions).sum
+    val before = cachedPartitions
+    val fillJobs = jobsOf(assert(Checkpoint.fill(viaFill) == 64L))
+    assert(cachedPartitions > before, "the fill left the persist empty")
+    val countJobs = jobsOf(assert(viaCount.count() == 64L))
+    info(s"fill: $fillJobs job(s), Dataset.count(): $countJobs")
+    assert(fillJobs == 1)
+    assert(countJobs > fillJobs)
+    Seq(viaFill, viaCount).foreach(_.unpersist())
+  }
+
+  test("the four persisted op intermediates fill without the count's extra jobs") {
+    // jobs each op runs when it is DEFINED (its eager fill, with the
+    // map stages of the plan it caches; every other part of the op is
+    // lazy), on a fresh input, local[4], 4 shuffle partitions, AQE on.
+    // Measured with Checkpoint.fill (two runs): ngramJaccardPairs 3,
+    // lshCandidatePairs 3, embeddingNearDupPairs 1, ivfTopK 4. The
+    // Dataset.count() fills of commit 29fc78e ran 4, 4, 3, 5.
+    val sig = Dedup.minhashSignatures(docs, "doc", "text")
+    val planes = Similarity.seededHyperplanes(7L, 4, 8)
+    val jobs = Seq(
+      "ngramJaccardPairs" -> jobsOf(Dedup.ngramJaccardPairs(docs, "doc", "text")),
+      "lshCandidatePairs" -> jobsOf(Dedup.lshCandidatePairs(sig, nBands = 2)),
+      "embeddingNearDupPairs" ->
+        jobsOf(Dedup.embeddingNearDupPairs(vectors, "vec_id", "embedding", planes, 0.9)),
+      "ivfTopK" -> jobsOf(Similarity.ivfTopK(vectors, "vec_id", "embedding",
+        queryId = 0L, k = 3, nLists = 4, nProbe = 2)))
+    info(jobs.map { case (op, n) => s"$op: $n" }.mkString(", "))
+    val budget = Map("ngramJaccardPairs" -> 3, "lshCandidatePairs" -> 3,
+      "embeddingNearDupPairs" -> 1, "ivfTopK" -> 4)
+    jobs.foreach { case (op, n) =>
+      assert(n <= budget(op), s"$op's eager fill ran $n jobs (> ${budget(op)})")
+    }
+    spark.catalog.clearCache()
+  }
+}
