@@ -1,23 +1,30 @@
 package graft.ops
 
 import graft.core.Checkpoint
-import org.apache.spark.sql.{DataFrame, Encoders, Observation, Row}
+import org.apache.spark.sql.{DataFrame, Encoder, Encoders, Observation, Row}
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
+import org.apache.spark.sql.expressions.{Aggregator, UserDefinedFunction}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.storage.StorageLevel
 import org.apache.spark.unsafe.types.UTF8String
 import scala.annotation.tailrec
 import scala.collection.mutable
+import scala.reflect.runtime.universe.TypeTag
 
 /** Corpus-scale deduplication operators for training-data pipelines.
   *
   * Scale notes (100 TB design): every operator here is a pure
   * shuffle-on-key dataflow — no driver-side state, no collect. The
-  * candidate-pair generators (shingle join, LSH band join) are the only
+  * candidate-pair generators (shingle join, LSH buckets) are the only
   * quadratic-risk steps; both carry a frequent-key prune (`maxDocsPerKey`)
   * that bounds per-key fanout, the standard stop-shingle treatment —
   * at cluster scale this is what keeps the shuffle skew-free (hot
   * shingles are exactly the keys AQE skew-split would otherwise chase).
+  * The shingle join prunes with a count and a semi-join. The LSH prune
+  * is the cap of its per-bucket id buffer: a partial buffer holds at
+  * most `maxDocsPerKey` ids, and a stop key ships one count per map
+  * task, never its ids, so no reducer turns hot.
   */
 object Dedup {
 
@@ -96,29 +103,55 @@ object Dedup {
     sig.select(col("doc") +: (0 until nHashes).map(i => col(s"h$i")) ++: bands: _*)
   }
 
-  /** LSH candidate pairs: docs sharing any band bucket. */
+  /** LSH candidate pairs: docs sharing any band bucket, as (id_a, id_b)
+    * with id_a < id_b in Spark's order (binary for strings), distinct
+    * across bands. One projection explodes each signature row into its
+    * `nBands` (band, key) entries; one aggregation per (band, key)
+    * gathers the bucket's ids into a [[CappedIds]] buffer, which drops
+    * them once the bucket holds more than `maxDocsPerKey` rows (the
+    * stop-key prune); each surviving bucket's pairs stream out of a
+    * double explode. The signature table is read once and nothing is
+    * persisted. Ids are bigint, int or string. A null key never pairs;
+    * a null id, and every duplicate row, counts toward its bucket's cap,
+    * but a null id is never paired. */
   def lshCandidatePairs(signatures: DataFrame, nBands: Int,
                         maxDocsPerKey: Int = 1000): DataFrame = {
-    // persist the signature table: each band projection references it,
-    // and the band union feeds the frequent-key agg plus BOTH sides of
-    // the candidate self-join — unpersisted, the minhash aggregation
-    // (shingle explode + distinct + 4-way min agg) executed up to 8×
-    // per query (r6 before-plan: 32 parquet scans of `documents` in
-    // q_dedup_lsh_pairs, zero reuse). Guide §5.
-    val sig = signatures.persist()
-    Checkpoint.fill(sig) // eager fill — see ngramJaccardPairs
-    val perBand = (0 until nBands).map { b =>
-      sig.select(col("doc"), col(s"band$b").as("key"), lit(b).as("band"))
-    }.reduce(_ unionByName _)
-    val rare = perBand.groupBy("band", "key").agg(count(lit(1)).as("n_docs"))
-      .filter(col("n_docs") <= maxDocsPerKey).select("band", "key")
-    val pruned = perBand.join(rare, Seq("band", "key"), "left_semi")
-      .select("doc", "key", "band").persist()
-    pruned.as("a").join(pruned.as("b"),
-        col("a.key") === col("b.key") && col("a.band") === col("b.band") &&
-          col("a.doc") < col("b.doc"))
-      .select(col("a.doc").as("id_a"), col("b.doc").as("id_b"))
+    val ids = cappedIds(signatures.schema("doc").dataType, maxDocsPerKey)
+    signatures
+      .select(col("doc"),
+        posexplode(array((0 until nBands).map(b => col(s"band$b")): _*)).as(Seq("band", "key")))
+      .filter(col("key").isNotNull)
+      .groupBy("band", "key").agg(ids(col("doc")).as("ids"))
+      .select(explode(col("ids")).as("id_a"), col("ids"))
+      .select(col("id_a"), explode(col("ids")).as("id_b"))
+      .filter(col("id_a") < col("id_b"))
       .distinct()
+  }
+
+  private def cappedIds(idType: DataType, cap: Int): UserDefinedFunction = idType match {
+    case LongType => udaf(new CappedIds[java.lang.Long](cap), Encoders.LONG)
+    case IntegerType => udaf(new CappedIds[Integer](cap), Encoders.INT)
+    case StringType => udaf(new CappedIds[String](cap), Encoders.STRING)
+    case other => throw new IllegalArgumentException(
+      s"lshCandidatePairs: id type ${other.simpleString} is not bigint, int or string")
+  }
+
+  /** One LSH bucket's ids, bounded: the bucket's row count and, while
+    * that count is at most `cap`, its non-null ids. A count only grows
+    * under reduce and merge, so once past the cap the ids are dropped
+    * for good: a partial buffer holds at most `cap` ids, and a stop key
+    * ships one count per map task. Emits the ids, none past the cap. */
+  private final class CappedIds[T >: Null](cap: Int)(implicit tt: TypeTag[T])
+    extends Aggregator[T, (Long, List[T]), Seq[T]] {
+    private type Buf = (Long, List[T])
+    private def keep(n: Long, ids: => List[T]): Buf = (n, if (n > cap) Nil else ids)
+    def zero: Buf = (0L, Nil)
+    def reduce(b: Buf, id: T): Buf = keep(b._1 + 1, if (id == null) b._2 else id :: b._2)
+    def merge(x: Buf, y: Buf): Buf = keep(x._1 + y._1, x._2 ::: y._2)
+    def finish(b: Buf): Seq[T] = b._2
+    // spelled out: the TypeTag of the alias `Buf` does not carry T's tag
+    def bufferEncoder: Encoder[Buf] = Encoders.product[(Long, List[T])]
+    def outputEncoder: Encoder[Seq[T]] = ExpressionEncoder[Seq[T]]()
   }
 
   /** Duplicate-GROUP resolution: connected components over a candidate-

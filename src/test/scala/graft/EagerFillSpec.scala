@@ -4,12 +4,14 @@ import graft.core.Checkpoint
 import graft.ops.{Dedup, Similarity}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
+import org.apache.spark.storage.StorageLevel
 import org.scalatest.funsuite.AnyFunSuite
 import scala.jdk.CollectionConverters._
 
 /** The eager fills of freshly persisted intermediates: how many Spark
-  * jobs one fill runs, on its own and at the four ops that fill a
-  * persist before their consumers race for it. */
+  * jobs one fill runs, on its own and at the three ops that fill a
+  * persist before their consumers race for it; and `lshCandidatePairs`,
+  * which persists nothing. */
 class EagerFillSpec extends AnyFunSuite {
 
   lazy val spark: SparkSession = SparkSession.builder()
@@ -74,13 +76,15 @@ class EagerFillSpec extends AnyFunSuite {
     Seq(viaFill, viaCount).foreach(_.unpersist())
   }
 
-  test("the four persisted op intermediates fill without the count's extra jobs") {
+  test("the persisted op intermediates fill without the count's extra jobs") {
     // jobs each op runs when it is DEFINED (its eager fill, with the
     // map stages of the plan it caches; every other part of the op is
     // lazy), on a fresh input, local[4], 4 shuffle partitions, AQE on.
     // Measured with Checkpoint.fill (two runs): ngramJaccardPairs 3,
-    // lshCandidatePairs 3, embeddingNearDupPairs 1, ivfTopK 4. The
-    // Dataset.count() fills of commit 29fc78e ran 4, 4, 3, 5.
+    // embeddingNearDupPairs 1, ivfTopK 4. The Dataset.count() fills of
+    // commit 29fc78e ran 4, 3, 5. lshCandidatePairs ran 4, then 3 with
+    // Checkpoint.fill; since it aggregates buckets instead of self-joining
+    // a persisted band table it fills nothing and runs 0.
     val sig = Dedup.minhashSignatures(docs, "doc", "text")
     val planes = Similarity.seededHyperplanes(7L, 4, 8)
     val jobs = Seq(
@@ -91,11 +95,21 @@ class EagerFillSpec extends AnyFunSuite {
       "ivfTopK" -> jobsOf(Similarity.ivfTopK(vectors, "vec_id", "embedding",
         queryId = 0L, k = 3, nLists = 4, nProbe = 2)))
     info(jobs.map { case (op, n) => s"$op: $n" }.mkString(", "))
-    val budget = Map("ngramJaccardPairs" -> 3, "lshCandidatePairs" -> 3,
+    val budget = Map("ngramJaccardPairs" -> 3, "lshCandidatePairs" -> 0,
       "embeddingNearDupPairs" -> 1, "ivfTopK" -> 4)
     jobs.foreach { case (op, n) =>
       assert(n <= budget(op), s"$op's eager fill ran $n jobs (> ${budget(op)})")
     }
     spark.catalog.clearCache()
+  }
+
+  test("lshCandidatePairs persists nothing: the caller's signatures stay uncached") {
+    val sig = Dedup.minhashSignatures(docs, "doc", "text")
+    val cache = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sharedState.cacheManager
+    spark.catalog.clearCache()
+    assert(Dedup.lshCandidatePairs(sig, nBands = 2).count() > 0L)
+    assert(sig.storageLevel == StorageLevel.NONE, "the caller's signature frame was persisted")
+    assert(cache.isEmpty, "the call left a CacheManager entry behind")
   }
 }

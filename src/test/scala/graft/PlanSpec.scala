@@ -82,6 +82,34 @@ class PlanSpec extends AnyFunSuite {
     assert(p.contains("bucket"), s"no bucket key in join:\n$p")
   }
 
+  test("q_dedup_lsh_pairs: one (band, key) aggregation under the distinct, no join, no cache") {
+    import org.apache.spark.sql.catalyst.expressions.NamedExpression
+    import org.apache.spark.sql.catalyst.plans.logical.Aggregate
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.columnar.{InMemoryRelation, InMemoryTableScanExec}
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    val df = SparkEntry.queries("q_dedup_lsh_pairs")(spark, dir)
+    assert(df.collect().nonEmpty) // AQE's final plan, with every query stage
+    val aqe = new AdaptiveSparkPlanHelper {}
+    val nodes = aqe.collect(df.queryExecution.executedPlan) { case p => p }
+    val joins = nodes.collect { case j: BaseJoinExec => j.nodeName }
+    assert(joins.isEmpty, s"pair generation joins (${joins.mkString(", ")})")
+    assert(!nodes.exists(_.isInstanceOf[InMemoryTableScanExec]), "a persisted intermediate is read")
+    val logical = df.queryExecution.optimizedPlan
+    assert(logical.find(_.isInstanceOf[InMemoryRelation]).isEmpty, "a persisted intermediate is read")
+    def keyed(names: String*): Seq[Aggregate] = logical.collect {
+      case a: Aggregate if a.groupingExpressions.map {
+        case n: NamedExpression => n.name
+        case e => e.sql
+      } == names => a
+    }
+    val buckets = keyed("band", "key")
+    assert(buckets.size == 1, s"${buckets.size} aggregations keyed by (band, key):\n$logical")
+    val distinct = keyed("id_a", "id_b")
+    assert(distinct.size == 1 && distinct.head.find(_ eq buckets.head).isDefined,
+      s"the (band, key) aggregation is not under the pair distinct:\n$logical")
+  }
+
   test("engine ranking: WindowGroupLimit (partial map-side top-k per host)") {
     import spark.implicits._
     import org.apache.spark.sql.functions._
