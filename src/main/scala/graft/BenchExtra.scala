@@ -52,6 +52,10 @@ object BenchExtra {
           graft.queries.CrawlQueries.ensureScopedStore(spark, sfDir))
         val out = names.map { name =>
           val times = (0 until reps).map { _ =>
+            // no rep may read a cache or persist an earlier rep (or query)
+            // left behind: free both, as perfbench does between passes
+            spark.catalog.clearCache()
+            spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
             val t0 = System.nanoTime()
             try {
               spark.sparkContext.setJobDescription(s"bench-extra: $name")

@@ -469,7 +469,7 @@ final class CrawlEngine(spark: SparkSession, cfg: Synth.Config, store: SnapshotS
     val dRows = log
       .filter(!col("is_update") && col("status").isin("article", "404"))
       .unionByName(discovered.filter(col("status") === "article"))
-    val eligible = foldLog(dRows, log.filter(col("is_update")))
+    val eligible = foldUpdates(store, dRows, log)
       .crossJoin(in.params)
       .filter(col("status") === "article" ||
         (col("status") === "404" &&
@@ -976,18 +976,25 @@ object CrawlEngine {
       .drop("u_url", "u_status", "u_http", "u_processed", "u_error", "u_seq")
   }
 
+  /** [[foldLog]] of `log`'s update rows over `dRows`, planned only when
+    * the frontier was appended to since its last full write. A full
+    * frontier snapshot (init's empty one, a compaction) holds no update
+    * row, so without appends `dRows` are already current. */
+  private def foldUpdates(store: SnapshotStore, dRows: DataFrame, log: DataFrame): DataFrame =
+    if (store.appendedSinceFullWrite("frontier")) foldLog(dRows, log.filter(col("is_update")))
+    else dRows
+
   /** Compact the frontier delta log to one row per URL (the same form
     * cadence compaction writes). Called ONCE when a finished store is
     * opened for repeated reads (CrawlQueries / Bench): afterwards every
-    * current-state read scans |frontier| compacted rows with an empty
-    * update fold, instead of re-merging the raw log per query. Runs
-    * OUTSIDE the crawl's timed critical path by design. */
-  def compactForRead(spark: SparkSession, store: SnapshotStore, nBuckets: Int): Unit = {
-    val hasUpdates = store.read(spark, "frontier")
-      .filter(col("is_update")).limit(1).count() > 0
-    if (!hasUpdates) return // already one row per URL
-    compactFrontier(spark, store, nBuckets, store.lastCommittedWave(), "open-for-read compaction")
-  }
+    * current-state read scans |frontier| compacted rows and plans no
+    * update fold, instead of re-merging the raw log per query. A store
+    * with no appends since its last full write is already one row per
+    * URL and returns at once, with no Spark job. Runs OUTSIDE the
+    * crawl's timed critical path by design. */
+  def compactForRead(spark: SparkSession, store: SnapshotStore, nBuckets: Int): Unit =
+    if (store.appendedSinceFullWrite("frontier"))
+      compactFrontier(spark, store, nBuckets, store.lastCommittedWave(), "open-for-read compaction")
 
   /** Bucketed frontier writes hash the bucket key into ~2×cores
     * partitions, NOT one partition per bucket: the store's partitionBy
@@ -1003,7 +1010,8 @@ object CrawlEngine {
   /** Rewrite the frontier log as one row per URL, a full bucketed
     * snapshot. Compacted rows are snapshot rows (is_update = false, set
     * by [[frontierCurrent]]): the plan pre-filter then excludes terminal
-    * rows from the merge. */
+    * rows from the merge, and until the next append no fold is planned
+    * ([[foldUpdates]]). */
   private def compactFrontier(spark: SparkSession, store: SnapshotStore, nBuckets: Int,
                               wave: Int, lineage: String): Unit =
     store.write(frontierCurrent(spark, store).repartition(writeParts(spark, nBuckets),
@@ -1011,12 +1019,13 @@ object CrawlEngine {
 
   /** The frontier's current state (one row per URL) — queries/tests.
     * The update-log fold, NOT a full-log mergeLog: merge-on-read cost
-    * is O(updates since last compaction), not O(frontier). Snapshot
+    * is O(updates since last compaction), not O(frontier), and nothing
+    * when the log had no appends since its last full write. Snapshot
     * view: is_update is a log-encoding artifact, normalized to false
     * (the same form compaction writes). */
   def frontierCurrent(spark: SparkSession, store: SnapshotStore): DataFrame = {
     val log = store.read(spark, "frontier")
-    foldLog(log.filter(!col("is_update")), log.filter(col("is_update")))
+    foldUpdates(store, log.filter(!col("is_update")), log)
       .withColumn("is_update", lit(false))
       .select(FrontierCols.map(col): _*)
   }

@@ -3,6 +3,7 @@ package graft.ops
 import graft.core.Checkpoint
 import org.apache.spark.sql.{DataFrame, Encoder, Encoders, Observation, Row}
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
+import org.apache.spark.sql.catalyst.plans.logical.statsEstimation.EstimationUtils
 import org.apache.spark.sql.expressions.{Aggregator, UserDefinedFunction}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -158,18 +159,25 @@ object Dedup {
     * pair graph → (doc, component_id = min doc id reachable), the step
     * that turns pair lists (LSH/Jaccard output) into keep/drop sets.
     * Contract, then propagate:
-    *  1. one count sizes the graph at ~500k edges per partition, capped
-    *     at `defaultParallelism` — a near-dup graph of thousands of edges
-    *     is ONE partition;
+    *  1. the optimizer's statistics size the graph at ~500k edges per
+    *     partition, capped at `defaultParallelism`: the row count when
+    *     the plan knows it (a materialized cache does), else the size
+    *     estimate over the edge row's size. No job runs; a near-dup
+    *     graph of thousands of edges is ONE partition, and an input
+    *     with no size estimate (an RDD) takes the most;
     *  2. one `mapPartitions` contracts each partition's edges with
     *     [[unionFind]] into (node, root = least node of its local
-    *     component);
-    *  3. one aggregation keeps each node's least root, and an Observation
-    *     on the same job counts the nodes given more than one root. When
-    *     none is, the roots are final: local components that share a
-    *     node share its one root, so by induction every local component
-    *     of a component carries the component's minimum. One partition
-    *     always ends here, after a count and one job, at any diameter;
+    *     component). On one partition that is every node once with its
+    *     component's minimum: the labels are final and come back as a
+    *     lazy plan, so the caller's own action runs the contraction in
+    *     the stage of its first aggregation, with no job, cache or
+    *     checkpoint of its own;
+    *  3. above one partition, one aggregation keeps each node's least
+    *     root, and an Observation on the same job counts the nodes given
+    *     more than one root. When none is, the roots are final: local
+    *     components that share a node share its one root, so by
+    *     induction every local component of a component carries the
+    *     component's minimum;
     *  4. otherwise min-label propagation ([[ccRound]]) runs over the
     *     residual star edges (node, root), node ≠ root, one job per round.
     *     It needs up to the residual graph's diameter in rounds, and past
@@ -177,19 +185,19 @@ object Dedup {
     *     the one size limit left, reachable only above one partition.
     *     Alternating large-star/small-star (Kiveris et al., SoCC 2014:
     *     O(log n) rounds, same per-round shape) is its upgrade.
-    * Ids are bigint, int or (binary-collated) string columns. A pair
-    * input the caller cached keeps its cache; an uncached one is cached
-    * for the call, which reads it twice. */
+    * Ids are bigint, int or (binary-collated) string columns. Above one
+    * partition the pairs are read twice: a pair input the caller cached
+    * keeps its cache, and an uncached one is cached for the call. */
   def connectedComponents(pairs: DataFrame, idA: String = "id_a",
                           idB: String = "id_b", maxIter: Int = 20): DataFrame = {
-    val own = pairs.storageLevel == StorageLevel.NONE
+    val plan = pairs.queryExecution.optimizedPlan
+    val nEdges = plan.stats.rowCount
+      .getOrElse(plan.stats.sizeInBytes / EstimationUtils.getSizePerRow(plan.output))
+    val parts = (nEdges / 500000).min(pairs.sparkSession.sparkContext.defaultParallelism)
+      .max(1).toInt
+    val own = parts > 1 && pairs.storageLevel == StorageLevel.NONE
     if (own) pairs.persist()
-    try {
-      val nEdges = Checkpoint.fill(pairs.select(col(idA)))
-      val parts = math.max(1, math.min(pairs.sparkSession.sparkContext.defaultParallelism,
-        (nEdges / 500000L).toInt))
-      componentsIn(pairs, parts, idA, idB, maxIter)._1
-    } finally if (own) pairs.unpersist()
+    try componentsIn(pairs, parts, idA, idB, maxIter)._1 finally if (own) pairs.unpersist()
   }
 
   /** [[connectedComponents]] over `parts` partitions, returning the
@@ -202,13 +210,15 @@ object Dedup {
     val ord = idOrdering(idType)
     val edges = pairs.select(col(idA).as("a"), col(idB).cast(idType).as("b"))
     // one partition keeps the planner's SinglePartition through the
-    // mapPartitions, so the aggregation below needs no exchange
+    // mapPartitions, so a caller's aggregation over the labels needs no
+    // exchange
     val placed = if (parts == 1) edges.coalesce(1) else edges.repartition(parts, col("a"))
     val rootSchema = StructType(Seq(
       StructField("node", idType, nullable = false), StructField("root", idType, nullable = false)))
     val roots = placed.mapPartitions(rows =>
       unionFind(rows.map(r => (r.get(0), r.get(1))))(ord).map { case (n, r) => Row(n, r) }
     )(Encoders.row(rootSchema))
+    if (parts == 1) return (asComponents(roots.withColumnRenamed("root", "label")), 0)
     val obs = Observation()
     val contracted = roots.groupBy("node")
       .agg(min("root").as("label"), max("root").as("hi"))

@@ -24,6 +24,12 @@ import scala.util.Using
   * snapshot commit (next id, prior files when appending, manifest
   * rename) — the store's only write boundaries.
   *
+  * Each snapshot also records whether the table was appended to since
+  * its last full write ([[write]], [[writeEmpty]], a replace part): the
+  * fact Iceberg keeps as the snapshot summary's `operation`
+  * (append / overwrite). [[appendedSinceFullWrite]] answers it from the
+  * manifest alone, so a reader can plan from it without a Spark job.
+  *
   * Delta commits: [[appendDelta]] writes only the wave's new rows and
   * the new manifest references the previous snapshot's files for
   * untouched buckets — per-wave I/O is O(delta), not O(table). Reads
@@ -49,7 +55,8 @@ final class SnapshotStore(val root: String) {
   /** bucket → data files (table-relative paths); -1 = unbucketed. */
   type FileMap = Map[Int, Seq[String]]
 
-  private final case class Snap(id: Int, wave: Int, lineage: String, files: FileMap)
+  private final case class Snap(id: Int, wave: Int, lineage: String, files: FileMap,
+                                appended: Boolean)
   private final case class Manifest(current: Int, snaps: Seq[Snap])
 
   private def tableDir(table: String): Path = Paths.get(root, table)
@@ -70,7 +77,7 @@ final class SnapshotStore(val root: String) {
     val snaps = JArray(m.snaps.map { s =>
       JObject(
         "id" -> JInt(s.id), "wave" -> JInt(s.wave),
-        "lineage" -> JString(s.lineage),
+        "lineage" -> JString(s.lineage), "appended" -> JBool(s.appended),
         "files" -> JObject(s.files.toList.sortBy(_._1).map { case (b, fs) =>
           b.toString -> JArray(fs.map(JString(_)).toList)
         }))
@@ -89,6 +96,8 @@ final class SnapshotStore(val root: String) {
         val id = (s \ "id") match { case JInt(n) => n.toInt; case _ => -1 }
         val wave = (s \ "wave") match { case JInt(n) => n.toInt; case _ => -1 }
         val lin = (s \ "lineage") match { case JString(v) => v; case _ => "" }
+        // a manifest written before the field existed: assume appends
+        val appended = (s \ "appended") match { case JBool(b) => b; case _ => true }
         val files: FileMap = (s \ "files") match {
           case JObject(fields) => fields.map { case (b, v) =>
             b.toInt -> (v match {
@@ -98,7 +107,7 @@ final class SnapshotStore(val root: String) {
           }.toMap
           case _ => Map.empty
         }
-        Snap(id, wave, lin, files)
+        Snap(id, wave, lin, files, appended)
       }
       case _ => Seq.empty
     }
@@ -153,16 +162,18 @@ final class SnapshotStore(val root: String) {
 
   /** The one snapshot commit: take the next id, carry the current
     * snapshot's files when `append` (untouched buckets by reference),
-    * add `written` per bucket, and rename the manifest into place. */
+    * add `written` per bucket, and rename the manifest into place. An
+    * append that adds files marks the snapshot appended, and the mark
+    * carries over appends until the next full write clears it. */
   private def commitSnap(table: String, wave: Int, lineage: String,
                          written: FileMap, append: Boolean): Int = {
     val m = manifest(table)
     val id = nextId(m)
-    val prior: FileMap =
-      if (append) m.snaps.find(_.id == m.current).fold(Map.empty: FileMap)(_.files)
-      else Map.empty
+    val cur = if (append) m.snaps.find(_.id == m.current) else None
+    val prior: FileMap = cur.fold(Map.empty: FileMap)(_.files)
     val files = prior ++ written.map { case (b, fs) => b -> (prior.getOrElse(b, Seq.empty) ++ fs) }
-    commitManifest(table, Manifest(id, m.snaps :+ Snap(id, wave, lineage, files)))
+    val appended = append && (written.values.exists(_.nonEmpty) || cur.exists(_.appended))
+    commitManifest(table, Manifest(id, m.snaps :+ Snap(id, wave, lineage, files, appended)))
     id
   }
 
@@ -325,6 +336,11 @@ final class SnapshotStore(val root: String) {
   def readAll(spark: SparkSession, table: String): DataFrame = read(spark, table)
 
   def exists(table: String): Boolean = currentSnapshot(table).isDefined
+
+  /** Whether an append added files to `table` since its last full write,
+    * read from the manifest alone (no Spark job). A snapshot of a manifest
+    * written before the store recorded this reads as appended. */
+  def appendedSinceFullWrite(table: String): Boolean = current(table).appended
 
   // ---- cross-table wave commits (checkpoint/resume) ----
 

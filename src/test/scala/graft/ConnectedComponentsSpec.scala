@@ -6,7 +6,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, min}
 import org.apache.spark.sql.types.{LongType, StringType}
 import org.scalatest.funsuite.AnyFunSuite
-import scala.jdk.CollectionConverters._
 
 /** `Dedup.connectedComponents`: the union-find kernel, the contraction
   * path (one partition, any diameter), the propagation path over the
@@ -151,35 +150,52 @@ class ConnectedComponentsSpec extends AnyFunSuite {
     assert(persistentIds == before)
   }
 
-  test("job budget: PlanSpec's graph resolves in at most 4 Spark jobs") {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    // the count, the contraction checkpoint and the caller's collect:
-    // the commit after 99f758e measured 3 here (local[4], 4 shuffle
-    // partitions, AQE on); 99f758e itself ran 19 (two counts, the edge
-    // and seed checkpoints and a job per propagation round, each with
-    // its AQE map stages)
+  test("sizing: a materialized cache takes one partition, an RDD input more") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types.{StructField, StructType}
+    val edges = randomEdges(seed = 7, nodes = 2000, edges = 900)
+    val schema = StructType(Seq(StructField("id_a", LongType), StructField("id_b", LongType)))
+    def fromRdd = spark.createDataFrame(
+      spark.sparkContext.parallelize(edges.map { case (a, b) => Row(a, b) }, 3), schema)
+    // one partition is a lazy plan: defining it runs no job. An RDD
+    // carries no statistics (its size estimate is the session default,
+    // unbounded), so it is sized at the cap and its contraction runs
+    // when the labels are defined
+    var multi: DataFrame = null
+    assert(SparkJobs.of(spark) { multi = Dedup.connectedComponents(fromRdd) } > 0)
+    assert(labelsOf(multi) == reference(edges))
+    Checkpoint.free(multi)
+    // the same rows cached and materialized report their row count
+    val cached = fromRdd.cache()
+    cached.count()
+    var one: DataFrame = null
+    assert(SparkJobs.of(spark) { one = Dedup.connectedComponents(cached) } == 0)
+    assert(labelsOf(one) == reference(edges))
+    cached.unpersist()
+  }
+
+  test("one partition: the labels are a lazy plan holding no persistent RDD") {
+    val before = persistentIds
+    val edges = randomEdges(seed = 3, nodes = 500, edges = 300)
+    val cc = Dedup.connectedComponents(pairsOf(edges))
+    assert(labelsOf(cc) == reference(edges))
+    assert(persistentIds == before, s"left ${persistentIds -- before}")
+  }
+
+  test("job budget: PlanSpec's graph resolves in one Spark job") {
+    // defining the labels runs no job; the collect runs the contraction
+    // in its own stage: measured 1 here (local[4], 4 shuffle
+    // partitions, AQE on). 881847e ran 3 (the sizing count, the
+    // contraction checkpoint and the collect); 99f758e ran 19 (two
+    // counts, the edge and seed checkpoints and a job per propagation
+    // round, each with its AQE map stages)
     val pairs = pairsOf(Seq((1L, 2L), (2L, 3L), (10L, 11L)))
-    val marker = "cc-job-budget-marker"
-    val descs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        descs.add(Option(e.properties).map(_.getProperty("spark.job.description", ""))
-          .getOrElse(""))
-    }
-    val sc = spark.sparkContext
-    sc.addSparkListener(listener)
-    val cc = try {
-      val cc = Dedup.connectedComponents(pairs)
-      cc.collect()
-      sc.setJobDescription(marker)
-      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
-      while (!descs.asScala.exists(_ == marker)) Thread.sleep(20)
-      cc
-    } finally sc.removeSparkListener(listener)
-    val jobs = descs.asScala.count(_ != marker)
+    var cc: DataFrame = null
+    assert(SparkJobs.of(spark) { cc = Dedup.connectedComponents(pairs) } == 0)
+    var labels = Map.empty[Long, Long]
+    val jobs = SparkJobs.of(spark) { labels = labelsOf(cc) }
     info(s"jobs: $jobs")
-    assert(jobs <= 4, s"connectedComponents + collect ran $jobs jobs (> 4)")
-    assert(labelsOf(cc) == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 10L -> 10L, 11L -> 10L))
-    Checkpoint.free(cc)
+    assert(jobs <= 1, s"connectedComponents + collect ran $jobs jobs (> 1)")
+    assert(labels == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 10L -> 10L, 11L -> 10L))
   }
 }

@@ -6,7 +6,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.storage.StorageLevel
 import org.scalatest.funsuite.AnyFunSuite
-import scala.jdk.CollectionConverters._
 
 /** The eager fills of freshly persisted intermediates: how many Spark
   * jobs one fill runs, on its own and at the three ops that fill a
@@ -22,27 +21,7 @@ class EagerFillSpec extends AnyFunSuite {
     .config("spark.ui.enabled", "false")
     .getOrCreate()
 
-  /** Spark jobs started while `f` runs (a marker job fences the
-    * asynchronous listener bus). */
-  private def jobsOf(f: => Unit): Int = {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    val marker = "eager-fill-marker"
-    val descs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        descs.add(Option(e.properties).map(_.getProperty("spark.job.description", ""))
-          .getOrElse(""))
-    }
-    val sc = spark.sparkContext
-    sc.addSparkListener(listener)
-    try {
-      f
-      sc.setJobDescription(marker)
-      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
-      while (!descs.asScala.exists(_ == marker)) Thread.sleep(20)
-    } finally sc.removeSparkListener(listener)
-    descs.asScala.count(_ != marker)
-  }
+  private def jobsOf(f: => Unit): Int = SparkJobs.of(spark)(f)
 
   private def docs: DataFrame = {
     val s = spark
@@ -85,18 +64,23 @@ class EagerFillSpec extends AnyFunSuite {
     // commit 29fc78e ran 4, 3, 5. lshCandidatePairs ran 4, then 3 with
     // Checkpoint.fill; since it aggregates buckets instead of self-joining
     // a persisted band table it fills nothing and runs 0.
+    // connectedComponents ran a sizing count and its contraction's
+    // eager checkpoint; sized from statistics, a one-partition graph
+    // is a lazy plan and runs 0.
     val sig = Dedup.minhashSignatures(docs, "doc", "text")
     val planes = Similarity.seededHyperplanes(7L, 4, 8)
     val jobs = Seq(
       "ngramJaccardPairs" -> jobsOf(Dedup.ngramJaccardPairs(docs, "doc", "text")),
       "lshCandidatePairs" -> jobsOf(Dedup.lshCandidatePairs(sig, nBands = 2)),
+      "connectedComponents" ->
+        jobsOf(Dedup.connectedComponents(Dedup.lshCandidatePairs(sig, nBands = 2))),
       "embeddingNearDupPairs" ->
         jobsOf(Dedup.embeddingNearDupPairs(vectors, "vec_id", "embedding", planes, 0.9)),
       "ivfTopK" -> jobsOf(Similarity.ivfTopK(vectors, "vec_id", "embedding",
         queryId = 0L, k = 3, nLists = 4, nProbe = 2)))
     info(jobs.map { case (op, n) => s"$op: $n" }.mkString(", "))
     val budget = Map("ngramJaccardPairs" -> 3, "lshCandidatePairs" -> 0,
-      "embeddingNearDupPairs" -> 1, "ivfTopK" -> 4)
+      "connectedComponents" -> 0, "embeddingNearDupPairs" -> 1, "ivfTopK" -> 4)
     jobs.foreach { case (op, n) =>
       assert(n <= budget(op), s"$op's eager fill ran $n jobs (> ${budget(op)})")
     }

@@ -131,6 +131,28 @@ class PlanSpec extends AnyFunSuite {
     }
   }
 
+  test("frontierCurrent plans no update fold on init's empty log or a compacted store") {
+    import graft.crawl.CrawlEngine
+    val cfg = graft.synth.Synth.Config(nHosts = 6, urlsPerHostPerWave = 5, nWaves = 2,
+      compactEvery = 0)
+    def freshStore() = new graft.store.SnapshotStore(
+      java.nio.file.Files.createTempDirectory("plan-frontier").toString)
+    def executed(store: graft.store.SnapshotStore): String =
+      CrawlEngine.frontierCurrent(spark, store).queryExecution.executedPlan.toString()
+    def folds(p: String): Boolean = p.contains("Aggregate") || p.contains("Join")
+    val initial = freshStore()
+    new CrawlEngine(spark, cfg, initial).init()
+    val empty = executed(initial)
+    assert(!folds(empty), s"fold planned over init's empty log:\n$empty")
+    val store = freshStore()
+    new CrawlEngine(spark, cfg, store).run()
+    val raw = executed(store)
+    assert(folds(raw), s"a log with appends must fold its update rows:\n$raw")
+    CrawlEngine.compactForRead(spark, store, cfg.nBuckets)
+    val compacted = executed(store)
+    assert(!folds(compacted), s"fold planned over a compacted log:\n$compacted")
+  }
+
   test("q_ann_srp_multiprobe: single corpus scan joined to a 1-row broadcast query") {
     val p = plan("q_ann_srp_multiprobe")
     assert(p.contains("TakeOrderedAndProject"), s"top-k degraded to full sort:\n$p")

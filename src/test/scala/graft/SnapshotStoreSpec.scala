@@ -123,4 +123,34 @@ class SnapshotStoreSpec extends AnyFunSuite {
       StructField("v", StringType))), "a", 2)
     assert(st.read(spark, "a").count() == 0)
   }
+
+  test("appendedSinceFullWrite: appends mark snapshots until a full write") {
+    import SnapshotStore.FusedPart
+    import java.nio.file.Paths
+    val st = fresh()
+    def rows(vs: (Int, String)*) = vs.toDF("host_bucket", "v")
+    st.writeEmpty(rows().schema, "e", -1)
+    st.write(rows((0, "a")), "t", -1)
+    assert(!st.appendedSinceFullWrite("e") && !st.appendedSinceFullWrite("t"))
+    val full = st.currentSnapshot("t").get
+    val appended = st.appendDelta(rows((0, "b")), "t", 0, bucketCol = Some("host_bucket"))
+    assert(st.appendedSinceFullWrite("t"))
+    // an append part of a fused write keeps the mark; a full write clears it
+    st.writeFused(Seq(FusedPart("t", rows((1, "c")), append = true)), wave = 1)
+    assert(st.appendedSinceFullWrite("t"))
+    st.write(rows((0, "m")), "t", 2)
+    assert(!st.appendedSinceFullWrite("t"))
+    // rollback restores each snapshot's own answer
+    st.rollbackTo("t", appended)
+    assert(st.appendedSinceFullWrite("t"))
+    st.rollbackTo("t", full)
+    assert(!st.appendedSinceFullWrite("t"))
+    // a manifest written before the field existed reads as appended
+    val mp = Paths.get(st.root, "t", "manifest.json")
+    Files.writeString(mp, Files.readString(mp).replaceAll(",\"appended\":(true|false)", ""))
+    assert(!Files.readString(mp).contains("appended"))
+    assert(st.appendedSinceFullWrite("t"))
+    // answering launches no Spark job
+    assert(SparkJobs.of(spark)(Seq("e", "t").foreach(st.appendedSinceFullWrite)) == 0)
+  }
 }
