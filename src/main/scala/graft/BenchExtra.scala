@@ -56,12 +56,11 @@ object BenchExtra {
             // left behind: free both, as perfbench does between passes
             spark.catalog.clearCache()
             spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
+            // a failing rep ends the run with its error: it has no timing
             val t0 = System.nanoTime()
-            try {
-              spark.sparkContext.setJobDescription(s"bench-extra: $name")
-              all(name)(spark, sfDir).write.format("noop")
-                .mode("overwrite").save()
-            } catch { case _: Throwable => () }
+            spark.sparkContext.setJobDescription(s"bench-extra: $name")
+            all(name)(spark, sfDir).write.format("noop")
+              .mode("overwrite").save()
             (System.nanoTime() - t0) / 1e9
           }
           name -> times

@@ -17,15 +17,15 @@ import scala.reflect.runtime.universe.TypeTag
   *
   * Scale notes (100 TB design): every operator here is a pure
   * shuffle-on-key dataflow — no driver-side state, no collect. The
-  * candidate-pair generators (shingle join, LSH buckets) are the only
-  * quadratic-risk steps; both carry a frequent-key prune (`maxDocsPerKey`)
-  * that bounds per-key fanout, the standard stop-shingle treatment —
-  * at cluster scale this is what keeps the shuffle skew-free (hot
-  * shingles are exactly the keys AQE skew-split would otherwise chase).
-  * The shingle join prunes with a count and a semi-join. The LSH prune
-  * is the cap of its per-bucket id buffer: a partial buffer holds at
-  * most `maxDocsPerKey` ids, and a stop key ships one count per map
-  * task, never its ids, so no reducer turns hot.
+  * candidate-pair generators (n-gram shingles, LSH buckets) are the
+  * only quadratic-risk steps; both carry a frequent-key prune
+  * (`maxDocsPerKey`) that bounds per-key fanout, the standard
+  * stop-shingle treatment — at cluster scale this is what keeps the
+  * shuffle skew-free (hot shingles are exactly the keys AQE skew-split
+  * would otherwise chase). Both generate their pairs from one capped
+  * aggregation per key, [[CappedIds]], with no self-join: a partial
+  * buffer holds at most `maxDocsPerKey` items, and a stop key ships one
+  * count per map task, never its items, so no reducer turns hot.
   */
 object Dedup {
 
@@ -37,53 +37,46 @@ object Dedup {
       .agg(min(col(idCol)).as("keep_id"), count(lit(1)).as("n_dups"))
 
   /** Distinct word k-shingles per document: (id, sh). */
-  def shingles(docs: DataFrame, idCol: String, textCol: String, k: Int = 3): DataFrame = {
+  def shingles(docs: DataFrame, idCol: String, textCol: String, k: Int = 3): DataFrame =
+    everyShingle(docs, idCol, textCol, k).distinct()
+
+  /** Every word k-shingle of every document, repeats included: (id, sh). */
+  private def everyShingle(docs: DataFrame, idCol: String, textCol: String, k: Int): DataFrame = {
     val parts = (0 until k).map(i => s"t[i+$i]").mkString(", ")
     docs.select(col(idCol).as("doc"), split(col(textCol), " ").as("t"))
       .filter(size(col("t")) >= k)
       .select(col("doc"), explode(
         expr(s"transform(sequence(0, size(t)-$k), i -> concat_ws(' ', $parts))")).as("sh"))
-      .distinct()
   }
 
-  /** Candidate near-dup pairs with n-gram Jaccard similarity.
-    * Pair generation joins on shared shingles; shingles held by more
-    * than `maxDocsPerKey` docs are pruned (stop-shingles) to bound the
-    * join fanout. Jaccard computed exactly from distinct-shingle counts. */
+  /** Candidate near-dup pairs with n-gram Jaccard similarity, as
+    * (id_a, id_b, inter, jaccard) with id_a < id_b in Spark's order.
+    * One aggregation per doc gathers its distinct k-shingles, whose
+    * number is the doc's size `sz` (every distinct shingle, pruned ones
+    * included); one aggregation per shingle gathers its (doc, sz) items
+    * into a [[CappedIds]] buffer, which drops them once the shingle is
+    * held by more than `maxDocsPerKey` docs (the stop-shingle prune); a
+    * double explode and one count per pair give `inter`, so Jaccard is
+    * exact from `inter` and the two sizes. No join, no persist. Ids are
+    * bigint, int or string; a null id counts toward a shingle's cap but
+    * never pairs. */
   def ngramJaccardPairs(docs: DataFrame, idCol: String, textCol: String,
                         k: Int = 3, threshold: Double = 0.1,
                         maxDocsPerKey: Int = 100): DataFrame = {
-    // persist the shingle set: it feeds the stop-shingle agg, BOTH sides
-    // of the intersection self-join, and the per-doc sizes — without the
-    // persist the explode + 2-shuffle distinct subtree is planned (and
-    // executed) 5× in one query (r6 before-plan: 4 full scan→Generate→
-    // HashAggregate chains + no exchange reuse). Guide §5: reuse ≥ 2 and
-    // expensive recompute is exactly the persist case; MEMORY_AND_DISK
-    // (default) spills instead of OOMing at scale.
-    val sh = shingles(docs, idCol, textCol, k).persist()
-    // EAGER fill: the first action launches several broadcast-side
-    // builds concurrently, and each thread that finds the cache cold
-    // recomputes the full subtree (measured: lazy persist alone did not
-    // move q_dedup_ngram_jaccard). One cheap fill materializes the
-    // cache once, before any consumer races.
-    Checkpoint.fill(sh)
-    // stop-shingle prune as hash-agg + semi-join (map-side combinable)
-    // instead of a per-shingle window, which would add a full sort
-    val rare = sh.groupBy("sh").agg(count(lit(1)).as("n_docs"))
-      .filter(col("n_docs") <= maxDocsPerKey).select("sh")
-    val kept = sh.join(rare, Seq("sh"), "left_semi").select("doc", "sh")
-    val sizes = sh.groupBy("doc").agg(count(lit(1)).as("sz"))
-    val inter = kept.as("a").join(kept.as("b"),
-        col("a.sh") === col("b.sh") && col("a.doc") < col("b.doc"))
-      .groupBy(col("a.doc").as("id_a"), col("b.doc").as("id_b"))
-      .agg(count(lit(1)).as("inter"))
-    inter
-      .join(sizes.as("sa"), col("id_a") === col("sa.doc"))
-      .join(sizes.as("sb"), col("id_b") === col("sb.doc"))
-      .withColumn("jaccard",
-        col("inter") / (col("sa.sz") + col("sb.sz") - col("inter")))
+    val perDoc = everyShingle(docs, idCol, textCol, k)
+      .groupBy("doc").agg(collect_set(col("sh")).as("shs"))
+    val items = cappedIds("ngramJaccardPairs", perDoc.schema("doc").dataType, maxDocsPerKey,
+      sized = true)
+    perDoc
+      .select(col("doc"), size(col("shs")).cast(LongType).as("sz"), explode(col("shs")).as("sh"))
+      .groupBy("sh").agg(items(col("doc"), col("sz")).as("items"))
+      .select(explode(col("items")).as("a"), col("items"))
+      .select(col("a"), explode(col("items")).as("b"))
+      .filter(col("a._1") < col("b._1"))
+      .groupBy("a", "b").agg(count(lit(1)).as("inter"))
+      .select(col("a._1").as("id_a"), col("b._1").as("id_b"), col("inter"),
+        (col("inter") / (col("a._2") + col("b._2") - col("inter"))).as("jaccard"))
       .filter(col("jaccard") >= threshold)
-      .select("id_a", "id_b", "inter", "jaccard")
   }
 
   /** MinHash signatures (nHashes mins over md5(seed|shingle)) grouped
@@ -117,7 +110,7 @@ object Dedup {
     * but a null id is never paired. */
   def lshCandidatePairs(signatures: DataFrame, nBands: Int,
                         maxDocsPerKey: Int = 1000): DataFrame = {
-    val ids = cappedIds(signatures.schema("doc").dataType, maxDocsPerKey)
+    val ids = cappedIds("lshCandidatePairs", signatures.schema("doc").dataType, maxDocsPerKey)
     signatures
       .select(col("doc"),
         posexplode(array((0 until nBands).map(b => col(s"band$b")): _*)).as(Seq("band", "key")))
@@ -129,25 +122,34 @@ object Dedup {
       .distinct()
   }
 
-  private def cappedIds(idType: DataType, cap: Int): UserDefinedFunction = idType match {
-    case LongType => udaf(new CappedIds[java.lang.Long](cap), Encoders.LONG)
-    case IntegerType => udaf(new CappedIds[Integer](cap), Encoders.INT)
-    case StringType => udaf(new CappedIds[String](cap), Encoders.STRING)
-    case other => throw new IllegalArgumentException(
-      s"lshCandidatePairs: id type ${other.simpleString} is not bigint, int or string")
+  /** The [[CappedIds]] aggregate for an id column of `idType`: over the
+    * ids alone, or when `sized` over (id, bigint size) pairs. */
+  private def cappedIds(op: String, idType: DataType, cap: Int,
+                        sized: Boolean = false): UserDefinedFunction = {
+    def of[T >: Null : TypeTag](ids: Encoder[T]): UserDefinedFunction =
+      if (sized) udaf(new CappedIds[(T, java.lang.Long)](cap, _._1 == null),
+        Encoders.tuple(ids, Encoders.LONG))
+      else udaf(new CappedIds[T](cap, _ == null), ids)
+    idType match {
+      case LongType => of(Encoders.LONG)
+      case IntegerType => of(Encoders.INT)
+      case StringType => of(Encoders.STRING)
+      case other => throw new IllegalArgumentException(
+        s"$op: id type ${other.simpleString} is not bigint, int or string")
+    }
   }
 
-  /** One LSH bucket's ids, bounded: the bucket's row count and, while
-    * that count is at most `cap`, its non-null ids. A count only grows
-    * under reduce and merge, so once past the cap the ids are dropped
-    * for good: a partial buffer holds at most `cap` ids, and a stop key
-    * ships one count per map task. Emits the ids, none past the cap. */
-  private final class CappedIds[T >: Null](cap: Int)(implicit tt: TypeTag[T])
+  /** One key's items, bounded: the key's row count and, while that count
+    * is at most `cap`, its items with a non-null id. A count only grows
+    * under reduce and merge, so once past the cap the items are dropped
+    * for good: a partial buffer holds at most `cap` items, and a stop key
+    * ships one count per map task. Emits the items, none past the cap. */
+  private final class CappedIds[T](cap: Int, nullId: T => Boolean)(implicit tt: TypeTag[T])
     extends Aggregator[T, (Long, List[T]), Seq[T]] {
     private type Buf = (Long, List[T])
-    private def keep(n: Long, ids: => List[T]): Buf = (n, if (n > cap) Nil else ids)
+    private def keep(n: Long, items: => List[T]): Buf = (n, if (n > cap) Nil else items)
     def zero: Buf = (0L, Nil)
-    def reduce(b: Buf, id: T): Buf = keep(b._1 + 1, if (id == null) b._2 else id :: b._2)
+    def reduce(b: Buf, item: T): Buf = keep(b._1 + 1, if (nullId(item)) b._2 else item :: b._2)
     def merge(x: Buf, y: Buf): Buf = keep(x._1 + y._1, x._2 ::: y._2)
     def finish(b: Buf): Seq[T] = b._2
     // spelled out: the TypeTag of the alias `Buf` does not carry T's tag
@@ -360,7 +362,10 @@ object Dedup {
     // otherwise be evaluated twice per row (guide §5)
     val withB = vectors.select(col(idCol), col(vecCol),
       Similarity.srpBucketSeeded(col(vecCol), planes).as("bucket")).persist()
-    Checkpoint.fill(withB) // eager fill — see ngramJaccardPairs
+    // EAGER fill: the first action builds the join's sides concurrently,
+    // and each thread that finds the cache cold recomputes the subtree;
+    // one cheap fill materializes it once, before any consumer races
+    Checkpoint.fill(withB)
     val a = withB.select(col(idCol).as("id_a"), col(vecCol).as("va"), col("bucket"))
     val b = withB.select(col(idCol).as("id_b"), col(vecCol).as("vb"), col("bucket"))
     a.join(b, Seq("bucket"))

@@ -56,17 +56,28 @@ object Similarity {
     * within it. At scale the bucket column is the table's partition
     * key, so this prunes partitions at the scan. */
   def bucketedTopK(vectors: DataFrame, idCol: String, vecCol: String,
-                   queryId: Long, k: Int, nBits: Int = 8): DataFrame = {
-    // persisted: the bucketed corpus feeds both the broadcast query row
-    // and the probe side, halving the bucket-signature evaluation
-    val withB = vectors.withColumn("bucket", srpBucket(col(vecCol), nBits))
-      .persist()
-    val q = withB.filter(col(idCol) === queryId)
-      .select(col(vecCol).as("qv"), col("bucket").as("qb"))
-    withB.join(broadcast(q), col("bucket") === col("qb"))
+                   queryId: Long, k: Int, nBits: Int = 8): DataFrame =
+    probeTopK(vectors, idCol, vecCol, queryId, k,
+      Seq("bucket" -> srpBucket(col(vecCol), nBits)), _ === _, shown = Seq("bucket"))
+
+  /** The bucket probe of [[bucketedTopK]], [[multiprobeTopK]] and
+    * [[multiTableTopK]]: each named key is an expression over `vecCol`;
+    * a corpus row is a candidate when `collide(key, query's key)` holds
+    * for ANY key, and the top `k` candidates by exact cosine come out as
+    * (idCol, shown keys..., cos). The query row keys its own vector from
+    * `vectors.filter(idCol === queryId)` and is broadcast, so the corpus
+    * is keyed once, in the probe scan, and nothing is persisted. */
+  private def probeTopK(vectors: DataFrame, idCol: String, vecCol: String,
+                        queryId: Long, k: Int, keys: Seq[(String, Column)],
+                        collide: (Column, Column) => Column,
+                        shown: Seq[String] = Nil): DataFrame = {
+    val q = vectors.filter(col(idCol) === queryId)
+      .select(col(vecCol).as("qv") +: keys.map { case (n, key) => key.as(s"q_$n") }: _*)
+    vectors.select(col(idCol) +: col(vecCol) +: keys.map { case (n, key) => key.as(n) }: _*)
+      .join(broadcast(q), keys.map { case (n, _) => collide(col(n), col(s"q_$n")) }.reduce(_ || _))
       .filter(col(idCol) =!= queryId)
-      .select(col(idCol), col("bucket"),
-        trunc4(cosine(col(vecCol), col("qv"))).as("cos"))
+      .select(col(idCol) +: shown.map(col) :+
+        trunc4(cosine(col(vecCol), col("qv"))).as("cos"): _*)
       .orderBy(desc("cos"), asc(idCol))
       .limit(k)
   }
@@ -115,22 +126,10 @@ object Similarity {
     * Recall vs [[bruteForceTopK]] is asserted in AnnSpec. */
   def multiTableTopK(vectors: DataFrame, idCol: String, vecCol: String,
                      queryId: Long, k: Int,
-                     tables: Seq[Array[Array[Double]]]): DataFrame = {
-    // persisted: L tables of k seeded-hyperplane dots per row, referenced
-    // by the broadcast query row AND the corpus probe side
-    val withB = tables.zipWithIndex.foldLeft(vectors) { case (df, (planes, t)) =>
-      df.withColumn(s"b$t", srpBucketSeeded(col(vecCol), planes))
-    }.persist()
-    val q = withB.filter(col(idCol) === queryId)
-      .select(col(vecCol).as("qv") +:
-        tables.indices.map(t => col(s"b$t").as(s"qb$t")): _*)
-    val collide = tables.indices.map(t => col(s"b$t") === col(s"qb$t")).reduce(_ || _)
-    withB.join(broadcast(q), collide)
-      .filter(col(idCol) =!= queryId)
-      .select(col(idCol), trunc4(cosine(col(vecCol), col("qv"))).as("cos"))
-      .orderBy(desc("cos"), asc(idCol))
-      .limit(k)
-  }
+                     tables: Seq[Array[Array[Double]]]): DataFrame =
+    probeTopK(vectors, idCol, vecCol, queryId, k,
+      tables.zipWithIndex.map { case (planes, t) => s"b$t" -> srpBucketSeeded(col(vecCol), planes) },
+      _ === _)
 
   /** Fold over the (cid-sorted) centroid array keeping the argmax-cosine
     * centroid id; strict `>` keeps the FIRST (lowest-cid) winner on
@@ -175,7 +174,7 @@ object Similarity {
     val assigned = base.crossJoin(broadcast(cents))
       .withColumn("cluster", argmaxCentroid(col("v"), col("cents")))
       .persist()
-    graft.core.Checkpoint.fill(assigned) // eager fill — see Dedup.ngramJaccardPairs
+    graft.core.Checkpoint.fill(assigned) // eager fill — see Dedup.embeddingNearDupPairs
     val q = assigned.filter(col(idCol) === queryId)
       .select(col("v").as("qv"), col("cents"))
     // the query's nProbe nearest centroids (centroid-cardinality work)
@@ -201,18 +200,8 @@ object Similarity {
     * nBits+1 partition lookups instead of a corpus scan; recall is
     * asserted against [[bruteForceTopK]] in AnnSpec. */
   def multiprobeTopK(vectors: DataFrame, idCol: String, vecCol: String,
-                     queryId: Long, k: Int, planes: Array[Array[Double]]): DataFrame = {
-    // persisted: same two-consumer shape as bucketedTopK
-    val withB = vectors.withColumn("bucket", srpBucketSeeded(col(vecCol), planes))
-      .persist()
-    val q = withB.filter(col(idCol) === queryId)
-      .select(col(vecCol).as("qv"), col("bucket").as("qb"))
-    withB.join(broadcast(q),
-        bit_count(col("bucket").bitwiseXOR(col("qb"))) <= 1)
-      .filter(col(idCol) =!= queryId)
-      .select(col(idCol), col("bucket"),
-        trunc4(cosine(col(vecCol), col("qv"))).as("cos"))
-      .orderBy(desc("cos"), asc(idCol))
-      .limit(k)
-  }
+                     queryId: Long, k: Int, planes: Array[Array[Double]]): DataFrame =
+    probeTopK(vectors, idCol, vecCol, queryId, k,
+      Seq("bucket" -> srpBucketSeeded(col(vecCol), planes)),
+      (b, qb) => bit_count(b.bitwiseXOR(qb)) <= 1, shown = Seq("bucket"))
 }

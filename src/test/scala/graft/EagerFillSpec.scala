@@ -8,9 +8,9 @@ import org.apache.spark.storage.StorageLevel
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The eager fills of freshly persisted intermediates: how many Spark
-  * jobs one fill runs, on its own and at the three ops that fill a
-  * persist before their consumers race for it; and `lshCandidatePairs`,
-  * which persists nothing. */
+  * jobs one fill runs, on its own and at the two ops that fill a
+  * persist before their consumers race for it; and the pair generators
+  * and bucket probes, which persist nothing. */
 class EagerFillSpec extends AnyFunSuite {
 
   lazy val spark: SparkSession = SparkSession.builder()
@@ -59,11 +59,13 @@ class EagerFillSpec extends AnyFunSuite {
     // jobs each op runs when it is DEFINED (its eager fill, with the
     // map stages of the plan it caches; every other part of the op is
     // lazy), on a fresh input, local[4], 4 shuffle partitions, AQE on.
-    // Measured with Checkpoint.fill (two runs): ngramJaccardPairs 3,
-    // embeddingNearDupPairs 1, ivfTopK 4. The Dataset.count() fills of
-    // commit 29fc78e ran 4, 3, 5. lshCandidatePairs ran 4, then 3 with
-    // Checkpoint.fill; since it aggregates buckets instead of self-joining
-    // a persisted band table it fills nothing and runs 0.
+    // Measured with Checkpoint.fill (two runs): embeddingNearDupPairs 1,
+    // ivfTopK 4. The Dataset.count() fills of commit 29fc78e ran 3 and 5.
+    // lshCandidatePairs ran 4, then 3 with Checkpoint.fill, and
+    // ngramJaccardPairs 4, then 3; since both aggregate per key instead
+    // of self-joining a persisted table they fill nothing and run 0, as
+    // do the bucket probes, which key the query row from itself instead
+    // of reading it back from a persisted keyed corpus.
     // connectedComponents ran a sizing count and its contraction's
     // eager checkpoint; sized from statistics, a one-partition graph
     // is a lazy plan and runs 0.
@@ -77,23 +79,50 @@ class EagerFillSpec extends AnyFunSuite {
       "embeddingNearDupPairs" ->
         jobsOf(Dedup.embeddingNearDupPairs(vectors, "vec_id", "embedding", planes, 0.9)),
       "ivfTopK" -> jobsOf(Similarity.ivfTopK(vectors, "vec_id", "embedding",
-        queryId = 0L, k = 3, nLists = 4, nProbe = 2)))
+        queryId = 0L, k = 3, nLists = 4, nProbe = 2))) ++
+      probes.map { case (op, probe) => op -> jobsOf(probe()) }
     info(jobs.map { case (op, n) => s"$op: $n" }.mkString(", "))
-    val budget = Map("ngramJaccardPairs" -> 3, "lshCandidatePairs" -> 0,
-      "connectedComponents" -> 0, "embeddingNearDupPairs" -> 1, "ivfTopK" -> 4)
+    val budget = Map("ngramJaccardPairs" -> 0, "lshCandidatePairs" -> 0,
+      "connectedComponents" -> 0, "embeddingNearDupPairs" -> 1, "ivfTopK" -> 4,
+      "bucketedTopK" -> 0, "multiprobeTopK" -> 0, "multiTableTopK" -> 0)
     jobs.foreach { case (op, n) =>
       assert(n <= budget(op), s"$op's eager fill ran $n jobs (> ${budget(op)})")
     }
     spark.catalog.clearCache()
   }
 
-  test("lshCandidatePairs persists nothing: the caller's signatures stay uncached") {
-    val sig = Dedup.minhashSignatures(docs, "doc", "text")
+  /** The three bucket probes over `vectors`, by name. */
+  private def probes: Seq[(String, () => DataFrame)] = {
+    val planes = Similarity.seededHyperplanes(7L, 4, 8)
+    Seq(
+      "bucketedTopK" -> (() => Similarity.bucketedTopK(vectors, "vec_id", "embedding",
+        queryId = 0L, k = 3, nBits = 4)),
+      "multiprobeTopK" -> (() => Similarity.multiprobeTopK(vectors, "vec_id", "embedding",
+        queryId = 0L, k = 3, planes = planes)),
+      "multiTableTopK" -> (() => Similarity.multiTableTopK(vectors, "vec_id", "embedding",
+        queryId = 0L, k = 3, tables = Similarity.hyperplaneTables(7L, 2, 4, 8))))
+  }
+
+  test("the block counter sees a persist that is left filled") {
+    val left = vectors.select((col("vec_id") * 5).as("x")).persist()
+    val blocks = SparkJobs.rddBlocksLeftBy(spark)(Checkpoint.fill(left))
+    assert(blocks.nonEmpty, "a filled persist left no RDD block")
+    left.unpersist(blocking = true)
+  }
+
+  test("the pair generators and bucket probes persist nothing and leave no block") {
     val cache = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
       .sharedState.cacheManager
-    spark.catalog.clearCache()
-    assert(Dedup.lshCandidatePairs(sig, nBands = 2).count() > 0L)
+    val sig = Dedup.minhashSignatures(docs, "doc", "text")
+    val ops = Seq[(String, () => DataFrame)](
+      "lshCandidatePairs" -> (() => Dedup.lshCandidatePairs(sig, nBands = 2)),
+      "ngramJaccardPairs" -> (() => Dedup.ngramJaccardPairs(docs, "doc", "text"))) ++ probes
+    ops.foreach { case (op, run) =>
+      spark.catalog.clearCache()
+      val blocks = SparkJobs.rddBlocksLeftBy(spark)(assert(run().count() > 0L, s"$op is empty"))
+      assert(blocks.isEmpty, s"$op left RDD blocks stored: ${blocks.mkString(", ")}")
+      assert(cache.isEmpty, s"$op left a CacheManager entry behind")
+    }
     assert(sig.storageLevel == StorageLevel.NONE, "the caller's signature frame was persisted")
-    assert(cache.isEmpty, "the call left a CacheManager entry behind")
   }
 }

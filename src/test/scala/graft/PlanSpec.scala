@@ -153,10 +153,47 @@ class PlanSpec extends AnyFunSuite {
     assert(!folds(compacted), s"fold planned over a compacted log:\n$compacted")
   }
 
-  test("q_ann_srp_multiprobe: single corpus scan joined to a 1-row broadcast query") {
-    val p = plan("q_ann_srp_multiprobe")
+  /** A bucket probe's plan: it reads no persisted intermediate, keeps its
+    * map-side top-k, and joins the query row without a shuffle. The
+    * cache is cleared first: `embeddingNearDupPairs` leaves its bucketed
+    * corpus cached, and the multiprobe corpus plan matches it. */
+  private def assertProbeShape(q: String): Unit = {
+    import org.apache.spark.sql.execution.columnar.InMemoryRelation
+    spark.catalog.clearCache()
+    val logical = SparkEntry.queries(q)(spark, dir).queryExecution.optimizedPlan
+    assert(logical.find(_.isInstanceOf[InMemoryRelation]).isEmpty,
+      "a persisted intermediate is read")
+    val p = plan(q)
     assert(p.contains("TakeOrderedAndProject"), s"top-k degraded to full sort:\n$p")
     assert(!p.contains("SortMergeJoin"), s"query join degraded to SMJ:\n$p")
+  }
+
+  test("q_ann_srp_multiprobe: single corpus scan joined to a 1-row broadcast query") {
+    assertProbeShape("q_ann_srp_multiprobe")
+  }
+
+  Seq("q_ann_bucketed_topk", "q_ann_multitable").foreach { q =>
+    test(s"$q: the bucket probe reads no cache and keeps its top-k") {
+      assertProbeShape(q)
+    }
+  }
+
+  test("q_dedup_ngram_jaccard: one aggregation keyed by the shingle, no join, no cache") {
+    import org.apache.spark.sql.catalyst.expressions.NamedExpression
+    import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Join}
+    import org.apache.spark.sql.execution.columnar.InMemoryRelation
+    val df = SparkEntry.queries("q_dedup_ngram_jaccard")(spark, dir)
+    val logical = df.queryExecution.optimizedPlan
+    assert(logical.find(_.isInstanceOf[Join]).isEmpty, s"pair generation joins:\n$logical")
+    assert(logical.find(_.isInstanceOf[InMemoryRelation]).isEmpty,
+      s"a persisted intermediate is read:\n$logical")
+    val byShingle = logical.collect {
+      case a: Aggregate if a.groupingExpressions.map {
+        case n: NamedExpression => n.name
+        case e => e.sql
+      } == Seq("sh") => a
+    }
+    assert(byShingle.size == 1, s"${byShingle.size} aggregations keyed by the shingle:\n$logical")
   }
 
   test("q_x4_content_type: pattern table broadcast, no shuffle of the results scan") {

@@ -1,34 +1,67 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerBlockUpdated, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.storage.BlockId
 import scala.jdk.CollectionConverters._
 
-/** The Spark jobs a body starts, for the job-budget tests. */
+/** The Spark jobs a body starts and the RDD blocks it leaves stored, for
+  * the job-budget and leak tests. */
 object SparkJobs {
 
-  /** Start times (epoch ms) of the Spark jobs `body` runs. The listener
-    * bus is asynchronous but ordered: once a marker job submitted after
-    * `body` is seen, every earlier job has been seen too. */
-  def startsOf(spark: SparkSession)(body: => Unit): Seq[Long] = {
+  /** Runs `body` with `listener` installed and returns once the listener
+    * has seen every event `body` caused. The listener bus is asynchronous
+    * but ordered: once a marker job submitted after `body` is seen, every
+    * earlier event has been seen too. The marker job's start is not
+    * passed on. */
+  private def observed(spark: SparkSession, listener: SparkListener)(body: => Unit): Unit = {
     val marker = "job-budget-marker"
-    val starts = new java.util.concurrent.ConcurrentLinkedQueue[(Long, String)]()
-    val listener = new SparkListener {
+    @volatile var flushed = false
+    val flush = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
-        starts.add((e.time, Option(e.properties)
-          .map(_.getProperty("spark.job.description", "")).getOrElse("")))
+        if (Option(e.properties).exists(_.getProperty("spark.job.description", "") == marker)) {
+          flushed = true
+        } else listener.onJobStart(e)
+      override def onBlockUpdated(e: SparkListenerBlockUpdated): Unit = listener.onBlockUpdated(e)
     }
     val sc = spark.sparkContext
-    sc.addSparkListener(listener)
+    sc.addSparkListener(flush)
     try {
       body
       sc.setJobDescription(marker)
       try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
-      while (!starts.asScala.exists(_._2 == marker)) Thread.sleep(20)
-    } finally sc.removeSparkListener(listener)
-    starts.asScala.toSeq.collect { case (t, d) if d != marker => t }
+      while (!flushed) Thread.sleep(20)
+    } finally sc.removeSparkListener(flush)
+  }
+
+  /** Start times (epoch ms) of the Spark jobs `body` runs. */
+  def startsOf(spark: SparkSession)(body: => Unit): Seq[Long] = {
+    val starts = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
+    observed(spark, new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = starts.add(e.time)
+    })(body)
+    starts.asScala.toSeq
   }
 
   /** The number of Spark jobs `body` runs. */
   def of(spark: SparkSession)(body: => Unit): Int = startsOf(spark)(body).size
+
+  /** The RDD blocks that `body` stored and that are still stored when it
+    * returns, from the block managers' own reports: a block stored with a
+    * valid level counts until an update reports it gone. A persist or a
+    * checkpoint that is never freed leaves its blocks here, whether or
+    * not its RDD is still reachable (`SparkContext.getPersistentRDDs`
+    * holds its RDDs weakly, so it cannot tell). */
+  def rddBlocksLeftBy(spark: SparkSession)(body: => Unit): Set[BlockId] = {
+    val stored = java.util.concurrent.ConcurrentHashMap.newKeySet[BlockId]()
+    observed(spark, new SparkListener {
+      override def onBlockUpdated(e: SparkListenerBlockUpdated): Unit = {
+        val info = e.blockUpdatedInfo
+        if (info.blockId.isRDD) {
+          if (info.storageLevel.isValid) stored.add(info.blockId) else stored.remove(info.blockId)
+        }
+      }
+    })(body)
+    stored.asScala.toSet
+  }
 }
