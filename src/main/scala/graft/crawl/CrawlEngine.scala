@@ -1053,7 +1053,8 @@ object CrawlEngine {
   /** Deterministic fetch resolver — the synthetic server. Computes the
     * ground-truth payload, applies the fault schedule (with F10
     * transient-404 recovery), classifies content type (X4), and
-    * verifies the decode round-trip (phash + PSNR fidelity invariant).
+    * decodes the payload to record its dimensions and phash. It
+    * computes no PSNR: CrawlEngineSpec checks the round-trip fidelity.
     * Lives on the companion so the fetch closure ships no engine
     * state. */
   private[crawl] def resolve(c: Synth.Config, contentPats: Seq[(String, String, String)],

@@ -3,22 +3,15 @@ package graft.crawl
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** Frontier maintenance operators (SURVEY.md §2.11). All are pure
-  * snapshot-rewrite transformations: apply to the current frontier
-  * snapshot and commit the result — never in-place mutation. */
+/** Frontier maintenance operators (SURVEY.md §2.11): two reports over
+  * the frontier and one pure snapshot rewrite, which applies to the
+  * current frontier snapshot and commits the result — never in-place
+  * mutation. */
 object Maintenance {
 
-  /** M1: stale-candidate expiry — `article` rows discovered more than
-    * `maxAgeWaves` ago flip to `paused`
-    * (reference: cleanup_candidates.py:38-128). */
-  def expireStale(frontier: DataFrame, currentWave: Int, maxAgeWaves: Int): DataFrame =
-    frontier.withColumn("status",
-      when(col("status") === "article" &&
-        col("discovered_wave") < lit(currentWave - maxAgeWaves), lit("paused"))
-        .otherwise(col("status")))
-
-  /** A11 companion: per-source breakdown of what expireStale would
-    * touch (reference: housekeeping.py:300-316). */
+  /** M1/A11: per-source breakdown of the stale candidates, `article`
+    * rows discovered more than `maxAgeWaves` ago (reference:
+    * cleanup_candidates.py:38-128, housekeeping.py:300-316). */
   def staleBreakdown(frontier: DataFrame, currentWave: Int, maxAgeWaves: Int): DataFrame =
     frontier.filter(col("status") === "article" &&
         col("discovered_wave") < lit(currentWave - maxAgeWaves))

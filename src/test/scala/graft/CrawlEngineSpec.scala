@@ -600,10 +600,8 @@ class CrawlEngineSpec extends AnyFunSuite {
   test("run() frees its last carry: no persistent RDD outlives the crawl") {
     // the final wave's politeness/state checkpoints are executor
     // blocks; run() must release them on return
-    val before = spark.sparkContext.getPersistentRDDs.keySet
-    new CrawlEngine(spark, cfg, freshStore()).run()
-    assert(spark.sparkContext.getPersistentRDDs.keySet == before,
-      "persistent RDDs left behind by run()")
+    val left = SparkJobs.rddBlocksLeftBy(spark)(new CrawlEngine(spark, cfg, freshStore()).run())
+    assert(left.isEmpty, s"run() left RDD blocks stored: ${left.mkString(", ")}")
   }
 
   test("scoped resume from a cold carry reproduces the uninterrupted scoped run") {

@@ -4,13 +4,14 @@ import graft.core.Checkpoint
 import graft.ops.{Dedup, Similarity}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
-import org.apache.spark.storage.StorageLevel
+import org.apache.spark.storage.{BlockId, StorageLevel}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The eager fills of freshly persisted intermediates: how many Spark
   * jobs one fill runs, on its own and at the two ops that fill a
-  * persist before their consumers race for it; and the pair generators
-  * and bucket probes, which persist nothing. */
+  * persist before their consumers race for it; the pair generators
+  * and bucket probes, which persist nothing; and the two RDD block
+  * counters that these checks use. */
 class EagerFillSpec extends AnyFunSuite {
 
   lazy val spark: SparkSession = SparkSession.builder()
@@ -104,10 +105,23 @@ class EagerFillSpec extends AnyFunSuite {
   }
 
   test("the block counter sees a persist that is left filled") {
-    val left = vectors.select((col("vec_id") * 5).as("x")).persist()
-    val blocks = SparkJobs.rddBlocksLeftBy(spark)(Checkpoint.fill(left))
-    assert(blocks.nonEmpty, "a filled persist left no RDD block")
-    left.unpersist(blocking = true)
+    val kept = vectors.select((col("vec_id") * 5).as("x")).persist()
+    var stored = Set.empty[BlockId]
+    val left = SparkJobs.rddBlocksLeftBy(spark, timeoutMs = 200L) {
+      stored = SparkJobs.rddBlocksStoredBy(spark)(Checkpoint.fill(kept))
+    }
+    assert(stored.nonEmpty, "the listener saw no block stored")
+    assert(left == stored, "the storage status and the listener disagree on a left persist")
+    kept.unpersist(blocking = true)
+  }
+
+  test("the storage status sees a freed checkpoint gone; the listener still counts it") {
+    def freed(): Unit =
+      Checkpoint.free(vectors.select((col("vec_id") * 3).as("x")).localCheckpoint(eager = true))
+    assert(SparkJobs.rddBlocksStoredBy(spark)(freed()).nonEmpty,
+      "the listener saw no block stored")
+    val left = SparkJobs.rddBlocksLeftBy(spark)(freed())
+    assert(left.isEmpty, s"a freed checkpoint left blocks: ${left.mkString(", ")}")
   }
 
   test("the pair generators and bucket probes persist nothing and leave no block") {
@@ -119,8 +133,8 @@ class EagerFillSpec extends AnyFunSuite {
       "ngramJaccardPairs" -> (() => Dedup.ngramJaccardPairs(docs, "doc", "text"))) ++ probes
     ops.foreach { case (op, run) =>
       spark.catalog.clearCache()
-      val blocks = SparkJobs.rddBlocksLeftBy(spark)(assert(run().count() > 0L, s"$op is empty"))
-      assert(blocks.isEmpty, s"$op left RDD blocks stored: ${blocks.mkString(", ")}")
+      val blocks = SparkJobs.rddBlocksStoredBy(spark)(assert(run().count() > 0L, s"$op is empty"))
+      assert(blocks.isEmpty, s"$op stored RDD blocks: ${blocks.mkString(", ")}")
       assert(cache.isEmpty, s"$op left a CacheManager entry behind")
     }
     assert(sig.storageLevel == StorageLevel.NONE, "the caller's signature frame was persisted")

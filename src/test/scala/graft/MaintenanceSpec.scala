@@ -6,7 +6,8 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.Files
 
-/** M1/M2/M3 maintenance rewrites + S12 CSV seed ingestion. */
+/** M1/M2 maintenance reports, the M3 rewrite, T3 processing cycles
+  * and S12 CSV seed ingestion. */
 class MaintenanceSpec extends AnyFunSuite {
 
   lazy val spark: SparkSession = SparkSession.builder()
@@ -24,16 +25,6 @@ class MaintenanceSpec extends AnyFunSuite {
     ("u4", "s2", "extracted", 1),
     ("u5", "s2", "404", 0)
   ).toDF("norm_url", "source_id", "status", "discovered_wave")
-
-  test("M1 expireStale pauses only old article rows") {
-    val out = Maintenance.expireStale(frontier, currentWave = 10, maxAgeWaves = 5)
-      .select("norm_url", "status").as[(String, String)].collect().toMap
-    assert(out("u1") == "paused") // old article
-    assert(out("u2") == "article") // recent article
-    assert(out("u3") == "discovered") // not article → untouched
-    assert(out("u4") == "extracted")
-    assert(out("u5") == "404")
-  }
 
   test("A11 staleBreakdown counts per source") {
     val rows = Maintenance.staleBreakdown(frontier, 10, 5).collect()
@@ -96,48 +87,5 @@ class MaintenanceSpec extends AnyFunSuite {
       .toDF("norm_url", "wave", "host", "rank", "http_status"))
     assert(!Processing.runCycles(mixed, 2, 3).select("norm_url")
       .as[String].collect().contains("u7"))
-  }
-
-  test("T3 sharded: per-shard FIFO advances with the budget split across shards") {
-    import graft.crawl.Processing
-    // shard = host_bucket mod 2: bucket 0/2 → shard 0 (5 rows),
-    // bucket 1 → shard 1 (3 rows); batch 4 over 2 shards = 2 per shard
-    val rows =
-      (0 until 5).map(i => (s"a$i", 0, "h0", i + 1, if (i % 2 == 0) 0 else 2, 200)) ++
-        (0 until 3).map(i => (s"b$i", 0, "h1", i + 1, 1, 200))
-    val results = rows.toDF("norm_url", "wave", "host", "rank", "host_bucket", "http_status")
-    val out = Processing.runCyclesSharded(results, batchSize = 4, cycles = 3, nShards = 2)
-      .select("norm_url", "article_status").as[(String, String)].collect().toMap
-    // shard 0: per-shard closed form (C-1)·B/s = 4 labeled, 1 cleaned
-    (0 until 4).foreach(i => assert(out(s"a$i") == "labeled", s"a$i: $out"))
-    assert(out("a4") == "cleaned")
-    // shard 1 drains fully: 3 rows < (C-1)·B/s
-    (0 until 3).foreach(i => assert(out(s"b$i") == "labeled", s"b$i: $out"))
-    // degenerate nShards=1 must equal the strict-global form
-    val global = Processing.runCycles(results, batchSize = 4, cycles = 3)
-      .select("norm_url", "article_status").as[(String, String)].collect().toMap
-    val sharded1 = Processing.runCyclesSharded(results, batchSize = 4, cycles = 3, nShards = 1)
-      .select("norm_url", "article_status").as[(String, String)].collect().toMap
-    assert(sharded1 == global)
-    // budget must split evenly
-    intercept[IllegalArgumentException](
-      Processing.runCyclesSharded(results, batchSize = 5, cycles = 1, nShards = 2))
-  }
-
-  test("M2 over the processing chain: stuckProcessing flags drained-rank laggards") {
-    import graft.crawl.Processing
-    val results = (0 until 7).map(i => (s"u$i", 0, "h", i + 1, 200))
-      .toDF("norm_url", "wave", "host", "rank", "http_status")
-    val processed = Processing.runCycles(results, batchSize = 2, cycles = 3)
-    // healthy chain: every rank below (C-1)B reached `labeled` → no rows
-    assert(Processing.stuckProcessing(processed, 2, 3).count() == 0)
-    // corrupt one drained-rank row back to `cleaned` → flagged
-    val corrupted = processed.withColumn("article_status",
-      org.apache.spark.sql.functions.when(
-        org.apache.spark.sql.functions.col("ord") === 1,
-        "cleaned").otherwise(org.apache.spark.sql.functions.col("article_status")))
-    val stuck = Processing.stuckProcessing(corrupted, 2, 3).collect()
-    assert(stuck.length == 1 && stuck(0).getString(0) == "cleaned" &&
-      stuck(0).getLong(1) == 1L)
   }
 }

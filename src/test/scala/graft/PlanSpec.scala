@@ -205,23 +205,16 @@ class PlanSpec extends AnyFunSuite {
     assert(!p.contains("CartesianProduct"), s"non-broadcast cartesian:\n$p")
   }
 
-  test("T3 sharded: no single-partition exchange anywhere in the plan") {
+  test("T3 global: strict FIFO keeps its one single-partition sort") {
     import spark.implicits._
     val results = (0 until 64)
-      .map(i => (s"u$i", i % 4, s"h${i % 8}", i, i % 16, 200))
-      .toDF("norm_url", "wave", "host", "rank", "host_bucket", "http_status")
-    // the strict-global form pays one single-partition sort by design
-    // (documented FIFO trade-off) — the sharded form must not
+      .map(i => (s"u$i", i % 4, s"h${i % 8}", i, 200))
+      .toDF("norm_url", "wave", "host", "rank", "http_status")
+    // the oldest-first rank is one single-partition sort by design
     val global = graft.crawl.Processing.runCycles(results, 8, 3)
       .queryExecution.explainString(ExplainMode.fromString("formatted"))
     assert(global.contains("SinglePartition"),
       s"global form unexpectedly lost its strict-FIFO single sort:\n$global")
-    val sharded = graft.crawl.Processing.runCyclesSharded(results, 8, 3, nShards = 4)
-      .queryExecution.explainString(ExplainMode.fromString("formatted"))
-    assert(!sharded.contains("SinglePartition"),
-      s"sharded form still has a single-partition exchange:\n$sharded")
-    assert(sharded.contains("hashpartitioning"),
-      s"sharded windows should hash-partition by shard:\n$sharded")
   }
 
   test("dedup connectedComponents: rounds are equi-join + partial agg, no cartesian") {

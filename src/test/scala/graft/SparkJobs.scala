@@ -1,12 +1,13 @@
 package graft
 
+import org.apache.spark.graftbridge.TestBridge
 import org.apache.spark.scheduler.{SparkListener, SparkListenerBlockUpdated, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.storage.BlockId
 import scala.jdk.CollectionConverters._
 
-/** The Spark jobs a body starts and the RDD blocks it leaves stored, for
-  * the job-budget and leak tests. */
+/** The Spark jobs a body starts and the RDD blocks it stores or leaves
+  * stored, for the job-budget and leak tests. */
 object SparkJobs {
 
   /** Runs `body` with `listener` installed and returns once the listener
@@ -46,13 +47,12 @@ object SparkJobs {
   /** The number of Spark jobs `body` runs. */
   def of(spark: SparkSession)(body: => Unit): Int = startsOf(spark)(body).size
 
-  /** The RDD blocks that `body` stored and that are still stored when it
-    * returns, from the block managers' own reports: a block stored with a
-    * valid level counts until an update reports it gone. A persist or a
-    * checkpoint that is never freed leaves its blocks here, whether or
-    * not its RDD is still reachable (`SparkContext.getPersistentRDDs`
-    * holds its RDDs weakly, so it cannot tell). */
-  def rddBlocksLeftBy(spark: SparkSession)(body: => Unit): Set[BlockId] = {
+  /** The RDD blocks that `body` stored, from the block managers' own
+    * reports: a block stored with a valid level counts until an update
+    * reports it gone. `unpersist` and `Checkpoint.free` post no such
+    * update, so a block that `body` stored and then freed still counts:
+    * this measures what `body` stored, not what it left. */
+  def rddBlocksStoredBy(spark: SparkSession)(body: => Unit): Set[BlockId] = {
     val stored = java.util.concurrent.ConcurrentHashMap.newKeySet[BlockId]()
     observed(spark, new SparkListener {
       override def onBlockUpdated(e: SparkListenerBlockUpdated): Unit = {
@@ -63,5 +63,26 @@ object SparkJobs {
       }
     })(body)
     stored.asScala.toSet
+  }
+
+  /** The RDD blocks that `body` left stored, from the storage status:
+    * the blocks held after `body` that were not held before it. A free
+    * that does not block (`Checkpoint.free`) removes its blocks
+    * asynchronously, so the status is polled until the new blocks are
+    * gone or `timeoutMs` passes. A persist or a checkpoint that is never
+    * freed leaves its blocks here, whether or not its RDD is still
+    * reachable (`SparkContext.getPersistentRDDs` holds its RDDs weakly,
+    * so it cannot tell). */
+  def rddBlocksLeftBy(spark: SparkSession, timeoutMs: Long = 10000L)(body: => Unit): Set[BlockId] = {
+    def stored() = TestBridge.storedRddBlocks(spark.sparkContext)
+    val before = stored()
+    body
+    val deadline = System.currentTimeMillis() + timeoutMs
+    var left = stored() -- before
+    while (left.nonEmpty && System.currentTimeMillis() < deadline) {
+      Thread.sleep(50)
+      left = stored() -- before
+    }
+    left
   }
 }
